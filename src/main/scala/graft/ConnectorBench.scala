@@ -8,7 +8,7 @@ import graft.udf.SeqId
 /** Ingest-ceiling measurement for the DSv2 HTTP feed source against the
   * embedded TestFeedServer (loopback — so the numbers bound the CLIENT
   * stack: pagination loop, JSON parse, row materialization, and the
-  * planner's drain walk; a WAN deployment adds network latency that the
+  * planner's head probe; a WAN deployment adds network latency that the
   * `backfillPartitions` fan-out hides even better).
   *
   * Not part of the driver's Bench contract — run ad hoc:
@@ -79,23 +79,24 @@ object ConnectorBench {
       } finally server.stop()
     }
 
-    // 1b) backfill PLAN cost on the 1000-page fixture: requests + seconds
-    // spent before any executor starts. Seq-prefixed ids plan in
-    // O(log feed) via the synthesized-cursor head probe; the old
-    // histogram walk paid one request per page (the Amdahl stage
+    // 1b) backfill PLAN cost on the 1000-page fixture at N=8 and N=1:
+    // requests + seconds spent before any executor starts. Seq-prefixed
+    // ids find the head in O(log feed) via the synthesized-cursor head
+    // probe at every partition count; the old histogram walk (N=8) and
+    // serial drain (N=1) paid one request per page (the Amdahl stage
     // BASELINE.md bounded at <=1.52x speedup for N=8).
-    locally {
+    for (parts <- Seq(8, 1)) {
       val server = new TestFeedServer(events, pageSize = 100) // 1000 pages at 100k
       try {
         val df = spark.read.format("http-feed").option("url", server.url)
-          .option("backfillPartitions", "8").load()
+          .option("backfillPartitions", parts.toString).load()
         val before = server.requestCount
         val (nParts, sec) = timed { df.rdd.getNumPartitions } // plan only
         val planRequests = server.requestCount - before
-        results("plan_requests_1000p_n8") = planRequests.toDouble
-        results("plan_seconds_1000p_n8") = sec
-        println(f"backfill plan (1000 pages, N=8): $planRequests%d requests, " +
-          f"$sec%6.3f s, $nParts%d partitions (histogram walk would be ~1000 requests)")
+        results(s"plan_requests_1000p_n$parts") = planRequests.toDouble
+        results(s"plan_seconds_1000p_n$parts") = sec
+        println(f"backfill plan (1000 pages, N=$parts): $planRequests%d requests, " +
+          f"$sec%6.3f s, $nParts%d partitions (a serial walk would be ~1001 requests)")
       } finally server.stop()
     }
 

@@ -192,8 +192,9 @@ object HttpFeedClient {
       if (code >= 400)
         throw new IllegalStateException(
           s"HTTP $code from $url — non-retryable client error")
-      val body = new String(conn.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
-      val root = mapper.readTree(body)
+      // parse the bytes directly: Jackson detects the UTF-8 encoding
+      // itself, so no intermediate String copy of the page
+      val root = mapper.readTree(conn.getInputStream.readAllBytes())
       val buf = new ArrayBuffer[JsonNode](root.size())
       root.forEach(n => buf += n)
       Page(buf.toIndexedSeq, Option(conn.getHeaderField("Cache-Control")))
@@ -297,6 +298,15 @@ object HttpFeedClient {
       if w1 == w2 && validateSeqCursor(url, s2, w2, auth)
     } yield (w2, s2)
 
+  /** The density sample a fetched page yields for free: its first and last
+    * sequence and its event count. None for an empty page or ids that do
+    * not parse as sequence-prefixed. */
+  private[graft] def seqSample(page: Page): Option[SeqSample] =
+    for {
+      first <- page.events.headOption.flatMap(e => parseSeqId(e.get("id").asText()))
+      last <- page.lastId.flatMap(parseSeqId)
+    } yield SeqSample(first._1, last._1, page.events.length)
+
   /** O(log feed) head-sequence probe for sequence-prefixed feeds: gallop
     * then binary-search over synthesized [[seqCursor]] probes, using the
     * predicate "the page after cursor(s) is non-empty ⟺ headSeq ≥ s".
@@ -315,23 +325,36 @@ object HttpFeedClient {
                    auth: Option[String] = None): Long =
     probeHeadSeqSampled(url, knownSeq, width, auth)._1
 
-  /** [[probeHeadSeq]] plus the density samples its probe pages yield for
-    * free: every non-empty probe page covers a known sequence span with a
-    * known event count. The gallop's geometric stride samples the whole
-    * backlog and the bisection concentrates near the head, so the samples
-    * double as a zero-extra-request gap detector for the balance
-    * refinement ([[HttpFeedBackfill.densityQuantileBounds]]). */
+  /** [[probeHeadSeq]] with a coarser stop, plus what its probe pages yield
+    * for free. With `span` = s > 1 the gallop's first stride is s (the
+    * sequence span of a page the caller already holds, so the search
+    * starts about one page ahead instead of one sequence ahead) and the
+    * bisection stops once the bracket is within s — the caller pages the
+    * last stretch to the real head id anyway. Returns (lo, loId,
+    * samples): `lo` ≤ headSeq < lo + s (exactly the head when s = 1),
+    * `loId` the last real id of the last non-empty probe page (None if
+    * every probe was empty), and one density sample per non-empty probe
+    * page. The gallop's geometric stride samples the whole backlog and the
+    * bisection concentrates near the head, so the samples double as a
+    * zero-extra-request gap detector for the balance refinement
+    * ([[HttpFeedBackfill.densityQuantileBounds]]). */
   private[graft] def probeHeadSeqSampled(url: String, knownSeq: Long, width: Int,
-      auth: Option[String] = None): (Long, IndexedSeq[SeqSample]) = {
+      auth: Option[String] = None,
+      span: Long = 1L): (Long, Option[String], IndexedSeq[SeqSample]) = {
     val samples = new ArrayBuffer[SeqSample]()
-    def nonEmptyAfter(seq: Long): Boolean = {
+    var loId: Option[String] = None
+    // Some(l) iff P(seq); l is the last sequence on the page after
+    // cursor(seq), which P(l) also holds for — the search jumps there
+    def probe(seq: Long): Option[Long] = {
       val page = fetchPage(url, seqCursor(seq, width), 0, auth,
         cache = Some(sharedCache))
-      for {
-        first <- page.events.headOption.flatMap(e => parseSeqId(e.get("id").asText()))
-        last <- page.lastId.flatMap(parseSeqId)
-      } samples += SeqSample(first._1, last._1, page.events.length)
-      !page.isEmpty
+      val sample = seqSample(page)
+      sample.foreach(samples += _)
+      if (page.isEmpty) None
+      else {
+        loId = page.lastId
+        Some(sample.fold(seq)(s => math.max(seq, s.seqLast)))
+      }
     }
     // Probes are capped at the width's capacity, 10^width − 1: a wider
     // candidate does not zero-pad to `width`, so its cursor breaks the
@@ -343,54 +366,119 @@ object HttpFeedClient {
     var maxSeq = 1L
     for (_ <- 0 until width) maxSeq *= 10 // width ≤ 18 ⇒ 10^width fits a Long
     maxSeq -= 1
+    val stop = math.max(1L, span)
     var lo = knownSeq // invariant: P(lo) true (headSeq >= lo)
-    var step = 1L
+    var step = stop
     var hi = -1L
     while (hi < 0 && lo < maxSeq) {
       val cand = if (step > maxSeq - lo) maxSeq else lo + step
-      if (nonEmptyAfter(cand)) { lo = cand; step *= 2 }
-      else hi = cand
+      probe(cand) match {
+        case Some(l) => lo = l; step *= 2
+        case None => hi = cand
+      }
     }
-    while (hi > 0 && hi - lo > 1) {
+    while (hi > 0 && hi - lo > stop) {
       val mid = lo + (hi - lo) / 2
-      if (nonEmptyAfter(mid)) lo = mid else hi = mid
+      probe(mid) match {
+        case Some(l) => lo = l
+        case None => hi = mid
+      }
     }
-    (lo, samples.toIndexedSeq)
+    (lo, loId, samples.toIndexedSeq)
   }
 
-  /** Seq-aware drain-to-head — the catch-up path of `latestOffset`. The
-    * steady-state cost is IDENTICAL to [[drainHead]] (one long-poll page
-    * + one empty-page confirm); only when a SECOND page is non-empty —
-    * a real backlog, e.g. a consumer resuming after downtime — does it
-    * switch to the O(log backlog) synthesized-cursor probe instead of
-    * serially paging the whole backlog through the driver (and the one
-    * partition would then re-page the same range to read it: the old
-    * cost was 2× the backlog). Scheme detection + validation and the
-    * probe all ride on [[detectSeqScheme]] / [[probeHeadSeqSampled]];
-    * opaque ids or a seq-parsing server keep the plain serial walk.
-    * Returns a REAL event id (the head page's last id), never a
-    * synthesized cursor, so checkpointed offsets stay ordinary ids. */
-  def probeHead(url: String, fromId: String, timeoutMs: Long,
-                auth: Option[String] = None): String = {
-    val p1 = fetchPage(url, fromId, timeoutMs, auth)
-    if (p1.isEmpty) return fromId
-    val c1 = p1.lastId.get
-    val p2 = fetchPage(url, c1, 0, auth)
-    if (p2.isEmpty) return c1 // at head after one page: same 2 requests as drainHead
-    val c2 = p2.lastId.get
-    detectSeqScheme(url, p2, auth) match {
-      case Some((w, lastSeq)) =>
-        val headSeq = probeHeadSeq(url, lastSeq, w, auth)
-        // resolve the real head id: ≤ one page of events share the head
-        // sequence, then the empty-page confirm. If a concurrent
-        // compaction emptied everything at/after the head cursor, fall
-        // back to the real id we actually saw — a lower bound of head is
-        // always a safe `latestOffset` (the next batch picks up the rest).
-        val h = drainHead(url, seqCursor(headSeq, w), 0, auth = auth)
-        if (h == seqCursor(headSeq, w)) c2 else h
-      case None => drainHead(url, c2, 0, auth = auth)
+  /** The validated sequence scheme of a bounded range, as found by
+    * [[resolveHead]]: pad width, the range's first and head sequence, and
+    * the density samples its pages yielded for free. */
+  private[graft] final case class SeqHead(width: Int, firstSeq: Long, headSeq: Long,
+                                          samples: IndexedSeq[SeqSample])
+
+  /** The end of a bounded range (fromId, id], as found by [[resolveHead]].
+    * `id` is a real event id, or `fromId` itself when the range is empty.
+    * `seq` is set when the seq probe found the head; otherwise the serial
+    * walk did, and `pages` is the range's page histogram (lastId,
+    * eventCount) — the input of [[HttpFeedBackfill.equiDepthPartitions]]. */
+  private[graft] final case class Head(id: String, seq: Option[SeqHead],
+                                       pages: IndexedSeq[(String, Int)])
+
+  /** Pages read serially before [[resolveHead]] switches to the seq
+    * probe: a range of up to this many pages ends at the empty page and
+    * costs exactly what [[drainHead]] costs, so steady-state micro-batches
+    * and small replays pay nothing for the probe. */
+  private val SerialPages = 2
+
+  /** Head resolution for every unlimited bounded read — the batch plan at
+    * any `backfillPartitions`, the AvailableNow pin and `latestOffset`:
+    *
+    *  1. page serially from `fromId` (only the first request long-polls
+    *     `timeoutMs`, so an idle feed blocks at most that long); a range
+    *     of ≤ [[SerialPages]] pages ends here;
+    *  2. on a longer range whose ids carry the validated sequence prefix
+    *     ([[detectSeqScheme]]: scheme detect plus one positional-cursor
+    *     probe), gallop+bisect to the head in O(log feed) requests
+    *     ([[probeHeadSeqSampled]], seeded with the sequence span of the
+    *     page in hand), then page from the last real id the probe saw to
+    *     the real head id. The driver never walks the range, so a single
+    *     read partition fetches each page once;
+    *  3. opaque/UUIDv6 ids or a seq-parsing server: keep walking serially,
+    *     recording the page histogram the fan-out splits on.
+    *
+    * Returns a REAL event id, never a synthesized cursor, so checkpointed
+    * offsets stay ordinary ids. The serial pages go through
+    * [[sharedCache]]: a reader starting at `fromId` gets the cacheable
+    * ones back without a round trip. */
+  private[graft] def resolveHead(url: String, fromId: String, timeoutMs: Long,
+                                 auth: Option[String] = None): Head = {
+    val pages = new ArrayBuffer[(String, Int)]()
+    val samples = new ArrayBuffer[SeqSample]()
+    def next(cursor: String, timeout: Long): Page =
+      fetchPage(url, cursor, timeout, auth, cache = Some(sharedCache))
+    def record(p: Page): Unit = {
+      pages += p.lastId.get -> p.events.length
+      seqSample(p).foreach(samples += _)
+    }
+    var page = next(fromId, timeoutMs)
+    val firstId = page.events.headOption.map(_.get("id").asText())
+    while (!page.isEmpty && pages.length < SerialPages) {
+      record(page)
+      page = next(pages.last._1, 0)
+    }
+    if (page.isEmpty)
+      return Head(pages.lastOption.fold(fromId)(_._1), None, pages.toIndexedSeq)
+    record(page)
+    val scheme = for {
+      (firstSeq, w) <- firstId.flatMap(parseSeqId)
+      (pw, lastSeq) <- detectSeqScheme(url, page, auth)
+      if pw == w
+    } yield (w, firstSeq, lastSeq)
+    scheme match {
+      case Some((w, firstSeq, lastSeq)) =>
+        val span = seqSample(page).fold(1L)(s => s.seqLast - s.seqFirst + 1)
+        val (lo, loId, probeSamples) =
+          probeHeadSeqSampled(url, lastSeq, w, auth, span)
+        // lo ≤ head < lo + span: page from the last real id seen to the
+        // real head id (usually just the empty-page confirm). A compaction
+        // racing the probe can only make this a lower bound of the head,
+        // which is still a consistent pin.
+        val headId = drainHead(url, loId.getOrElse(pages.last._1), 0, auth = auth)
+        val headSeq = parseSeqId(headId).collect { case (s, `w`) => s }.getOrElse(lo)
+        Head(headId, Some(SeqHead(w, firstSeq, headSeq, (samples ++ probeSamples).toIndexedSeq)),
+          IndexedSeq.empty)
+      case None =>
+        val all = pages ++ drainPageHistogram(url, pages.last._1, 0, auth = auth)
+        Head(all.last._1, None, all.toIndexedSeq)
     }
   }
+
+  /** The head id after `fromId` for a micro-batch's `latestOffset`
+    * ([[resolveHead]]): steady state costs what [[drainHead]] costs (one
+    * long-poll page + one empty-page confirm), and a consumer resuming
+    * after downtime finds the head of its backlog in O(log backlog)
+    * requests on a seq-prefixed feed instead of serially paging the whole
+    * backlog through the driver. */
+  def probeHead(url: String, fromId: String, timeoutMs: Long,
+                auth: Option[String] = None): String =
+    resolveHead(url, fromId, timeoutMs, auth).id
 
   /** Planning walk for a parallel backfill: the same drain-to-head loop as
     * [[drainHead]], but recording each page's (lastId, eventCount) — the
@@ -400,8 +488,8 @@ object HttpFeedClient {
     * the head ALREADY requires paging the whole range (the protocol has no
     * head endpoint, `README.md:79-82`), so the split points ride along on
     * the walk the planner was paying for anyway. Used as the FALLBACK for
-    * opaque/UUIDv6 ids; sequence-prefixed feeds plan in O(log feed) via
-    * [[probeHeadSeq]] instead. */
+    * opaque/UUIDv6 ids; sequence-prefixed feeds find the head in
+    * O(log feed) requests via [[resolveHead]] instead. */
   def drainPageHistogram(url: String, fromId: String, timeoutMs: Long,
                          maxPages: Int = 100000,
                          auth: Option[String] = None): IndexedSeq[(String, Int)] = {

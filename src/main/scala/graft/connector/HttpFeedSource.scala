@@ -35,9 +35,11 @@ import graft.udf.CloudEventsParse
   *    parallelism comes after ingestion by repartitioning on `subject`
   *    (SURVEY.md §3.2).
   *
-  * Batch mode (`spark.read`) is bounded replay: drain to head at plan time,
-  * read (start, head] as one partition — or, with `backfillPartitions=N`,
-  * as N equi-depth cursor-range partitions (the
+  * Batch mode (`spark.read`) is bounded replay: find the head at plan time
+  * ([[HttpFeedClient.resolveHead]] — O(log feed) seq probes on
+  * sequence-prefixed ids, a serial walk only for opaque ids or a pushed
+  * LIMIT's page budget), read (start, head] as one partition — or, with
+  * `backfillPartitions=N`, as N cursor-range partitions (the
   * `feed_backfill_partition_plan` split wired into the source; ranges are
   * replayable by the `lastEventId` contract, `README.md:150-159`), so the
   * initial full-history replay scales out instead of serializing through
@@ -123,10 +125,10 @@ class HttpFeedScan(opts: HttpFeedOptions, limit: Option[Int] = None) extends Sca
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new HttpFeedMicroBatchStream(opts)
   // ONE Batch per scan: Spark calls toBatch more than once on the same
-  // Scan (observed twice per action), and each Batch plans with a full
-  // drain-to-head walk over the wire — a fresh instance per call would
-  // repeat that walk AND could pin a different head if the feed grew
-  // between calls. The memoized Batch memoizes its partition plan too.
+  // Scan (observed twice per action), and each Batch resolves the head
+  // over the wire — a fresh instance per call would repeat those requests
+  // AND could pin a different head if the feed grew between calls. The
+  // memoized Batch memoizes its partition plan too.
   private lazy val batch: Batch = new HttpFeedBatch(opts, limit)
   override def toBatch: Batch = batch
 }
@@ -146,11 +148,9 @@ object HttpFeedOffset {
 class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  @volatile private var availableNowEnd: Option[HttpFeedOffset] = None
-  @volatile private var availableNowPages: IndexedSeq[(String, Int)] = IndexedSeq.empty
-  /** (pad width, first sequence after opts.startId) when the AvailableNow
-    * pin used the validated seq scheme — the fan-out's split inputs. */
-  @volatile private var availableNowSeq: Option[(Int, Long)] = None
+  /** The Trigger.AvailableNow pin: its end id and the fan-out's split
+    * inputs (the validated seq scheme or the page histogram). */
+  @volatile private var availableNow: Option[HttpFeedClient.Head] = None
 
   override def initialOffset(): Offset = HttpFeedOffset(opts.startId)
 
@@ -159,59 +159,28 @@ class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
   /** Trigger.AvailableNow: pin the head once; batches never pass it. An
     * AvailableNow run over a year of history IS the backfill job, just
     * driven through the streaming engine for its checkpoint/restart
-    * semantics — so the pin uses the same two-strategy plan as the
-    * bounded batch read:
-    *
-    *  1. **Seq-prefixed ids (validated)** — O(log feed) requests: one
-    *     scheme-detect page, one positional-cursor validation probe
-    *     ([[HttpFeedClient.validateSeqCursor]]), the gallop+bisect head
-    *     probe, and a ≤2-request real-head-id resolve. No histogram walk:
-    *     the fan-out later splits any (s, e] by sequence arithmetic alone.
-    *  2. **Opaque/UUIDv6 ids — histogram walk.** The walk records the
-    *     page histogram (free — same requests either way) so a
-    *     `backfillPartitions=N` replay can fan the pinned backlog out the
-    *     same way the bounded batch read does. */
-  override def prepareForTriggerAvailableNow(): Unit = {
-    availableNowSeq = None
-    availableNowPages = IndexedSeq.empty
-    // the first request long-polls like the old walk did: an idle feed
-    // waits up to timeoutMs for data before pinning an empty range
-    val first = HttpFeedClient.fetchPage(opts.url, opts.startId,
-      opts.timeoutMs, opts.auth, cache = Some(HttpFeedClient.sharedCache))
-    if (first.isEmpty) {
-      availableNowEnd = Some(HttpFeedOffset(opts.startId))
-      return
-    }
-    HttpFeedClient.detectSeqScheme(opts.url, first, opts.auth) match {
-      case Some((w, lastSeq)) =>
-        val headSeq = HttpFeedClient.probeHeadSeq(opts.url, lastSeq, w, opts.auth)
-        val headId = HttpFeedClient.drainHead(opts.url,
-          HttpFeedClient.seqCursor(headSeq, w), 0, auth = opts.auth)
-        val firstSeq =
-          HttpFeedClient.parseSeqId(first.events.head.get("id").asText()).get._1
-        availableNowSeq = Some((w, firstSeq))
-        availableNowEnd = Some(HttpFeedOffset(headId))
-      case None =>
-        val pages = HttpFeedClient.drainPageHistogram(opts.url, opts.startId,
-          0, auth = opts.auth)
-        availableNowPages = pages
-        availableNowEnd = Some(HttpFeedOffset(
-          pages.lastOption.map(_._1).getOrElse(opts.startId)))
-    }
-  }
+    * semantics — so the pin is the bounded batch read's head resolution
+    * ([[HttpFeedClient.resolveHead]]; its first request long-polls, so an
+    * idle feed waits up to timeoutMs for data before pinning an empty
+    * range). On validated seq-prefixed ids it costs O(log feed) requests
+    * and the fan-out later splits any (s, e] by sequence arithmetic alone;
+    * otherwise the serial walk's page histogram (free — same requests
+    * either way) lets a `backfillPartitions=N` replay fan the pinned
+    * backlog out the same way the bounded batch read does. */
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(HttpFeedClient.resolveHead(opts.url, opts.startId,
+      opts.timeoutMs, opts.auth))
 
-  /** Steady state: one long-poll page + one empty-page confirm — identical
-    * to the pre-round-16 drain. Catch-up after downtime (a backlog past
-    * [[HttpFeedClient.probeHead]]'s serial-page budget) switches to the
-    * O(log backlog) synthesized-cursor probe on validated seq feeds
-    * instead of serially paging the whole backlog through the driver
-    * (which the single read partition would then re-page a second time). */
+  /** Steady state: one long-poll page + one empty-page confirm. Catch-up
+    * after downtime (a backlog past [[HttpFeedClient.resolveHead]]'s
+    * serial-page budget) switches to the O(log backlog) synthesized-cursor
+    * probe on validated seq feeds instead of serially paging the whole
+    * backlog through the driver. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-    availableNowEnd.getOrElse {
+    HttpFeedOffset(availableNow.fold {
       val from = start.asInstanceOf[HttpFeedOffset].lastEventId
-      HttpFeedOffset(HttpFeedClient.probeHead(opts.url, from, opts.timeoutMs,
-        auth = opts.auth))
-    }
+      HttpFeedClient.probeHead(opts.url, from, opts.timeoutMs, auth = opts.auth)
+    }(_.id))
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
@@ -242,9 +211,10 @@ class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
       // strategy: the page slice's last boundary must be `e` (batch
       // bounds are page-aligned by construction, so the slice is exact).
       val seqFan: Option[Array[InputPartition]] =
-        if (opts.backfillPartitions > 1 && availableNowEnd.exists(_.lastEventId == e))
-          availableNowSeq.flatMap { case (w, firstSeq) =>
-            val lo = if (s.isEmpty) Some(firstSeq - 1)
+        if (opts.backfillPartitions > 1)
+          availableNow.filter(_.id == e).flatMap(_.seq).flatMap { pin =>
+            val w = pin.width
+            val lo = if (s.isEmpty) Some(pin.firstSeq - 1)
                      else HttpFeedBackfill.seqBoundOf(s, w)
             val hi = HttpFeedBackfill.seqBoundOf(e, w)
             for { l <- lo; h <- hi; if h > l } yield
@@ -255,7 +225,8 @@ class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
       seqFan.getOrElse {
         val slice =
           if (opts.backfillPartitions > 1)
-            availableNowPages.filter(p => p._1 > s && p._1 <= e)
+            availableNow.fold(IndexedSeq.empty[(String, Int)])(_.pages)
+              .filter(p => p._1 > s && p._1 <= e)
           else IndexedSeq.empty
         if (slice.nonEmpty && slice.last._1 == e)
           HttpFeedBackfill.equiDepthPartitions(opts, s, slice)
@@ -275,96 +246,58 @@ class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
 
 class HttpFeedBatch(opts: HttpFeedOptions, limit: Option[Int] = None) extends Batch {
   // Spark may call planInputPartitions more than once on the same Batch
-  // (measured: a count() over the source invoked it twice — a second full
-  // drain walk over the wire, and a second head probe that could even pin a
-  // DIFFERENT head if the feed grew between calls). Plan once, memoize.
+  // (measured: a count() over the source invoked it twice — a second head
+  // resolution over the wire that could even pin a DIFFERENT head if the
+  // feed grew between calls). Plan once, memoize.
   private lazy val planned: Array[InputPartition] = plan()
 
   override def planInputPartitions(): Array[InputPartition] = planned
 
-  private def plan(): Array[InputPartition] = {
-    // A pushed LIMIT keeps the single-partition path: the page budget caps
-    // planning-time round-trips AND a global row limit over a fan-out would
-    // admit rows from the wrong end of the order. Fan-out is for full
-    // backfills, where there is no limit by definition.
-    if (opts.backfillPartitions > 1 && limit.isEmpty)
-      planBackfillPartitions()
-    else {
-      // with a pushed limit the head probe stops after `limit` events — the
-      // page budget caps planning-time round-trips too
-      val head = HttpFeedClient.drainHead(opts.url, opts.startId, 0,
-        maxEvents = limit.getOrElse(Int.MaxValue), auth = opts.auth)
-      if (head == opts.startId) Array.empty
-      else Array(HttpFeedInputPartition(opts.url, opts.startId, head, limit, opts.auth))
-    }
-  }
-
-  /** Parallel-backfill plan: the `feed_backfill_partition_plan` operator's
-    * split wired into the source, with two strategies picked by the feed's
-    * id scheme (the spec blesses both, `README.md:156-159`):
+  /** Bounded-replay plan. A pushed LIMIT keeps the single-partition path
+    * and its page budget: the head walk stops after `limit` events, which
+    * caps planning-time round-trips, and a global row limit over a
+    * fan-out would admit rows from the wrong end of the order. Every other
+    * read finds the head with [[HttpFeedClient.resolveHead]] and, with
+    * `backfillPartitions=N`, splits (startId, head] by the strategy that
+    * found it (the spec blesses both id schemes, `README.md:156-159`):
     *
     *  1. **Sequence-prefixed ids — O(log feed) plan.** Seq prefixes are
     *     positionally interpretable (`README.md:159`) and the server must
     *     honor cursors for ABSENT ids (`README.md:153-154`), so the head
     *     is found by binary-searching synthesized `lpad(seq)::` cursors
-    *     ([[HttpFeedClient.probeHeadSeq]]) and (start, head] splits by
-    *     sequence arithmetic — ZERO histogram walk. This kills the one
-    *     serial O(feed) driver stage the connector had: planning a
-    *     1000-executor backfill now costs ~2·log₂(feed) requests instead
-    *     of paging the whole feed through the driver before any executor
-    *     starts (BASELINE.md records the old Amdahl ceiling).
-    *  2. **Opaque/UUIDv6 ids — histogram fallback.** Positions are not
-    *     synthesizable, so the planning walk records the page histogram
-    *     (free — finding the head already pages the whole range) and
-    *     [[HttpFeedBackfill.equiDepthPartitions]] emits page-aligned
-    *     ranges. */
-  private def planBackfillPartitions(): Array[InputPartition] =
-    planSeqSplit().getOrElse {
-      val pages = HttpFeedClient.drainPageHistogram(opts.url, opts.startId, 0,
-        auth = opts.auth)
-      if (pages.isEmpty) Array.empty
-      else HttpFeedBackfill.equiDepthPartitions(opts, opts.startId, pages)
-    }
-
-  /** Sequence-arithmetic split, or None when the feed's ids are not
-    * sequence-prefixed OR the server fails the positional-cursor
-    * validation probe ([[HttpFeedClient.validateSeqCursor]] — a server
-    * that PARSES the sequence out of `lastEventId` would skip the
-    * boundary sequence at every synthesized partition bound; it gets the
-    * real-id histogram plan instead, which is correct on both server
-    * types). Scheme detection samples the first page (one request — both
-    * its first and last id must parse with the same pad width); a feed is
-    * a single totally-ordered id stream (`README.md:9`, :150-151), so one
-    * scheme governs the whole feed — a mid-stream scheme switch would
-    * already have broken the server's own ordering contract.
-    *
-    * Sequences may have gaps (a DB sequence is monotonic, not dense), so
-    * equi-WIDTH seq ranges approximate equi-DEPTH row buckets; each range
-    * is exact-by-construction in COVERAGE (the union telescopes to
-    * (startId, headId]) and only approximate in balance. When the probe
-    * pages themselves disagree about live density (heavily-compacted
-    * feeds), [[HttpFeedBackfill.densityQuantileBounds]] refines the
-    * boundaries from a piecewise density model at O(N) extra requests —
-    * still no O(feed) walk. */
-  private def planSeqSplit(): Option[Array[InputPartition]] = {
-    val first = HttpFeedClient.fetchPage(opts.url, opts.startId, 0, opts.auth,
-      cache = Some(HttpFeedClient.sharedCache))
-    if (first.isEmpty) return Some(Array.empty)
-    HttpFeedClient.detectSeqScheme(opts.url, first, opts.auth).map { case (w, lastSeq) =>
-      val (headSeq, probeSamples) =
-        HttpFeedClient.probeHeadSeqSampled(opts.url, lastSeq, w, opts.auth)
-      // resolve the real head id (≤ one page shares the head sequence +
-      // the empty-page confirm): partitions end at real ids when possible
-      val headId = HttpFeedClient.drainHead(opts.url,
-        HttpFeedClient.seqCursor(headSeq, w), 0, auth = opts.auth)
-      val firstSeq =
-        HttpFeedClient.parseSeqId(first.events.head.get("id").asText()).get._1
-      val loSeq = firstSeq - 1
-      val samples = HttpFeedClient.SeqSample(firstSeq, lastSeq,
-        first.events.length) +: probeSamples
-      val bounds = HttpFeedBackfill.seqSplitBounds(opts, loSeq, headSeq, w, samples)
-      HttpFeedBackfill.seqRangePartitions(opts, opts.startId, headId, bounds, w)
-    }
+    *     and (start, head] splits by sequence arithmetic
+    *     ([[HttpFeedBackfill.seqSplitBounds]]) — no walk on the driver,
+    *     whatever N is, so a single-partition read fetches each page once.
+    *  2. **Opaque/UUIDv6 ids, a seq-parsing server, or a range of at most
+    *     two pages — histogram split.** The serial walk that found the
+    *     head recorded the page histogram (free — same requests either
+    *     way) and [[HttpFeedBackfill.equiDepthPartitions]] emits
+    *     page-aligned ranges. */
+  private def plan(): Array[InputPartition] = limit match {
+    case Some(l) =>
+      val head = HttpFeedClient.drainHead(opts.url, opts.startId, 0,
+        maxEvents = l, auth = opts.auth)
+      if (head == opts.startId) Array.empty
+      else Array(HttpFeedInputPartition(opts.url, opts.startId, head, limit, opts.auth))
+    case None =>
+      val head = HttpFeedClient.resolveHead(opts.url, opts.startId, 0, opts.auth)
+      if (head.id == opts.startId) Array.empty
+      else if (opts.backfillPartitions <= 1)
+        Array(HttpFeedInputPartition(opts.url, opts.startId, head.id, auth = opts.auth))
+      else head.seq match {
+        case Some(s) =>
+          // Sequences may have gaps (a DB sequence is monotonic, not
+          // dense), so equi-WIDTH seq ranges approximate equi-DEPTH row
+          // buckets; each range is exact in COVERAGE (the union telescopes
+          // to (startId, headId]) and only approximate in balance, which
+          // the density refinement repairs on heavily-compacted feeds at
+          // O(N) extra requests — still no O(feed) walk.
+          val bounds = HttpFeedBackfill.seqSplitBounds(opts, s.firstSeq - 1,
+            s.headSeq, s.width, s.samples)
+          HttpFeedBackfill.seqRangePartitions(opts, opts.startId, head.id, bounds, s.width)
+        case None =>
+          HttpFeedBackfill.equiDepthPartitions(opts, opts.startId, head.pages)
+      }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new HttpFeedReaderFactory
@@ -458,14 +391,8 @@ private[graft] object HttpFeedBackfill {
         val page = HttpFeedClient.fetchPage(opts.url,
           HttpFeedClient.seqCursor(g0 + 1, width), 0, opts.auth,
           cache = Some(HttpFeedClient.sharedCache))
-        val sample = for {
-          firstEvent <- page.events.headOption
-          (f, _) <- HttpFeedClient.parseSeqId(firstEvent.get("id").asText())
-          lastId <- page.lastId
-          (l, _) <- HttpFeedClient.parseSeqId(lastId)
-        } yield (f, l, page.events.length)
-        sample match {
-          case Some((f, l, c)) if f <= g1 =>
+        HttpFeedClient.seqSample(page) match {
+          case Some(HttpFeedClient.SeqSample(f, l, c)) if f <= g1 =>
             val d = c.toDouble / math.max(1L, l - f + 1)
             (f, d, d * (g1 - f + 1))
           case _ => (g1, 0.0, 0.0) // segment is entirely a gap

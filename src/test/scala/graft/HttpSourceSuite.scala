@@ -23,6 +23,23 @@ class HttpSourceSuite extends AnyFunSuite {
     (id, json)
   }
 
+  /** 200 envelopes with 18-digit sequence prefixes from a 1e17 base, 4e15
+    * apart: the span ≈ 8e17, so span·(n−1) overflows Long at n=16. */
+  private lazy val bigSeqEvents: IndexedSeq[(String, String)] = {
+    def bigEnvelope(seq: Long): (String, String) = {
+      val id = f"$seq%018d::u${seq % 1000}%04d"
+      (id, s"""{"specversion":"1.0","id":"$id","type":"t.big","source":"srv",""" +
+        s""""time_us":1700000000000000,"subject":"s${seq % 3}","method":"PUT",""" +
+        s""""datacontenttype":"application/json","data":"{\\"v\\":1}"}""")
+    }
+    (0L until 200L).map(i => bigEnvelope(100000000000000000L + i * 4000000000000000L))
+  }
+
+  /** Every 20th sequence of 1..8000 (90% of the low range compacted away)
+    * plus all of 8001..10000. */
+  private lazy val gappySeqEvents: IndexedSeq[(String, String)] =
+    ((20L to 8000L by 20L) ++ (8001L to 10000L)).map(i => envelopeJson(i, s"s${i % 5}"))
+
   test("streaming replay with AvailableNow drains the feed in order") {
     val events = (1L to 250L).map(i => envelopeJson(i, s"s${i % 7}"))
     val server = new TestFeedServer(events, pageSize = 100)
@@ -179,6 +196,11 @@ class HttpSourceSuite extends AnyFunSuite {
       // the histogram walk this replaced needed one request PER PAGE (300+)
       assert(planRequests <= 40,
         s"plan cost $planRequests requests — the O(feed) serial walk is back")
+      // 3 serial pages + 1 validation probe + 9 gallop + 8 bisect probes +
+      // 1 empty-page head confirm = 22; the exact-head probe from a stride
+      // of 1 costs 26
+      assert(planRequests <= 24,
+        s"plan cost $planRequests requests — the span-seeded head probe regressed")
       val single = spark.read.format("http-feed").option("url", server.url).load()
       def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.withColumn("ext_c", map_entries(col("extensions")).cast("string"))
@@ -208,6 +230,10 @@ class HttpSourceSuite extends AnyFunSuite {
       assert(fanned.rdd.getNumPartitions === 5)
       val ids = fanned.collect().map(_.getAs[String]("id")).sorted.toSeq
       assert(ids === events.map(_._1))
+      // the single-partition read finds the head by the same serial walk
+      val single = spark.read.format("http-feed").option("url", server.url).load()
+      assert(single.rdd.getNumPartitions === 1)
+      assert(single.collect().map(_.getAs[String]("id")).toSeq === events.map(_._1))
     } finally server.stop()
   }
 
@@ -958,15 +984,7 @@ class HttpSourceSuite extends AnyFunSuite {
   }
 
   test("18-digit sequence bases backfill end-to-end without Long overflow in the split") {
-    def bigEnvelope(seq: Long): (String, String) = {
-      val id = f"$seq%018d::u${seq % 1000}%04d"
-      (id, s"""{"specversion":"1.0","id":"$id","type":"t.big","source":"srv",""" +
-        s""""time_us":1700000000000000,"subject":"s${seq % 3}","method":"PUT",""" +
-        s""""datacontenttype":"application/json","data":"{\\"v\\":1}"}""")
-    }
-    val base = 100000000000000000L   // 1e17
-    val stride = 4000000000000000L   // span ≈ 8e17: span·(n−1) overflows Long at n=16
-    val events = (0L until 200L).map(i => bigEnvelope(base + i * stride))
+    val events = bigSeqEvents
     val server = new TestFeedServer(events, pageSize = 10)
     try {
       val fanned = spark.read.format("http-feed")
@@ -998,6 +1016,7 @@ class HttpSourceSuite extends AnyFunSuite {
       assert(fanned.rdd.getNumPartitions === 4)
       assert(canonRows(fanned) === canonRows(single))
       assert(fanned.count() === 120)
+      assert(single.count() === 120) // N=1 also falls back to the serial walk
     } finally server.stop()
   }
 
@@ -1127,8 +1146,7 @@ class HttpSourceSuite extends AnyFunSuite {
   test("gappy/compacted seq feed: density-probed boundaries balance partition depths within 1.5×") {
     // 90% of the low range compacted away: live seqs are every 20th of
     // 1..8000 (400 events) plus ALL of 8001..10000 (2000 events)
-    val events = ((20L to 8000L by 20L) ++ (8001L to 10000L))
-      .map(i => envelopeJson(i, s"s${i % 5}"))
+    val events = gappySeqEvents
     val server = new TestFeedServer(events, pageSize = 50)
     try {
       val before = server.requestCount
@@ -1146,6 +1164,47 @@ class HttpSourceSuite extends AnyFunSuite {
       val single = spark.read.format("http-feed").option("url", server.url).load()
       assert(canonRows(fanned) === canonRows(single))
     } finally server.stop()
+  }
+
+  test("backfillPartitions=1: the single-partition read finds the head in O(log feed) requests, rows ≡ the N=8 read") {
+    val events = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val server = new TestFeedServer(events, pageSize = 10) // 300 pages
+    try {
+      val single = spark.read.format("http-feed").option("url", server.url).load()
+      val before = server.requestCount
+      assert(single.rdd.getNumPartitions === 1) // forces planInputPartitions
+      val planRequests = server.requestCount - before
+      // a serial walk to the head would cost one request per page (301)
+      assert(planRequests <= 40,
+        s"N=1 plan cost $planRequests requests — the O(feed) serial walk is back")
+      val fanned = spark.read.format("http-feed")
+        .option("url", server.url).option("backfillPartitions", "8").load()
+      assert(canonRows(single) === canonRows(fanned))
+      assert(single.count() === 3000)
+    } finally server.stop()
+  }
+
+  test("span-seeded head probe resolves the real last event id on dense, gappy and 18-digit-base feeds") {
+    val dense = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    for ((events, pageSize) <- Seq((dense, 10), (gappySeqEvents, 50), (bigSeqEvents, 10))) {
+      val server = new TestFeedServer(events, pageSize = pageSize)
+      try {
+        val head = HttpFeedClient.resolveHead(server.url, "", 0)
+        assert(head.id === events.last._1)
+        val (lastSeq, width) = HttpFeedClient.parseSeqId(events.last._1).get
+        assert(head.seq.map(s => (s.width, s.headSeq)) === Some((width, lastSeq)),
+          "the head was not found by the seq probe")
+        // the span only coarsens the stop: the head lies in [lo, lo + span)
+        val (firstSeq, _) = HttpFeedClient.parseSeqId(events.head._1).get
+        val span = HttpFeedClient.parseSeqId(events(pageSize - 1)._1).get._1 - firstSeq + 1
+        val (lo, loId, _) = HttpFeedClient.probeHeadSeqSampled(server.url, firstSeq, width,
+          span = span)
+        assert(lo <= lastSeq && lastSeq < lo + span, s"lo=$lo span=$span head=$lastSeq")
+        assert(loId.exists(id => id <= events.last._1))
+        // and without a span the public probe still lands exactly on the head
+        assert(HttpFeedClient.probeHeadSeq(server.url, firstSeq, width) === lastSeq)
+      } finally server.stop()
+    }
   }
 }
 
