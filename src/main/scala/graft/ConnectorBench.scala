@@ -14,7 +14,8 @@ import graft.udf.SeqId
   * Not part of the driver's Bench contract — run ad hoc:
   *   sbt "runMain graft.ConnectorBench"
   * and record the table in BASELINE.md. Measures:
-  *   1. bounded replay (batch) at 3 page sizes, 1 vs 8 partitions;
+  *   1. bounded replay (batch) at 3 page sizes, 1 vs 8 partitions, with
+  *      the server requests each replay cost (plan and read);
   *   2. Trigger.AvailableNow streaming replay;
   *   3. long-poll delivery latency under the 5000 ms timeout contract
   *      (reference README.md:126): idle-feed wait ≈ data-arrival delay,
@@ -73,6 +74,7 @@ object ConnectorBench {
         }
         require(cnt == nEvents, s"replay returned $cnt of $nEvents rows")
         results(s"batch_p${pageSize}_n$parts") = sec
+        results(s"batch_p${pageSize}_n${parts}_requests") = server.requestCount.toDouble
         println(f"batch pageSize=$pageSize%5d partitions=$parts%d: $sec%7.2f s  " +
           f"${nEvents / sec}%9.0f events/s  ${nEvents.toDouble / pageSize / sec}%7.1f pages/s  " +
           f"(${server.requestCount} requests)")

@@ -33,9 +33,14 @@ object Feeds {
 
   /** Aggregate-feed compaction (`README.md:184-192`): keep only the
     * newest entry per subject, newest = greatest `order`. One shuffle on
-    * the subject key; with [[graft.catalyst.GraftExtensions]] installed
-    * the optimizer rewrites this window into a partial+final `max_by`
-    * aggregate (map-side combine keeps one row per key per task). */
+    * the subject key, with one row per key per task on the map side:
+    * with [[graft.catalyst.GraftExtensions]] installed the optimizer
+    * rewrites this window alone into a partial+final `max_by` aggregate.
+    * Under [[readModel]] it does not: the optimizer folds the tombstone
+    * filter into `__rn = 1`, the rewrite's exact pattern no longer
+    * matches, and Spark's own partial `WindowGroupLimit` does the
+    * map-side cut before the exchange instead (pinned by
+    * RewriteRuleSuite). */
   def compactLatest(feed: DataFrame, subject: Column, order: Column): DataFrame = {
     val w = Window.partitionBy(subject).orderBy(order.desc)
     feed.withColumn("__rn", row_number().over(w))

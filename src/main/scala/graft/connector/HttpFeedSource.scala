@@ -1,12 +1,18 @@
 package graft.connector
 
 import java.util
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources
@@ -30,10 +36,15 @@ import graft.udf.CloudEventsParse
   *    (`README.md:332`), so ranges are replayable and the spec's
   *    at-least-once delivery (`README.md:113`) becomes exactly-once inside
   *    the pipeline.
-  *  - ONE InputPartition per MICRO-batch: a feed is a single totally-ordered
-  *    stream (`README.md:9`) and steady-state micro-batches are small;
-  *    parallelism comes after ingestion by repartitioning on `subject`
-  *    (SURVEY.md §3.2).
+  *  - a micro-batch is ONE ordered InputPartition unless a pinned
+  *    Trigger.AvailableNow backlog is fanned out (`backfillPartitions`).
+  *    Steady-state micro-batches are a page or two and read serially.
+  *    A pinned AvailableNow range on a validated seq-prefixed feed, like
+  *    a bounded batch read, keeps up to four chunks of its range in
+  *    flight inside each partition ([[HttpFeedPartitionReader]]) and
+  *    still emits in id order.
+  *    Parallelism across keys comes after ingestion, by repartitioning on
+  *    `subject` (SURVEY.md §3.2).
   *
   * Batch mode (`spark.read`) is bounded replay: find the head at plan time
   * ([[HttpFeedClient.resolveHead]] — O(log feed) seq probes on
@@ -131,7 +142,33 @@ class HttpFeedScan(opts: HttpFeedOptions, limit: Option[Int] = None) extends Sca
   // memoized Batch memoizes its partition plan too.
   private lazy val batch: Batch = new HttpFeedBatch(opts, limit)
   override def toBatch: Batch = batch
+  override def supportedCustomMetrics(): Array[CustomMetric] = HttpFeedMetrics.supported
 }
+
+/** Scan metrics each [[HttpFeedPartitionReader]] reports, summed over the
+  * scan's tasks (they show on `BatchScanExec.metrics` under these names). */
+object HttpFeedMetrics {
+  val Requests = "feedRequests"
+  val CacheHits = "pageCacheHits"
+  val StallMs = "readAheadStallMs"
+  def supported: Array[CustomMetric] =
+    Array(new FeedRequestsMetric, new PageCacheHitsMetric, new ReadAheadStallMetric)
+  private[connector] def task(metric: String, v: Long): CustomTaskMetric =
+    new CustomTaskMetric {
+      override def name(): String = metric
+      override def value(): Long = v
+    }
+}
+abstract class HttpFeedSumMetric(metric: String, desc: String) extends CustomSumMetric {
+  override def name(): String = metric
+  override def description(): String = desc
+}
+class FeedRequestsMetric extends HttpFeedSumMetric(HttpFeedMetrics.Requests,
+  "feed pages fetched from the server (retries not counted)")
+class PageCacheHitsMetric extends HttpFeedSumMetric(HttpFeedMetrics.CacheHits,
+  "feed pages served by the page cache")
+class ReadAheadStallMetric extends HttpFeedSumMetric(HttpFeedMetrics.StallMs,
+  "ms the readers waited for read-ahead chunks")
 
 /** Offset = the lastEventId cursor, JSON-serialized into the WAL. */
 case class HttpFeedOffset(lastEventId: String) extends Offset {
@@ -231,7 +268,11 @@ class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
         if (slice.nonEmpty && slice.last._1 == e)
           HttpFeedBackfill.equiDepthPartitions(opts, s, slice)
         else
-          Array(HttpFeedInputPartition(opts.url, s, e, auth = opts.auth))
+          // the pin's validated seq scheme lets the one reader read ahead;
+          // a range ending anywhere else (ProcessingTime batches, a foreign
+          // checkpoint end) reads serially
+          Array(HttpFeedInputPartition(opts.url, s, e, auth = opts.auth,
+            seqWidth = availableNow.filter(_.id == e).flatMap(_.seq).map(_.width)))
       }
     }
   }
@@ -283,7 +324,8 @@ class HttpFeedBatch(opts: HttpFeedOptions, limit: Option[Int] = None) extends Ba
       val head = HttpFeedClient.resolveHead(opts.url, opts.startId, 0, opts.auth)
       if (head.id == opts.startId) Array.empty
       else if (opts.backfillPartitions <= 1)
-        Array(HttpFeedInputPartition(opts.url, opts.startId, head.id, auth = opts.auth))
+        Array(HttpFeedInputPartition(opts.url, opts.startId, head.id, auth = opts.auth,
+          seqWidth = head.seq.map(_.width)))
       else head.seq match {
         case Some(s) =>
           // Sequences may have gaps (a DB sequence is monotonic, not
@@ -425,21 +467,32 @@ private[graft] object HttpFeedBackfill {
     * contract the planner VALIDATED at detect time — and the final
     * partition ends at `endId` itself (a real id when the head resolve
     * succeeded). Deduped/clamped so the union telescopes exactly to
-    * (startId, endId] whatever the boundary quality. */
+    * (startId, endId] whatever the boundary quality.
+    *
+    * The partitions carry the width, so their readers read ahead, when
+    * they all run at once (no more of them than the session's default
+    * parallelism). Past that, partitions waiting for a core keep the
+    * cores busy, and the chunks' extra requests only add load: with 8
+    * partitions on 4 cores, ConnectorBench's pageSize=100 replay read
+    * 15–20 % slower with read-ahead. */
   def seqRangePartitions(opts: HttpFeedOptions, startId: String, endId: String,
                          internalBounds: IndexedSeq[Long],
                          width: Int): Array[InputPartition] = {
-    val parts = Array.newBuilder[InputPartition]
+    val ranges = ArrayBuffer[(String, String)]()
     var prevId = startId
     internalBounds.distinct.sorted.foreach { b =>
       val bid = HttpFeedClient.seqCursor(b + 1, width)
       if (bid > prevId && bid < endId) {
-        parts += HttpFeedInputPartition(opts.url, prevId, bid, auth = opts.auth)
+        ranges += prevId -> bid
         prevId = bid
       }
     }
-    parts += HttpFeedInputPartition(opts.url, prevId, endId, auth = opts.auth)
-    parts.result()
+    ranges += prevId -> endId
+    val cores = SparkSession.getActiveSession.fold(Int.MaxValue)(_.sparkContext.defaultParallelism)
+    val readAhead = Some(width).filter(_ => ranges.length <= cores)
+    ranges.map { case (s, e) =>
+      HttpFeedInputPartition(opts.url, s, e, auth = opts.auth, seqWidth = readAhead)
+    }.toArray
   }
 
   def equiDepthPartitions(opts: HttpFeedOptions, startId: String,
@@ -470,10 +523,15 @@ private[graft] object HttpFeedBackfill {
 
 /** The (startId, endId] page range one task reads (row budget optional;
   * the auth header rides along to the executor — a production deployment
-  * would resolve credentials from a provider instead of the plan). */
+  * would resolve credentials from a provider instead of the plan).
+  * `seqWidth` is the pad width of the feed's sequence prefix when the
+  * planner validated that the server resolves made-up cursors
+  * positionally ([[HttpFeedClient.resolveHead]]); it lets the reader read
+  * ahead. */
 case class HttpFeedInputPartition(url: String, startId: String, endId: String,
                                   limit: Option[Int] = None,
-                                  auth: Option[String] = None)
+                                  auth: Option[String] = None,
+                                  seqWidth: Option[Int] = None)
     extends InputPartition
 
 class HttpFeedReaderFactory extends PartitionReaderFactory {
@@ -486,6 +544,23 @@ class HttpFeedReaderFactory extends PartitionReaderFactory {
   * bound is passed. Rows beyond endId (data that arrived after the batch
   * was planned) are excluded so the batch is exactly the planned range.
   *
+  * Read-ahead: the cursor loop is serial, one round trip per page. But a
+  * server must resolve cursors positionally even for absent ids
+  * (`README.md:153-159`), so on a range that carries a validated
+  * `seqWidth` the reader makes up cursors and pages sub-ranges at once.
+  * It fetches its first page serially, cuts the rest of the range into
+  * chunks of [[HttpFeedPartitionReader.ChunkPages]] times that page's
+  * sequence span ([[HttpFeedPartitionReader.ChunkPlan]]), keeps up to
+  * [[HttpFeedPartitionReader.ReadAhead]] chunks in flight on a shared
+  * daemon pool, and emits them strictly in range order. The rows, their
+  * order and the range are those of the serial loop, so a retried task
+  * emits the same rows in the same order. A chunk buffers at most
+  * [[HttpFeedPartitionReader.ChunkCap]] pages; the reader pages the rest
+  * of a fuller chunk itself, so chunk reads never wait on it, and a
+  * reader holds at most ReadAhead × ChunkCap pages. Ranges without a
+  * width (opaque/UUIDv6 ids, seq-parsing servers), a pushed LIMIT and
+  * ranges shorter than two chunks keep the serial loop.
+  *
   * Compaction racing a planned range is safe: cursor POSITIONS survive
   * deletion (`README.md:153-154`), so if the server compacts between
   * planning and reading, the task still terminates, stays within
@@ -496,12 +571,25 @@ class HttpFeedReaderFactory extends PartitionReaderFactory {
   */
 class HttpFeedPartitionReader(p: HttpFeedInputPartition)
     extends PartitionReader[InternalRow] {
+  import HttpFeedPartitionReader._
 
-  private var cursor = p.startId
-  private var page: IndexedSeq[JsonNode] = IndexedSeq.empty
+  private val requests = new AtomicLong()
+  private val cacheHits = new AtomicLong()
+  private var stallNs = 0L
+
+  // the stretch the reader pages itself: (cursor, stretchEnd]; None once
+  // it is done or handed to the chunks
+  private var cursor: Option[String] = Some(p.startId)
+  private var stretchEnd = p.endId
+  private var firstPage = true
+  // the read-ahead chunks not yet started, and the started ones in range
+  // order, each with the end of its range
+  private var chunks: Option[ChunkPlan] = None
+  private val inFlight = scala.collection.mutable.Queue.empty[(String, Future[Walk])]
+  private var buffered: Iterator[IndexedSeq[InternalRow]] = Iterator.empty
+  private var page: IndexedSeq[InternalRow] = IndexedSeq.empty
   private var idx = 0
   private var emitted = 0
-  private var exhausted = false
   private var current: InternalRow = _
 
   private def str(n: JsonNode, field: String): UTF8String = {
@@ -541,36 +629,175 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
       ct, str(n, "data"), ext))
   }
 
-  override def next(): Boolean = {
-    if (p.limit.exists(emitted >= _)) return false // pushed-limit row budget
-    while (idx >= page.length && !exhausted) {
-      // the JVM-wide page cache serves replayed immutable full pages
-      // (task retries, restart backfills) without a network round-trip —
-      // only pages the server marked `Cache-Control: public, max-age=…`
-      // are ever stored (reference README.md:330-332)
-      val fetched = HttpFeedClient.fetchPage(p.url, cursor, 0, p.auth,
-        cache = Some(HttpFeedClient.sharedCache))
-      if (fetched.isEmpty) { exhausted = true }
-      else {
-        page = fetched.events
-        idx = 0
-        cursor = fetched.lastId.get
-        if (cursor >= p.endId) exhausted = true // last page of the range
+  /** One page after `at`. The JVM-wide page cache serves replayed
+    * immutable full pages (task retries, restart backfills) without a
+    * network round-trip — only pages the server marked `Cache-Control:
+    * public, max-age=…` are ever stored (reference README.md:330-332). */
+  private def fetch(at: String): HttpFeedClient.Page =
+    HttpFeedClient.sharedCache.get(p.url, at, p.auth) match {
+      case Some(cached) => cacheHits.incrementAndGet(); cached
+      case None =>
+        requests.incrementAndGet()
+        val fetched = HttpFeedClient.fetchPage(p.url, at, 0, p.auth)
+        HttpFeedClient.sharedCache.put(p.url, at, p.auth, fetched)
+        fetched
+    }
+
+  /** The cursor loop over (from, to], at most `maxPages` pages — the serial
+    * read and every read-ahead chunk. Builds the rows of the ids ≤ `to`,
+    * so a chunk builds them off the reader's thread. The range is done at
+    * the empty page or the page that reaches `to`, else `resume` is the
+    * cursor to go on from. */
+  private def walk(from: String, to: String, maxPages: Int): Walk = {
+    val pages = new ArrayBuffer[IndexedSeq[InternalRow]]()
+    var at = from
+    while (pages.length < maxPages) {
+      if (Thread.currentThread().isInterrupted)
+        throw new InterruptedException(s"read of ${p.url} after $at cancelled")
+      val fetched = fetch(at)
+      if (fetched.isEmpty) return Walk(pages.toIndexedSeq, None)
+      val last = fetched.lastId.get
+      val kept = if (last <= to) fetched.events
+                 else fetched.events.takeWhile(_.get("id").asText() <= to)
+      pages += kept.map(toRow)
+      if (last >= to) return Walk(pages.toIndexedSeq, None)
+      at = last
+    }
+    Walk(pages.toIndexedSeq, Some(at))
+  }
+
+  /** After the first page: hand the rest of the range to read-ahead chunks
+    * when the range carries a validated seq width and spans at least two
+    * chunks of ChunkPages times the first page's sequence span. */
+  private def startReadAhead(first: Walk): Unit =
+    for {
+      width <- p.seqWidth if p.limit.isEmpty
+      from <- first.resume
+      page0 <- first.pages.headOption
+      (firstSeq, w1) <- page0.headOption.flatMap(r =>
+        HttpFeedClient.parseSeqId(r.getUTF8String(1).toString))
+      (lastSeq, w2) <- HttpFeedClient.parseSeqId(from)
+      endSeq <- HttpFeedBackfill.seqBoundOf(p.endId, width)
+      if w1 == width && w2 == width
+      span = ChunkPages * (lastSeq - firstSeq + 1) // ≤ 8·10^18: no wrap
+      if (endSeq - lastSeq) / span >= 2
+    } {
+      cursor = None
+      chunks = Some(new ChunkPlan(from, lastSeq, p.endId, endSeq, width, page0.length, span))
+      topUp()
+    }
+
+  private def topUp(): Unit =
+    chunks.foreach { plan =>
+      while (inFlight.length < ReadAhead && plan.hasNext) {
+        val (from, to) = plan.next()
+        inFlight.enqueue(to -> pool.submit(new Callable[Walk] {
+          override def call(): Walk = walk(from, to, ChunkCap)
+        }))
       }
     }
-    if (idx < page.length) {
-      val n = page(idx); idx += 1
-      val id = n.get("id").asText()
-      if (id > p.endId) { page = IndexedSeq.empty; exhausted = true; next() }
-      else { current = toRow(n); emitted += 1; true }
-    } else false
+
+  /** Buffer the next pages in range order — the reader's own stretch one
+    * page at a time, else the next chunk. False once the range is done. */
+  private def refill(): Boolean = cursor match {
+    case Some(at) =>
+      val w = walk(at, stretchEnd, 1)
+      cursor = w.resume
+      buffered = w.pages.iterator
+      if (firstPage) { firstPage = false; startReadAhead(w) }
+      true
+    case None =>
+      topUp()
+      if (inFlight.isEmpty) false
+      else {
+        val (end, read) = inFlight.dequeue()
+        val t0 = System.nanoTime()
+        val w = try read.get() catch { case e: ExecutionException => throw e.getCause }
+        stallNs += System.nanoTime() - t0
+        chunks.foreach(_.observe(w))
+        // a chunk past its page cap leaves the rest of its range to us
+        cursor = w.resume
+        stretchEnd = end
+        buffered = w.pages.iterator
+        true
+      }
+  }
+
+  override def next(): Boolean = {
+    if (p.limit.exists(emitted >= _)) return false // pushed-limit row budget
+    while (idx >= page.length) {
+      if (buffered.hasNext) { page = buffered.next(); idx = 0 }
+      else if (!refill()) return false
+    }
+    current = page(idx); idx += 1; emitted += 1
+    true
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    HttpFeedMetrics.task(HttpFeedMetrics.Requests, requests.get()),
+    HttpFeedMetrics.task(HttpFeedMetrics.CacheHits, cacheHits.get()),
+    HttpFeedMetrics.task(HttpFeedMetrics.StallMs, stallNs / 1000000L))
+
+  /** Cancels the chunks still in flight: an interrupted chunk makes no
+    * further request. */
+  override def close(): Unit = {
+    chunks = None
+    inFlight.foreach(_._2.cancel(true))
+    inFlight.clear()
+  }
 }
 
 object HttpFeedPartitionReader {
+  /** Read-ahead chunks in flight per reader. */
+  val ReadAhead = 4
+  /** Pages' worth of sequence per chunk (8 × the first page's span). */
+  val ChunkPages = 8
+  /** Pages one chunk may buffer, so a reader holds at most
+    * ReadAhead × ChunkCap pages. */
+  val ChunkCap: Int = 2 * ChunkPages
+
+  /** The rows of the pages a [[HttpFeedPartitionReader]] walk kept, and
+    * the cursor to go on from when it stopped at its page cap. */
+  private[connector] final case class Walk(pages: IndexedSeq[IndexedSeq[InternalRow]],
+                                           resume: Option[String])
+
+  /** The read-ahead chunks of (fromId, endId], made one at a time: `span`
+    * sequences each after `fromSeq`, fromId's sequence, with the same
+    * made-up `seqCursor(b + 1)` bounds as a seq partition plan
+    * ([[HttpFeedBackfill.seqRangePartitions]]); the last chunk ends at
+    * endId itself and takes the rest once less than two spans remain, so
+    * the chunks telescope exactly to the range. Each finished chunk
+    * adapts the span: halved after a chunk that ran past ChunkCap, and
+    * doubled after one that found less than half ChunkPages full pages
+    * of events — so a range that grows sparser after its first page does
+    * not cost a request per nearly empty chunk. */
+  private[connector] final class ChunkPlan(fromId: String, fromSeq: Long, endId: String,
+                                           endSeq: Long, width: Int, pageEvents: Int,
+                                           private var span: Long)
+      extends Iterator[(String, String)] {
+    private var from = fromId
+    private var at = fromSeq
+    override def hasNext: Boolean = at < endSeq
+    override def next(): (String, String) = {
+      val hi = if ((endSeq - at) / span < 2) endSeq else at + span
+      val to = if (hi == endSeq) endId else HttpFeedClient.seqCursor(hi + 1, width)
+      val chunk = from -> to
+      from = to
+      at = hi
+      chunk
+    }
+    def observe(w: Walk): Unit =
+      if (w.resume.isDefined) span = math.max(1L, span / 2)
+      else if (w.pages.iterator.map(_.length).sum < pageEvents * ChunkPages / 2 &&
+               span < endSeq) span *= 2 // endSeq < 10^18: no wrap
+  }
+
+  private lazy val pool = Executors.newCachedThreadPool(r => {
+    val t = new Thread(r, "http-feed-read-ahead"); t.setDaemon(true); t
+  })
+
   /** Core envelope attributes (README.md:306-316 plus the engine's
     * `time_us` metadata twin of `time`); everything else is an extension
     * attribute (README.md:318). */

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.connector.{HttpFeedClient, TestFeedServer}
+import scala.collection.mutable.ArrayBuffer
+
+import graft.connector.{HttpFeedClient, HttpFeedInputPartition, HttpFeedMetrics,
+  HttpFeedPartitionReader, TestFeedServer}
 import graft.udf.SeqId
 
 /** End-to-end tests of the DSv2 HTTP feed source against the embedded feed
@@ -39,6 +42,26 @@ class HttpSourceSuite extends AnyFunSuite {
     * plus all of 8001..10000. */
   private lazy val gappySeqEvents: IndexedSeq[(String, String)] =
     ((20L to 8000L by 20L) ++ (8001L to 10000L)).map(i => envelopeJson(i, s"s${i % 5}"))
+
+  /** An envelope with an opaque, time-ordered UUIDv6 id (README.md:156-157). */
+  private def uuidEnvelope(seq: Long): (String, String) = {
+    val ts = 1700000000000000L + seq * 1000000L
+    val id = graft.udf.Uuid6.encodeStr(ts, clockSeq = 1, node = f"$seq%012x")
+    (id, s"""{"specversion":"1.0","id":"$id","type":"t.example","source":"srv",""" +
+      s""""time_us":$ts,"subject":"s${seq % 7}","method":"PUT",""" +
+      s""""datacontenttype":"application/json","data":"{\\"v\\":$seq}"}""")
+  }
+
+  /** What one partition reader emits — `id|data` per row, in order — and
+    * the metrics it reports at the end. */
+  private def readPartition(part: HttpFeedInputPartition): (Seq[String], Map[String, Long]) = {
+    val r = new HttpFeedPartitionReader(part)
+    try {
+      val rows = ArrayBuffer[String]()
+      while (r.next()) rows += s"${r.get().getUTF8String(1)}|${r.get().getUTF8String(8)}"
+      (rows.toSeq, r.currentMetricsValues().map(m => m.name -> m.value).toMap)
+    } finally r.close()
+  }
 
   test("streaming replay with AvailableNow drains the feed in order") {
     val events = (1L to 250L).map(i => envelopeJson(i, s"s${i % 7}"))
@@ -214,14 +237,6 @@ class HttpSourceSuite extends AnyFunSuite {
   }
 
   test("opaque (UUIDv6) ids fall back to the histogram-walk backfill plan") {
-    import graft.udf.Uuid6
-    def uuidEnvelope(seq: Long): (String, String) = {
-      val ts = 1700000000000000L + seq * 1000000L
-      val id = Uuid6.encodeStr(ts, clockSeq = 1, node = f"$seq%012x")
-      (id, s"""{"specversion":"1.0","id":"$id","type":"t.example","source":"srv",""" +
-        s""""time_us":$ts,"subject":"s${seq % 7}","method":"PUT",""" +
-        s""""datacontenttype":"application/json","data":"{\\"v\\":$seq}"}""")
-    }
     val events = (1L to 120L).map(uuidEnvelope)
     val server = new TestFeedServer(events, pageSize = 10)
     try {
@@ -509,16 +524,6 @@ class HttpSourceSuite extends AnyFunSuite {
 
   test("UUIDv6 time-ordered ids work as feed cursors end-to-end (README.md:156-157)") {
     import graft.udf.Uuid6
-    def uuidEnvelope(seq: Long): (String, String) = {
-      val ts = 1700000000000000L + seq * 1000000L
-      val id = Uuid6.encodeStr(ts, clockSeq = 1, node = f"$seq%012x")
-      val json =
-        s"""{"specversion":"1.0","id":"$id","type":"t.example","source":"srv",
-           |"time_us":$ts,"subject":"s${seq % 7}",
-           |"method":"PUT","datacontenttype":"application/json","data":"{\\"v\\":$seq}"}"""
-          .stripMargin.replace("\n", "")
-      (id, json)
-    }
     val events = (1L to 60L).map(uuidEnvelope)
     // the scheme's cursor contract: time order ≡ lexicographic id order
     assert(events.map(_._1) === events.map(_._1).sorted,
@@ -1022,7 +1027,8 @@ class HttpSourceSuite extends AnyFunSuite {
 
   test("AvailableNow on a seq feed: O(log feed) pin, seq-arithmetic fan-out, byte-identical to the single run") {
     val events = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
-    def runAvailableNow(parts: Int): (Seq[String], Int, Int) = {
+    // rows in arrival order, partitions seen, server requests
+    def runStream(parts: Int, trigger: Trigger): (Seq[String], Int, Int) = {
       val server = new TestFeedServer(events, pageSize = 10) // 300 pages
       try {
         val seenParts = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1038,22 +1044,30 @@ class HttpSourceSuite extends AnyFunSuite {
             rdd.collect().foreach(r => rows.add(r.mkString("|")))
             ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        assert(q.awaitTermination(120000))
+          .trigger(trigger).start()
+        if (trigger == Trigger.AvailableNow()) assert(q.awaitTermination(120000))
+        else { q.processAllAvailable(); q.stop() }
         import scala.jdk.CollectionConverters._
-        (rows.asScala.toSeq.sorted, seenParts.get(), server.requestCount)
+        (rows.asScala.toSeq, seenParts.get(), server.requestCount)
       } finally server.stop()
     }
-    val (fanRows, fanParts, fanRequests) = runAvailableNow(8)
+    def runAvailableNow(parts: Int): (Seq[String], Int, Int) =
+      runStream(parts, Trigger.AvailableNow())
+    val (fanArrival, fanParts, fanRequests) = runAvailableNow(8)
+    val fanRows = fanArrival.sorted
     assert(fanParts === 8)
     assert(fanRows.length === 3000)
     // pin ≈ 2·log₂(3000) + one fanned read of ~300 pages; the retired
     // histogram prepare paid the 300 pages a SECOND time before any read
     assert(fanRequests <= 430,
       s"AvailableNow paid $fanRequests requests — the O(feed) prepare walk is back")
-    val (oneRows, oneParts, _) = runAvailableNow(1)
+    val (oneArrival, oneParts, _) = runAvailableNow(1)
     assert(oneParts === 1)
-    assert(fanRows === oneRows, "fan-out changed the delivered bytes")
+    assert(fanRows === oneArrival.sorted, "fan-out changed the delivered bytes")
+    // the pinned N=1 range reads ahead; a ProcessingTime run reads the same
+    // range serially — same rows in the same order
+    val (serialArrival, _, _) = runStream(1, Trigger.ProcessingTime(0L))
+    assert(oneArrival === serialArrival, "read-ahead changed the rows or their order")
   }
 
   test("AvailableNow seq pin: fan-out only for the pinned end; foreign checkpoint ends stay single-partition") {
@@ -1071,6 +1085,10 @@ class HttpSourceSuite extends AnyFunSuite {
       val parts = stream.planInputPartitions(HttpFeedOffset(""), end)
         .map(_.asInstanceOf[HttpFeedInputPartition])
       assert(parts.length === 8)
+      // the fanned ranges carry the pin's validated width, so they read
+      // ahead, only when all 8 run at once
+      val cores = spark.sparkContext.defaultParallelism
+      assert(parts.forall(_.seqWidth === Some(SeqId.Width).filter(_ => 8 <= cores)))
       // ranges telescope exactly over (start, head]
       assert(parts.head.startId === "")
       assert(parts.last.endId === events.last._1)
@@ -1086,6 +1104,17 @@ class HttpSourceSuite extends AnyFunSuite {
       val foreign = stream.planInputPartitions(
         HttpFeedOffset(""), HttpFeedOffset(events(300)._1))
       assert(foreign.length === 1)
+      assert(foreign.head.asInstanceOf[HttpFeedInputPartition].seqWidth === None)
+      // a single-partition range, and a fan-out no wider than the cores,
+      // carry it too
+      for (n <- Seq(1, math.min(cores, 8))) {
+        val pinned = new HttpFeedMicroBatchStream(HttpFeedOptions(server.url, 100L, "", None, n))
+        pinned.prepareForTriggerAvailableNow()
+        val pinEnd = pinned.latestOffset(HttpFeedOffset(""), ReadLimit.allAvailable())
+        assert(pinned.planInputPartitions(HttpFeedOffset(""), pinEnd)
+          .map(_.asInstanceOf[HttpFeedInputPartition].seqWidth).toSeq ===
+          Seq.fill(n)(Some(SeqId.Width)))
+      }
     } finally server.stop()
   }
 
@@ -1205,6 +1234,147 @@ class HttpSourceSuite extends AnyFunSuite {
         assert(HttpFeedClient.probeHeadSeq(server.url, firstSeq, width) === lastSeq)
       } finally server.stop()
     }
+  }
+
+  test("read-ahead partition read ≡ the serial walk: same rows, same order, same range") {
+    val dense = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    for ((events, pageSize) <- Seq((dense, 10), (gappySeqEvents, 50), (bigSeqEvents, 10))) {
+      val server = new TestFeedServer(events, pageSize = pageSize)
+      try {
+        val ids = events.map(_._1)
+        val width = HttpFeedClient.parseSeqId(ids.head).get._2
+        // ends at a made-up cursor: before every event of this sequence
+        val madeUp = HttpFeedClient.seqCursor(
+          HttpFeedClient.parseSeqId(ids(ids.length * 3 / 4)).get._1, width)
+        for ((start, end) <- Seq(("", ids.last), (ids(ids.length / 5), ids.last), ("", madeUp))) {
+          val part = HttpFeedInputPartition(server.url, start, end)
+          val (serial, serialM) = readPartition(part)
+          val (ahead, aheadM) = readPartition(part.copy(seqWidth = Some(width)))
+          assert(serial.map(_.takeWhile(_ != '|')) === ids.filter(i => i > start && i <= end))
+          assert(ahead === serial, s"start=$start end=$end")
+          def pages(m: Map[String, Long]) =
+            m(HttpFeedMetrics.Requests) + m(HttpFeedMetrics.CacheHits)
+          // the chunks really ran: each chunk ending at a made-up cursor
+          // pages past its end once
+          if (events eq dense)
+            assert(pages(aheadM) > pages(serialM), s"no read-ahead: $aheadM vs $serialM")
+        }
+      } finally server.stop()
+    }
+  }
+
+  test("read-ahead on a range that grows sparser after its first page: the chunk span adapts") {
+    // 10 dense pages, then 30 pages of every 1000th sequence up to 300000
+    val events = ((1L to 100L) ++ (1000L to 300000L by 1000L)).map(i => envelopeJson(i, s"s${i % 7}"))
+    val server = new TestFeedServer(events, pageSize = 10)
+    try {
+      val part = HttpFeedInputPartition(server.url + "/serial", "", events.last._1)
+      val (serial, serialM) = readPartition(part)
+      val (ahead, aheadM) = readPartition(part.copy(url = server.url + "/ahead",
+        seqWidth = Some(SeqId.Width)))
+      assert(serial.length === events.length)
+      assert(ahead === serial)
+      // chunks of a fixed 8 × 10 sequences would cost ~3750 requests here
+      val (s, a) = (serialM(HttpFeedMetrics.Requests), aheadM(HttpFeedMetrics.Requests))
+      assert(a <= 2 * s, s"read-ahead cost $a requests, the serial walk $s")
+    } finally server.stop()
+  }
+
+  test("close() in the middle of a read-ahead range stops further server requests") {
+    val events = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val server = new TestFeedServer(events, pageSize = 10) // 300 pages
+    try {
+      val r = new HttpFeedPartitionReader(HttpFeedInputPartition(server.url, "",
+        events.last._1, seqWidth = Some(SeqId.Width)))
+      assert(r.next()) // first page read; the chunks start now
+      r.close()
+      Thread.sleep(300)
+      val settled = server.requestCount
+      Thread.sleep(300)
+      assert(server.requestCount === settled, "chunks kept requesting after close()")
+      // left alone, the first ReadAhead chunks alone fetch 1 + 4 × 9 pages
+      import HttpFeedPartitionReader.{ChunkPages, ReadAhead}
+      assert(settled < 1 + ReadAhead * ChunkPages / 2,
+        s"$settled requests: close() did not cancel the chunks in flight")
+    } finally server.stop()
+  }
+
+  test("read-ahead chunks retry a 5xx burst; a persistent 5xx fails the read and names the URL") {
+    val events = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val server = new TestFeedServer(events, pageSize = 10)
+    try {
+      // distinct paths keep the two reads apart in the URL-keyed page cache
+      val part = HttpFeedInputPartition(server.url + "/burst", "", events.last._1,
+        seqWidth = Some(SeqId.Width))
+      val r = new HttpFeedPartitionReader(part)
+      val ids = ArrayBuffer[String]()
+      try {
+        assert(r.next()); ids += r.get().getUTF8String(1).toString
+        // the reader fetched only its first page: the burst lands on chunks
+        server.failNext(2, code = 503)
+        while (r.next()) ids += r.get().getUTF8String(1).toString
+      } finally r.close()
+      assert(ids.toSeq === events.map(_._1))
+      // the burst was consumed: a single-attempt request succeeds
+      assert(HttpFeedClient.fetchPage(server.url, "", 0, maxAttempts = 1).events.nonEmpty)
+
+      val failing = new HttpFeedPartitionReader(part.copy(url = server.url + "/persistent"))
+      try {
+        assert(failing.next())
+        server.failNext(Int.MaxValue, code = 500)
+        val e = intercept[java.io.IOException] { while (failing.next()) () }
+        assert(e.getMessage.contains(server.url + "/persistent"), e.getMessage)
+      } finally failing.close()
+    } finally server.stop()
+  }
+
+  test("LIMIT, UUIDv6 and seq-parsing-server reads stay serial: the same requests as before read-ahead") {
+    def requests(server: TestFeedServer)(read: => Int): (Int, Int) = {
+      val before = server.requestCount
+      val rows = read
+      (rows, server.requestCount - before)
+    }
+    def load(url: String) = spark.read.format("http-feed").option("url", url).load()
+    val seqEvents = (1L to 300L).map(i => envelopeJson(i, s"s${i % 7}"))
+    val limited = new TestFeedServer(seqEvents, pageSize = 10)
+    val uuid = new TestFeedServer((1L to 300L).map(uuidEnvelope), pageSize = 10)
+    val parsing = new TestFeedServer(seqEvents, pageSize = 10, seqParsingCursors = true)
+    try {
+      // the counts the serial reader made before read-ahead existed (plan
+      // and read together): a pushed LIMIT's page budget, the opaque-id
+      // walk, and the seq-parsing server's walk plus its detect probe
+      assert(requests(limited)(load(limited.url).limit(15).collect().length) === (15, 4))
+      assert(requests(uuid)(load(uuid.url).collect().length) === (300, 58))
+      assert(requests(parsing)(load(parsing.url).collect().length) === (300, 59))
+    } finally Seq(limited, uuid, parsing).foreach(_.stop())
+  }
+
+  test("scan metrics: requests, page-cache hits and read-ahead stall ms reach BatchScanExec") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val events = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val server = new TestFeedServer(events, pageSize = 10) // 300 pages
+    try {
+      val df = spark.read.format("http-feed").option("url", server.url).load()
+      val before = server.requestCount
+      assert(df.collect().length === 3000)
+      val total = server.requestCount - before
+      val scan = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b
+      }.head
+      val m = Seq(HttpFeedMetrics.Requests, HttpFeedMetrics.CacheHits, HttpFeedMetrics.StallMs)
+        .map(n => n -> scan.metrics(n).value).toMap
+      // the plan's first pages went through the page cache: the reader's
+      // first page is a hit, not a request
+      assert(m(HttpFeedMetrics.CacheHits) >= 1, m)
+      // every reader request reached the server; the plan made the rest
+      assert(m(HttpFeedMetrics.Requests) > 0 && m(HttpFeedMetrics.Requests) < total, m)
+      // the read-ahead chunks walked every page, plus at most one crossing
+      // page per chunk (300 pages in chunks of 8)
+      val walked = m(HttpFeedMetrics.Requests) + m(HttpFeedMetrics.CacheHits)
+      assert(walked >= 300 && walked <= 300 + 300 / HttpFeedPartitionReader.ChunkPages + 1, m)
+      assert(m(HttpFeedMetrics.StallMs) >= 0)
+    } finally server.stop()
   }
 }
 

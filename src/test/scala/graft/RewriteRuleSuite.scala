@@ -110,4 +110,33 @@ class RewriteRuleSuite extends AnyFunSuite {
       }
     }
   }
+
+  test("Feeds.readModel keeps its window: a partial WindowGroupLimit runs before the exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
+    withRule {
+      val model = graft.api.Feeds.readModel(sample, col("subject"), col("event_id"),
+        col("payload") === "c")
+      // the optimizer folds the tombstone filter into `__rn = 1`, so the
+      // compaction rule's exact `rn = 1` pattern never matches
+      val logical = model.queryExecution.optimizedPlan
+      assert(logical.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.nonEmpty, s"expected the window to survive:\n$logical")
+      val physical = model.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      def limits(p: SparkPlan) = p.collect { case w: WindowGroupLimitExec => w.mode }
+      val exchanges = physical.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length === 1, physical)
+      // map side: one row per subject per task survives into the shuffle
+      assert(limits(exchanges.head.child) === Seq(Partial), physical)
+      assert(limits(physical) === Seq(Final, Partial), physical)
+      assert(model.collect().map(r => (r.getLong(0), r.getString(2))).toSet ===
+        Set((2L, "e"), (3L, "f")))
+    }
+  }
 }
