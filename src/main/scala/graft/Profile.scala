@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.Profile --explain q1 q2"  # physical plans
   *
   * Data dir via SPARK_GRAFT_SF_DIR (defaults to sf0.1 for timing; use
-  * sf0.01 for plan dumps to match docs/PLANS.md).
+  * sf0.01 for plan dumps to match docs/PLANS.md). Cores and shuffle
+  * partitions via SPARK_GRAFT_CPUS (default 32).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -22,8 +23,9 @@ object Profile {
     val formatted = args.headOption.contains("--explainf")
     val names = (if (explain || phases) args.drop(1) else args).toSeq
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC") // NTZ ts correctness (Tables.events)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel(if (explain) "ERROR" else "WARN")

@@ -40,7 +40,15 @@ object Feeds {
     * filter into `__rn = 1`, the rewrite's exact pattern no longer
     * matches, and Spark's own partial `WindowGroupLimit` does the
     * map-side cut before the exchange instead (pinned by
-    * RewriteRuleSuite). */
+    * RewriteRuleSuite).
+    *
+    * Over a bounded `http-feed` read planned as one partition (the
+    * default `backfillPartitions = 1`), with the extension installed at
+    * session build, there is no exchange at all:
+    * [[graft.catalyst.SinglePartitionFeedScan]] lets the scan report
+    * `SinglePartition`, so the sort and window run in the scan's one task
+    * and the query is one stage. The trade-off: that per-subject work no
+    * longer spreads over the shuffle partitions. */
   def compactLatest(feed: DataFrame, subject: Column, order: Column): DataFrame = {
     val w = Window.partitionBy(subject).orderBy(order.desc)
     feed.withColumn("__rn", row_number().over(w))
@@ -49,7 +57,9 @@ object Feeds {
 
   /** Read-model materialization (`README.md:168-179,290-292`): latest
     * full state per LIVE subject — compaction then tombstone removal
-    * (`isTombstone` evaluated on the surviving latest row). */
+    * (`isTombstone` evaluated on the surviving latest row). Plans as
+    * [[compactLatest]] does, including the one-stage plan over a
+    * one-partition `http-feed` read. */
   def readModel(feed: DataFrame, subject: Column, order: Column,
                 isTombstone: Column): DataFrame =
     compactLatest(feed, subject, order).filter(!isTombstone)

@@ -4,21 +4,35 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension installer. Two entry points:
+/** Engine extension installer. Injects:
+  *
+  *  - the native functions of [[GraftExtensions.functionDescriptors]]:
+  *    the seq-id codec (`seq_id_decode_native`), the bitset and sorted-set
+  *    kernels (`bitset_from_ids`, `bitset_intersect_count`,
+  *    `sorted_intersect_count`, `bitset_containment_shared`,
+  *    `bitset_from_tokens`), the text kernels (`packed_tf_min_overlap`,
+  *    `ngram_shingles`, `word_bigrams`) and the vector kernels
+  *    (`vec_dot`, `vec_sqdist`, `vec_sqdist_long`);
+  *  - the optimizer rule [[CompactLatestRewrite]] (compaction window →
+  *    `max_by` aggregate);
+  *  - the post-planner rule [[SinglePartitionFeedScan]] (a one-partition
+  *    bounded `http-feed` read reports `SinglePartition`).
+  *
+  * Two entry points:
   *
   *  - `spark.sql.extensions=graft.catalyst.GraftExtensions` at session
-  *    build time (the standard deployment path), or
-  *  - [[GraftExtensions.install]] on a live session (the driver owns
-  *    SparkSession construction in this harness, so queries self-install).
-  *
-  * Currently injects the codegen'd seq-id codec expression
-  * (`seq_id_decode_native`) — the native counterpart of the
-  * `graft.udf.SeqId` UDF surface.
+  *    build time, or `SparkSession.builder().withExtensions(new
+  *    GraftExtensions)` — the standard deployment paths, and the only ones
+  *    that install the two rules;
+  *  - [[GraftExtensions.install]] on a live session, which registers the
+  *    functions only; queries that use a kernel call it on the session
+  *    they are given.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functionDescriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => CompactLatestRewrite)
+    ext.injectQueryPostPlannerStrategyRule(_ => SinglePartitionFeedScan)
   }
 }
 
@@ -70,7 +84,8 @@ object GraftExtensions {
     }
   )
 
-  /** Idempotently register the native functions on a live session. */
+  /** Idempotently register the native functions on a live session. The
+    * rules need a session built with the extension. */
   def install(spark: SparkSession): Unit =
     functionDescriptors.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)

@@ -23,9 +23,11 @@ object HttpFeedClient {
     * `cacheControl` records the server's caching verdict
     * (reference `README.md:330-332`): full immutable batches arrive as
     * `public, max-age=…` and may be served from any HTTP cache; growing
-    * or principal-filtered pages are `no-store`. */
+    * or principal-filtered pages are `no-store`. `bytes` is the size of
+    * the response body the page was parsed from. */
   final case class Page(events: IndexedSeq[JsonNode],
-                        cacheControl: Option[String] = None) {
+                        cacheControl: Option[String] = None,
+                        bytes: Long = 0L) {
     def isEmpty: Boolean = events.isEmpty
     def lastId: Option[String] =
       events.lastOption.map(_.get("id").asText())
@@ -89,6 +91,14 @@ object HttpFeedClient {
     * range (task retry, restart backfill) the immutable full pages come
     * from memory instead of the wire. */
   val sharedCache: PageCache = new PageCache()
+
+  /** A page that breaks the protocol's total order (`README.md:148-159`):
+    * not a JSON array, an element without a textual `id`, ids that do not
+    * strictly increase, or a first id not after the cursor — what a server
+    * or proxy that ignores `lastEventId` returns. Never retried: the same
+    * cursor gets the same page, and trusting it would re-read the feed
+    * from the top forever. */
+  final class FeedProtocolException(msg: String) extends IllegalStateException(msg)
 
   /** Transient HTTP failure (5xx/429) carrying the server's `Retry-After`
     * directive when present — the retry loop obeys it. */
@@ -194,11 +204,34 @@ object HttpFeedClient {
           s"HTTP $code from $url — non-retryable client error")
       // parse the bytes directly: Jackson detects the UTF-8 encoding
       // itself, so no intermediate String copy of the page
-      val root = mapper.readTree(conn.getInputStream.readAllBytes())
-      val buf = new ArrayBuffer[JsonNode](root.size())
-      root.forEach(n => buf += n)
-      Page(buf.toIndexedSeq, Option(conn.getHeaderField("Cache-Control")))
+      val body = conn.getInputStream.readAllBytes()
+      Page(validated(url, lastEventId, mapper.readTree(body)),
+        Option(conn.getHeaderField("Cache-Control")), body.length.toLong)
     } finally conn.disconnect()
+  }
+
+  /** The events of a response body, checked once before anything caches
+    * or follows them: a JSON array whose elements carry textual ids that
+    * strictly increase, the first after a non-empty `cursor`. */
+  private def validated(url: String, cursor: String, root: JsonNode): IndexedSeq[JsonNode] = {
+    def violation(what: String) =
+      new FeedProtocolException(s"$url broke the feed protocol after cursor '$cursor': $what")
+    if (!root.isArray) throw violation("the response body is not a JSON array")
+    val buf = new ArrayBuffer[JsonNode](root.size())
+    var prev = cursor
+    root.forEach { n =>
+      val id = n.get("id")
+      if (id == null || !id.isTextual)
+        throw violation(s"event ${buf.length} has no textual id (after id '$prev')")
+      val cur = id.asText()
+      if ((buf.nonEmpty || cursor.nonEmpty) && cur <= prev)
+        throw violation(
+          if (buf.isEmpty) s"first id '$cur' is not after the cursor"
+          else s"id '$cur' does not follow id '$prev' on the page")
+      prev = cur
+      buf += n
+    }
+    buf.toIndexedSeq
   }
 
   /** Drain from a cursor to the current head: page until the server answers
@@ -278,7 +311,10 @@ object HttpFeedClient {
         cache = Some(sharedCache))
       page.events.headOption.flatMap(e => parseSeqId(e.get("id").asText()))
         .exists { case (s, w) => s == knownSeq && w == width }
-    } catch { case scala.util.control.NonFatal(_) => false }
+    } catch {
+      case e: FeedProtocolException => throw e
+      case scala.util.control.NonFatal(_) => false
+    }
 
   /** Detect AND validate a feed's sequence-prefix id scheme from one
     * already-fetched page (`README.md:159`): both the page's first and

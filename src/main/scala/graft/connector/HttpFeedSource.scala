@@ -44,7 +44,13 @@ import graft.udf.CloudEventsParse
   *    flight inside each partition ([[HttpFeedPartitionReader]]) and
   *    still emits in id order.
   *    Parallelism across keys comes after ingestion, by repartitioning on
-  *    `subject` (SURVEY.md §3.2).
+  *    `subject` (SURVEY.md §3.2) — except under a session built with
+  *    [[graft.catalyst.GraftExtensions]], where a bounded batch read
+  *    planned as ONE partition reports `SinglePartition`
+  *    ([[graft.catalyst.SinglePartitionFeedScan]]): a window, dedup, sort
+  *    or aggregate over it plans no exchange and runs in the scan's one
+  *    task. That saves a stage and a job per query, and gives up spreading
+  *    the downstream per-key work over the shuffle partitions.
   *
   * Batch mode (`spark.read`) is bounded replay: find the head at plan time
   * ([[HttpFeedClient.resolveHead]] — O(log feed) seq probes on
@@ -149,10 +155,11 @@ class HttpFeedScan(opts: HttpFeedOptions, limit: Option[Int] = None) extends Sca
   * scan's tasks (they show on `BatchScanExec.metrics` under these names). */
 object HttpFeedMetrics {
   val Requests = "feedRequests"
+  val Bytes = "feedBytes"
   val CacheHits = "pageCacheHits"
   val StallMs = "readAheadStallMs"
-  def supported: Array[CustomMetric] =
-    Array(new FeedRequestsMetric, new PageCacheHitsMetric, new ReadAheadStallMetric)
+  def supported: Array[CustomMetric] = Array(new FeedRequestsMetric, new FeedBytesMetric,
+    new PageCacheHitsMetric, new ReadAheadStallMetric)
   private[connector] def task(metric: String, v: Long): CustomTaskMetric =
     new CustomTaskMetric {
       override def name(): String = metric
@@ -165,6 +172,8 @@ abstract class HttpFeedSumMetric(metric: String, desc: String) extends CustomSum
 }
 class FeedRequestsMetric extends HttpFeedSumMetric(HttpFeedMetrics.Requests,
   "feed pages fetched from the server (retries not counted)")
+class FeedBytesMetric extends HttpFeedSumMetric(HttpFeedMetrics.Bytes,
+  "response bytes of the feed pages fetched from the server")
 class PageCacheHitsMetric extends HttpFeedSumMetric(HttpFeedMetrics.CacheHits,
   "feed pages served by the page cache")
 class ReadAheadStallMetric extends HttpFeedSumMetric(HttpFeedMetrics.StallMs,
@@ -574,6 +583,7 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
   import HttpFeedPartitionReader._
 
   private val requests = new AtomicLong()
+  private val bytes = new AtomicLong()
   private val cacheHits = new AtomicLong()
   private var stallNs = 0L
 
@@ -639,6 +649,7 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
       case None =>
         requests.incrementAndGet()
         val fetched = HttpFeedClient.fetchPage(p.url, at, 0, p.auth)
+        bytes.addAndGet(fetched.bytes)
         HttpFeedClient.sharedCache.put(p.url, at, p.auth, fetched)
         fetched
     }
@@ -737,6 +748,7 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
     HttpFeedMetrics.task(HttpFeedMetrics.Requests, requests.get()),
+    HttpFeedMetrics.task(HttpFeedMetrics.Bytes, bytes.get()),
     HttpFeedMetrics.task(HttpFeedMetrics.CacheHits, cacheHits.get()),
     HttpFeedMetrics.task(HttpFeedMetrics.StallMs, stallNs / 1000000L))
 

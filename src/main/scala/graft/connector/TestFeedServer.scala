@@ -36,7 +36,11 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
                        * never-existed cursor `lpad(k)::` skips every seq-k
                        * event — the case the planner's validation probe must
                        * detect and route to the histogram plan. */
-                     seqParsingCursors: Boolean = false) {
+                     seqParsingCursors: Boolean = false,
+                     /** Misbehavior injection: answer every request with
+                       * the feed's first page, whatever its `lastEventId`
+                       * — what a proxy that strips query strings does. */
+                     ignoreCursor: Boolean = false) {
 
   // (id, envelopeJson), kept sorted by id (ids are the total order key)
   private var events: Vector[(String, String)] = initial.sortBy(_._1).toVector
@@ -165,7 +169,7 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
     }
     val params = query(ex)
     val authHdr = Option(ex.getRequestHeaders.getFirst("Authorization"))
-    val lastId = params.getOrElse("lastEventId", "")
+    val lastId = if (ignoreCursor) "" else params.getOrElse("lastEventId", "")
     val timeoutMs = params.get("timeout").map(_.toLong).getOrElse(0L)
     var page = pageAfter(lastId, authHdr)
     if (page.isEmpty && timeoutMs > 0) {

@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
+import graft.api.Feeds
+import graft.catalyst.GraftExtensions
 import graft.connector.{HttpFeedClient, HttpFeedInputPartition, HttpFeedMetrics,
   HttpFeedPartitionReader, TestFeedServer}
 import graft.udf.SeqId
@@ -16,12 +20,13 @@ import graft.udf.SeqId
 class HttpSourceSuite extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  private def envelopeJson(seq: Long, subject: String, typ: String = "t.example"): (String, String) = {
+  private def envelopeJson(seq: Long, subject: String, typ: String = "t.example",
+                           method: String = "PUT"): (String, String) = {
     val id = SeqId.encodeFn(seq, f"u$seq%04d")
     val json =
       s"""{"specversion":"1.0","id":"$id","type":"$typ","source":"srv",
          |"time_us":${1700000000000000L + seq * 1000000L},"subject":"$subject",
-         |"method":"PUT","datacontenttype":"application/json","data":"{\\"v\\":$seq}"}"""
+         |"method":"$method","datacontenttype":"application/json","data":"{\\"v\\":$seq}"}"""
         .stripMargin.replace("\n", "")
     (id, json)
   }
@@ -1374,7 +1379,143 @@ class HttpSourceSuite extends AnyFunSuite {
       val walked = m(HttpFeedMetrics.Requests) + m(HttpFeedMetrics.CacheHits)
       assert(walked >= 300 && walked <= 300 + 300 / HttpFeedPartitionReader.ChunkPages + 1, m)
       assert(m(HttpFeedMetrics.StallMs) >= 0)
+      assert(scan.metrics(HttpFeedMetrics.Bytes).value > 0)
+      // page-cache hits add no bytes: a second read of the same range is
+      // served from the cache, all but the empty page at the head
+      val part = HttpFeedInputPartition(server.url + "/bytes", "", events.last._1)
+      val (_, cold) = readPartition(part)
+      val (_, warm) = readPartition(part)
+      assert(warm(HttpFeedMetrics.CacheHits) > 0, warm)
+      assert(warm(HttpFeedMetrics.Bytes) < cold(HttpFeedMetrics.Bytes) / 100, (cold, warm))
     } finally server.stop()
+  }
+
+  test("a server that ignores the cursor fails a bounded read and drainHead within 2 requests") {
+    val events = (1L to 2L).map(i => envelopeJson(i, s"s$i"))
+    val server = new TestFeedServer(events, pageSize = 10, ignoreCursor = true)
+    try {
+      val e = intercept[HttpFeedClient.FeedProtocolException] {
+        HttpFeedClient.drainHead(server.url, "", 0)
+      }
+      assert(server.requestCount === 2)
+      // names the URL, the cursor and the offending id
+      Seq(server.url, s"cursor '${events(1)._1}'", s"first id '${events(0)._1}'")
+        .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+      for (parts <- Seq(1, 4)) {
+        val before = server.requestCount
+        val read = intercept[Exception] {
+          spark.read.format("http-feed").option("url", server.url + s"/p$parts")
+            .option("backfillPartitions", parts.toString).load().collect()
+        }
+        assert(Iterator.iterate[Throwable](read)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[HttpFeedClient.FeedProtocolException]), read)
+        assert(server.requestCount - before <= 2, s"N=$parts")
+      }
+    } finally server.stop()
+
+    // ids out of order within a page, and an envelope without an id: the
+    // server keys these by the first tuple field, not by the JSON id
+    val (a, b) = (envelopeJson(1, "s"), envelopeJson(2, "s"))
+    val noId = ("0", a._2.replace(s""""id":"${a._1}",""", ""))
+    for ((bad, what) <- Seq((Seq("0" -> b._2, "1" -> a._2), s"id '${a._1}' does not follow"),
+                            (Seq(noId), "no textual id"))) {
+      val s = new TestFeedServer(bad, pageSize = 10)
+      try {
+        val e = intercept[HttpFeedClient.FeedProtocolException] {
+          HttpFeedClient.fetchPage(s.url, "", 0)
+        }
+        assert(e.getMessage.contains(what), e.getMessage)
+        assert(s.requestCount === 1, "a protocol violation must not be retried")
+      } finally s.stop()
+    }
+  }
+
+  /** A session built with the extension, sharing the suite's context: the
+    * extension's rules only install at session build time. */
+  private lazy val extSpark = {
+    spark.sparkContext
+    SparkSession.builder().withExtensions(new GraftExtensions).create()
+  }
+
+  private def readModel(session: SparkSession, url: String, parts: Int) =
+    Feeds.readModel(session.read.format("http-feed").option("url", url)
+      .option("backfillPartitions", parts.toString).load(),
+      col("subject"), col("id"), col("method") === "DELETE")
+
+  /** Every node of the executed plan, through adaptive stages. */
+  private def planNodes(df: DataFrame) =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+
+  private def hasNode(df: DataFrame, name: String): Boolean =
+    planNodes(df).exists(_.nodeName == name)
+
+  test("with GraftExtensions an N=1 readModel plans no exchange: same rows, same requests") {
+    // 13 subjects, every 11th event a tombstone; s9's latest event is one
+    val events = (1L to 600L).map(i =>
+      envelopeJson(i, s"s${i % 13}", method = if (i % 11 == 0) "DELETE" else "PUT"))
+    val server = new TestFeedServer(events, pageSize = 10) // 60 pages
+    def requests(read: => Seq[String]): (Seq[String], Int) = {
+      val before = server.requestCount
+      val rows = read
+      (rows, server.requestCount - before)
+    }
+    try {
+      val single = readModel(extSpark, server.url + "/rule", 1)
+      val (rows, ruleRequests) = requests(canonRows(single))
+      assert(hasNode(single, "Coalesce"), planNodes(single))
+      assert(!hasNode(single, "Exchange"), planNodes(single))
+      assert(rows.length === 12)
+      val (plain, plainRequests) = requests(canonRows(readModel(spark, server.url + "/plain", 1)))
+      assert(rows === plain)
+      assert(ruleRequests === plainRequests)
+      // a fan-out keeps its exchange
+      val fanned = readModel(extSpark, server.url + "/fan", 4)
+      assert(canonRows(fanned) === rows)
+      assert(hasNode(fanned, "Exchange") && !hasNode(fanned, "Coalesce"), planNodes(fanned))
+    } finally server.stop()
+  }
+
+  test("with GraftExtensions LIMIT, empty and AvailableNow reads return what they return without it") {
+    val events = (1L to 100L).map(i => envelopeJson(i, s"s${i % 7}"))
+    val server = new TestFeedServer(events, pageSize = 10)
+    val empty = new TestFeedServer(Seq.empty, pageSize = 10)
+    try {
+      def limited(session: SparkSession, path: String) = {
+        val before = server.requestCount
+        val df = Feeds.readModel(session.read.format("http-feed")
+          .option("url", server.url + path).load().limit(15),
+          col("subject"), col("id"), col("method") === "DELETE")
+        (canonRows(df), server.requestCount - before)
+      }
+      val (rows, requests) = limited(extSpark, "/rule")
+      assert(rows.length === 7)
+      assert((rows, requests) === limited(spark, "/plain"))
+
+      val none = readModel(extSpark, empty.url, 1)
+      assert(none.collect().isEmpty)
+      assert(!hasNode(none, "Coalesce"), planNodes(none))
+
+      val q = extSpark.readStream.format("http-feed")
+        .option("url", server.url + "/stream").option("timeoutMs", "100").load()
+        .writeStream.format("memory").queryName("http_ext_available_now")
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000))
+      assert(extSpark.table("http_ext_available_now").orderBy("id").collect()
+        .map(_.getAs[String]("id")).toSeq === events.map(_._1))
+    } finally Seq(server, empty).foreach(_.stop())
+  }
+
+  test("with GraftExtensions a plan without an http-feed scan is unchanged") {
+    def shape(session: SparkSession) = {
+      val local = session.range(1000)
+        .selectExpr("id % 7 AS subject", "id", "id % 5 = 0 AS tombstone")
+      Seq(Feeds.readModel(local, col("subject"), col("id"), col("tombstone")),
+          local.groupBy("subject").count(), local.orderBy(col("id").desc))
+        .map(df => planNodes(df).map(_.nodeName))
+    }
+    val withRule = shape(extSpark)
+    assert(withRule === shape(spark))
+    assert(withRule.forall(_.contains("Exchange")), withRule)
   }
 }
 
