@@ -36,39 +36,32 @@ object Profile {
     names.foreach { n =>
       if (phases) {
         // Split one bench-shaped run (QueryHygiene.run around build+count)
-        // into its fixed-cost phases, for the per-key-constant audit:
-        //   hyg0  = QueryHygiene's pre-body catalog snapshot
+        // into its phases, for the per-key-constant audit:
         //   build = the query closure (DataFrame construction; streaming
         //           fixtures do real work here)
         //   plan  = analysis + optimization + physical planning
         //   exec1 = first count (includes codegen compile + run)
         //   exec2 = second count in the same session (warm plan/codegen)
-        //   hyg1  = QueryHygiene's post-body sweep
-        def ms(t0: Long, t1: Long): String = f"${(t1 - t0) / 1e6}%8.1f"
-        val sc = spark.sparkContext
+        //   hyg   = the rest: QueryHygiene's catalog snapshot before the
+        //           body and its sweep after it
+        def ms(ns: Long): String = f"${ns / 1e6}%8.1f"
+        val t = new Array[Long](5) // the four phases' edges
         val t0 = System.nanoTime()
-        val before = sc.getPersistentRDDs.keySet
-        val viewsBefore = spark.sessionState.catalog.getTempViewNames().toSet
-        val t1 = System.nanoTime()
-        val df = SparkEntry.queries(n)(spark, d)
-        val t2 = System.nanoTime()
-        df.queryExecution.executedPlan // force analyze+optimize+plan
-        val t3 = System.nanoTime()
-        df.count()
-        val t4 = System.nanoTime()
-        df.count()
-        val t5 = System.nanoTime()
-        sc.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before(id) && !graft.api.QueryHygiene.isPinned(id))
-            rdd.unpersist(blocking = false)
+        graft.api.QueryHygiene.run(spark, n) {
+          t(0) = System.nanoTime()
+          val df = SparkEntry.queries(n)(spark, d)
+          t(1) = System.nanoTime()
+          df.queryExecution.executedPlan // force analyze+optimize+plan
+          t(2) = System.nanoTime()
+          df.count()
+          t(3) = System.nanoTime()
+          df.count()
+          t(4) = System.nanoTime()
         }
-        spark.sessionState.catalog.getTempViewNames()
-          .filterNot(viewsBefore)
-          .foreach(v => spark.catalog.dropTempView(v))
-        val t6 = System.nanoTime()
-        println(f"PHASES $n%-28s hyg0=${ms(t0, t1)} build=${ms(t1, t2)} " +
-          f"plan=${ms(t2, t3)} exec1=${ms(t3, t4)} exec2=${ms(t4, t5)} " +
-          f"hyg1=${ms(t5, t6)} total=${ms(t0, t6)} ms")
+        val total = System.nanoTime() - t0
+        println(f"PHASES $n%-28s build=${ms(t(1) - t(0))} plan=${ms(t(2) - t(1))} " +
+          f"exec1=${ms(t(3) - t(2))} exec2=${ms(t(4) - t(3))} " +
+          f"hyg=${ms(total - (t(4) - t(0)))} total=${ms(total)} ms")
       } else if (explain) {
         val df = SparkEntry.queries(n)(spark, d)
         println(s"===== $n =====")

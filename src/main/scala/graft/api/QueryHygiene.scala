@@ -33,12 +33,6 @@ object QueryHygiene {
     * follows the cache, not whichever query happened to build it. */
   private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
-  /** Pin check for harnesses that replicate the sweep (graft.Profile's
-    * --phases mode): a checkpointed shared cache has no lineage left, so
-    * sweeping it does not just cost a rebuild — it breaks every later
-    * consumer. */
-  private[graft] def isPinned(id: Int): Boolean = pinned.contains(id)
-
   /** Run a shared-cache build and pin every RDD it persisted. The build
     * must materialize (or at least mark) its persistence inside `body` —
     * `persist()` registers the id immediately; `localCheckpoint()` is

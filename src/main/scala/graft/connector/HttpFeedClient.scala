@@ -316,24 +316,6 @@ object HttpFeedClient {
       case scala.util.control.NonFatal(_) => false
     }
 
-  /** Detect AND validate a feed's sequence-prefix id scheme from one
-    * already-fetched page (`README.md:159`): both the page's first and
-    * last id must parse with the same pad width (a feed is one totally-
-    * ordered id stream, `README.md:9`, so one scheme governs the whole
-    * feed), and [[validateSeqCursor]] must confirm — with one extra
-    * request — that the server resolves synthesized cursors positionally.
-    * Returns (width, lastSeqOnPage); None sends the caller to the
-    * histogram-walk plan. */
-  private[graft] def detectSeqScheme(url: String, page: Page,
-                                         auth: Option[String]): Option[(Int, Long)] =
-    for {
-      firstEvent <- page.events.headOption
-      (_, w1) <- parseSeqId(firstEvent.get("id").asText())
-      lastId <- page.lastId
-      (s2, w2) <- parseSeqId(lastId)
-      if w1 == w2 && validateSeqCursor(url, s2, w2, auth)
-    } yield (w2, s2)
-
   /** The density sample a fetched page yields for free: its first and last
     * sequence and its event count. None for an empty page or ids that do
     * not parse as sequence-prefixed. */
@@ -350,31 +332,23 @@ object HttpFeedClient {
     * predicate is true there), and the caller must have validated the
     * server's positional cursor semantics ([[validateSeqCursor]]) — on a
     * seq-parsing server the predicate is off by one and the probe would
-    * land one below the head. Returns the head's sequence WITHOUT paging
-    * the feed — the replacement for the O(feed) [[drainPageHistogram]]
-    * walk when ids carry the spec's sequence prefix (`README.md:159`).
-    * A concurrent append can land between probes; any pin the search
-    * settles on is a consistent bounded-replay snapshot (the same
-    * guarantee the serial walk gives — its head is equally a moment in
-    * time). */
-  def probeHeadSeq(url: String, knownSeq: Long, width: Int,
-                   auth: Option[String] = None): Long =
-    probeHeadSeqSampled(url, knownSeq, width, auth)._1
-
-  /** [[probeHeadSeq]] with a coarser stop, plus what its probe pages yield
-    * for free. With `span` = s > 1 the gallop's first stride is s (the
-    * sequence span of a page the caller already holds, so the search
-    * starts about one page ahead instead of one sequence ahead) and the
-    * bisection stops once the bracket is within s — the caller pages the
-    * last stretch to the real head id anyway. Returns (lo, loId,
-    * samples): `lo` ≤ headSeq < lo + s (exactly the head when s = 1),
-    * `loId` the last real id of the last non-empty probe page (None if
-    * every probe was empty), and one density sample per non-empty probe
-    * page. The gallop's geometric stride samples the whole backlog and the
-    * bisection concentrates near the head, so the samples double as a
-    * zero-extra-request gap detector for the balance refinement
-    * ([[HttpFeedBackfill.densityQuantileBounds]]). */
-  private[graft] def probeHeadSeqSampled(url: String, knownSeq: Long, width: Int,
+    * land one below the head. Finds the head WITHOUT paging the feed. A
+    * concurrent append can land between probes; any pin the search
+    * settles on is a consistent bounded-replay snapshot (a serial walk's
+    * head is equally a moment in time).
+    *
+    * With `span` = s > 1 the gallop's first stride is s (the sequence
+    * span of a page the caller already holds, so the search starts about
+    * one page ahead instead of one sequence ahead) and the bisection stops
+    * once the bracket is within s — the caller pages the last stretch to
+    * the real head id anyway. Returns (lo, loId, samples): `lo` ≤ headSeq
+    * < lo + s (exactly the head when s = 1), `loId` the last real id of
+    * the last non-empty probe page (None if every probe was empty), and
+    * one density sample per non-empty probe page. The gallop's geometric
+    * stride samples the whole backlog and the bisection concentrates near
+    * the head, so the samples double as a zero-extra-request gap detector
+    * for the balance refinement ([[HttpFeedBackfill.densityQuantileBounds]]). */
+  private[graft] def probeHeadSeq(url: String, knownSeq: Long, width: Int,
       auth: Option[String] = None,
       span: Long = 1L): (Long, Option[String], IndexedSeq[SeqSample]) = {
     val samples = new ArrayBuffer[SeqSample]()
@@ -438,9 +412,7 @@ object HttpFeedClient {
                                        pages: IndexedSeq[(String, Int)])
 
   /** Pages read serially before [[resolveHead]] switches to the seq
-    * probe: a range of up to this many pages ends at the empty page and
-    * costs exactly what [[drainHead]] costs, so steady-state micro-batches
-    * and small replays pay nothing for the probe. */
+    * probe. */
   private val SerialPages = 2
 
   /** Head resolution for every unlimited bounded read — the batch plan at
@@ -448,50 +420,59 @@ object HttpFeedClient {
     *
     *  1. page serially from `fromId` (only the first request long-polls
     *     `timeoutMs`, so an idle feed blocks at most that long); a range
-    *     of ≤ [[SerialPages]] pages ends here;
-    *  2. on a longer range whose ids carry the validated sequence prefix
-    *     ([[detectSeqScheme]]: scheme detect plus one positional-cursor
-    *     probe), gallop+bisect to the head in O(log feed) requests
-    *     ([[probeHeadSeqSampled]], seeded with the sequence span of the
-    *     page in hand), then page from the last real id the probe saw to
-    *     the real head id. The driver never walks the range, so a single
-    *     read partition fetches each page once;
-    *  3. opaque/UUIDv6 ids or a seq-parsing server: keep walking serially,
-    *     recording the page histogram the fan-out splits on.
+    *     of ≤ [[SerialPages]] pages ends here, at what [[drainHead]]
+    *     costs, so steady-state micro-batches pay nothing more;
+    *  2. on a longer range whose ids carry the sequence prefix with one pad
+    *     width, check with one request that the server resolves made-up
+    *     cursors positionally ([[validateSeqCursor]]), gallop+bisect to the
+    *     head in O(log feed) requests ([[probeHeadSeq]], seeded with the
+    *     sequence span of the page in hand), then page from the last real
+    *     id the probe saw to the real head id. The driver never walks the
+    *     range, so a single read partition fetches each page once, and a
+    *     consumer resuming after downtime finds the head of its backlog in
+    *     O(log backlog) requests;
+    *  3. opaque/UUIDv6 ids or a seq-parsing server: keep walking serially
+    *     to the empty page, recording the page histogram the fan-out
+    *     splits on (free — finding the head takes those requests anyway,
+    *     the protocol has no head endpoint, `README.md:79-82`).
     *
     * Returns a REAL event id, never a synthesized cursor, so checkpointed
-    * offsets stay ordinary ids. The serial pages go through
+    * offsets stay ordinary ids. The first SerialPages + 1 pages go through
     * [[sharedCache]]: a reader starting at `fromId` gets the cacheable
     * ones back without a round trip. */
   private[graft] def resolveHead(url: String, fromId: String, timeoutMs: Long,
                                  auth: Option[String] = None): Head = {
     val pages = new ArrayBuffer[(String, Int)]()
     val samples = new ArrayBuffer[SeqSample]()
-    def next(cursor: String, timeout: Long): Page =
-      fetchPage(url, cursor, timeout, auth, cache = Some(sharedCache))
-    def record(p: Page): Unit = {
-      pages += p.lastId.get -> p.events.length
-      seqSample(p).foreach(samples += _)
+    // the page after the last one recorded, recorded in turn
+    def next(): Page = {
+      val page = fetchPage(url, pages.lastOption.fold(fromId)(_._1),
+        if (pages.isEmpty) timeoutMs else 0, auth,
+        cache = Some(sharedCache).filter(_ => pages.length <= SerialPages))
+      if (!page.isEmpty) {
+        pages += page.lastId.get -> page.events.length
+        seqSample(page).foreach(samples += _)
+      }
+      page
     }
-    var page = next(fromId, timeoutMs)
+    var page = next()
     val firstId = page.events.headOption.map(_.get("id").asText())
-    while (!page.isEmpty && pages.length < SerialPages) {
-      record(page)
-      page = next(pages.last._1, 0)
-    }
+    while (!page.isEmpty && pages.length <= SerialPages) page = next()
     if (page.isEmpty)
       return Head(pages.lastOption.fold(fromId)(_._1), None, pages.toIndexedSeq)
-    record(page)
+    // a feed is one totally ordered id stream (`README.md:9`), so one
+    // scheme governs it: the range's first id and the page in hand must
+    // parse with one pad width
     val scheme = for {
       (firstSeq, w) <- firstId.flatMap(parseSeqId)
-      (pw, lastSeq) <- detectSeqScheme(url, page, auth)
-      if pw == w
+      (_, w1) <- parseSeqId(page.events.head.get("id").asText())
+      (lastSeq, w2) <- parseSeqId(pages.last._1)
+      if w1 == w2 && validateSeqCursor(url, lastSeq, w2, auth) && w2 == w
     } yield (w, firstSeq, lastSeq)
     scheme match {
       case Some((w, firstSeq, lastSeq)) =>
         val span = seqSample(page).fold(1L)(s => s.seqLast - s.seqFirst + 1)
-        val (lo, loId, probeSamples) =
-          probeHeadSeqSampled(url, lastSeq, w, auth, span)
+        val (lo, loId, probeSamples) = probeHeadSeq(url, lastSeq, w, auth, span)
         // lo ≤ head < lo + span: page from the last real id seen to the
         // real head id (usually just the empty-page confirm). A compaction
         // racing the probe can only make this a lower bound of the head,
@@ -501,44 +482,8 @@ object HttpFeedClient {
         Head(headId, Some(SeqHead(w, firstSeq, headSeq, (samples ++ probeSamples).toIndexedSeq)),
           IndexedSeq.empty)
       case None =>
-        val all = pages ++ drainPageHistogram(url, pages.last._1, 0, auth = auth)
-        Head(all.last._1, None, all.toIndexedSeq)
+        while (!page.isEmpty && pages.length < 100000) page = next()
+        Head(pages.last._1, None, pages.toIndexedSeq)
     }
-  }
-
-  /** The head id after `fromId` for a micro-batch's `latestOffset`
-    * ([[resolveHead]]): steady state costs what [[drainHead]] costs (one
-    * long-poll page + one empty-page confirm), and a consumer resuming
-    * after downtime finds the head of its backlog in O(log backlog)
-    * requests on a seq-prefixed feed instead of serially paging the whole
-    * backlog through the driver. */
-  def probeHead(url: String, fromId: String, timeoutMs: Long,
-                auth: Option[String] = None): String =
-    resolveHead(url, fromId, timeoutMs, auth).id
-
-  /** Planning walk for a parallel backfill: the same drain-to-head loop as
-    * [[drainHead]], but recording each page's (lastId, eventCount) — the
-    * page histogram an equi-depth partition planner needs (the
-    * `feed_backfill_partition_plan` operator's input, derived from the
-    * live feed instead of a parquet mirror). Costs nothing extra: finding
-    * the head ALREADY requires paging the whole range (the protocol has no
-    * head endpoint, `README.md:79-82`), so the split points ride along on
-    * the walk the planner was paying for anyway. Used as the FALLBACK for
-    * opaque/UUIDv6 ids; sequence-prefixed feeds find the head in
-    * O(log feed) requests via [[resolveHead]] instead. */
-  def drainPageHistogram(url: String, fromId: String, timeoutMs: Long,
-                         maxPages: Int = 100000,
-                         auth: Option[String] = None): IndexedSeq[(String, Int)] = {
-    val hist = new ArrayBuffer[(String, Int)]()
-    var cursor = fromId
-    var first = true
-    while (hist.length < maxPages) {
-      val page = fetchPage(url, cursor, if (first) timeoutMs else 0, auth)
-      first = false
-      if (page.isEmpty) return hist.toIndexedSeq
-      cursor = page.lastId.getOrElse(return hist.toIndexedSeq)
-      hist += cursor -> page.events.length
-    }
-    hist.toIndexedSeq
   }
 }

@@ -29,8 +29,10 @@ import graft.udf.CloudEventsParse
   *    the checkpoint WAL is the durable cursor the spec mandates
   *    (`README.md:111`).
   *  - `latestOffset` performs the polling loop: long-poll GET with the
-  *    `timeout` param (`README.md:126`, :298-301), then page to the head
-  *    (empty array = end of feed, `README.md:79-82`).
+  *    `timeout` param (`README.md:126`, :298-301), then find the head
+  *    ([[HttpFeedClient.resolveHead]]): a page or two to the empty array
+  *    (end of feed, `README.md:79-82`) in steady state, an O(log backlog)
+  *    seq probe after downtime on a seq-prefixed feed.
   *  - each micro-batch binds the half-open id range (start, end]; the
   *    executor re-fetches those pages — deterministic for a fixed cursor
   *    (`README.md:332`), so ranges are replayable and the spec's
@@ -39,10 +41,11 @@ import graft.udf.CloudEventsParse
   *  - a micro-batch is ONE ordered InputPartition unless a pinned
   *    Trigger.AvailableNow backlog is fanned out (`backfillPartitions`).
   *    Steady-state micro-batches are a page or two and read serially.
-  *    A pinned AvailableNow range on a validated seq-prefixed feed, like
-  *    a bounded batch read, keeps up to four chunks of its range in
-  *    flight inside each partition ([[HttpFeedPartitionReader]]) and
-  *    still emits in id order.
+  *    A pinned AvailableNow range plans exactly as a bounded batch read of
+  *    the same range ([[HttpFeedBackfill.partitions]]): the same split,
+  *    density-probed boundaries on a gappy seq feed included, and on a
+  *    validated seq-prefixed feed up to four chunks of each partition in
+  *    flight ([[HttpFeedPartitionReader]]), still emitted in id order.
   *    Parallelism across keys comes after ingestion, by repartitioning on
   *    `subject` (SURVEY.md §3.2) — except under a session built with
   *    [[graft.catalyst.GraftExtensions]], where a bounded batch read
@@ -56,11 +59,11 @@ import graft.udf.CloudEventsParse
   * ([[HttpFeedClient.resolveHead]] — O(log feed) seq probes on
   * sequence-prefixed ids, a serial walk only for opaque ids or a pushed
   * LIMIT's page budget), read (start, head] as one partition — or, with
-  * `backfillPartitions=N`, as N cursor-range partitions (the
-  * `feed_backfill_partition_plan` split wired into the source; ranges are
-  * replayable by the `lastEventId` contract, `README.md:150-159`), so the
-  * initial full-history replay scales out instead of serializing through
-  * one task.
+  * `backfillPartitions=N`, as N cursor-range partitions
+  * ([[HttpFeedBackfill.partitions]]; ranges are replayable by the
+  * `lastEventId` contract, `README.md:150-159`), so the initial
+  * full-history replay scales out instead of serializing through one
+  * task.
   */
 class HttpFeedProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "http-feed"
@@ -76,23 +79,30 @@ class HttpFeedProvider extends TableProvider with DataSourceRegister {
         p <- Option(opts.get("basicPass"))
       } yield "Basic " + java.util.Base64.getEncoder
         .encodeToString(s"$u:$p".getBytes("UTF-8")))
+    // a numeric option's value, or its default; a value that does not
+    // parse or breaks its rule fails here, naming the option
+    def number[T](key: String, default: T, parse: String => T)(ok: T => Boolean, rule: String): T =
+      Option(opts.get(key)).fold(default) { v =>
+        scala.util.Try(parse(v)).toOption.filter(ok).getOrElse(throw new IllegalArgumentException(
+          s"http-feed option '$key' must be $rule, got '$v'"))
+      }
     new HttpFeedTable(HttpFeedOptions(
       url = Option(opts.get("url"))
         .getOrElse(throw new IllegalArgumentException("http-feed requires option 'url'")),
-      timeoutMs = Option(opts.get("timeoutMs")).map(_.toLong).getOrElse(5000L),
+      timeoutMs = number("timeoutMs", 5000L, _.toLong)(_ >= 0, "an integer ≥ 0"),
       startId = Option(opts.get("startId")).getOrElse(""),
       auth = auth,
-      backfillPartitions =
-        Option(opts.get("backfillPartitions")).map(_.toInt).getOrElse(1)))
+      backfillPartitions = number("backfillPartitions", 1, _.toInt)(_ >= 1, "an integer ≥ 1")))
   }
 }
 
 case class HttpFeedOptions(url: String, timeoutMs: Long, startId: String,
                            auth: Option[String] = None,
-                           /** Bounded-replay (batch) fan-out: split the
-                             * (startId, head] range into this many
-                             * equi-depth cursor-range InputPartitions.
-                             * 1 = the ordered single-partition read. */
+                           /** Bounded-replay fan-out (a batch read or a
+                             * pinned AvailableNow backlog): split the
+                             * range into this many cursor-range
+                             * InputPartitions. 1 = the ordered
+                             * single-partition read. */
                            backfillPartitions: Int = 1)
 
 class HttpFeedTable(opts: HttpFeedOptions) extends Table with SupportsRead {
@@ -208,83 +218,33 @@ class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
     * semantics — so the pin is the bounded batch read's head resolution
     * ([[HttpFeedClient.resolveHead]]; its first request long-polls, so an
     * idle feed waits up to timeoutMs for data before pinning an empty
-    * range). On validated seq-prefixed ids it costs O(log feed) requests
-    * and the fan-out later splits any (s, e] by sequence arithmetic alone;
-    * otherwise the serial walk's page histogram (free — same requests
-    * either way) lets a `backfillPartitions=N` replay fan the pinned
-    * backlog out the same way the bounded batch read does. */
+    * range). On validated seq-prefixed ids it costs O(log feed) requests;
+    * otherwise the serial walk records the page histogram. Either way a
+    * `backfillPartitions=N` replay fans the pinned backlog out with the
+    * bounded batch read's own plan ([[HttpFeedBackfill.partitions]]). */
   override def prepareForTriggerAvailableNow(): Unit =
     availableNow = Some(HttpFeedClient.resolveHead(opts.url, opts.startId,
       opts.timeoutMs, opts.auth))
 
-  /** Steady state: one long-poll page + one empty-page confirm. Catch-up
-    * after downtime (a backlog past [[HttpFeedClient.resolveHead]]'s
-    * serial-page budget) switches to the O(log backlog) synthesized-cursor
-    * probe on validated seq feeds instead of serially paging the whole
-    * backlog through the driver. */
+  /** The pin, else the head after `start` ([[HttpFeedClient.resolveHead]]):
+    * steady state is one long-poll page + one empty-page confirm, and
+    * catch-up after downtime finds the head of a seq-prefixed backlog in
+    * O(log backlog) requests. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
     HttpFeedOffset(availableNow.fold {
       val from = start.asInstanceOf[HttpFeedOffset].lastEventId
-      HttpFeedClient.probeHead(opts.url, from, opts.timeoutMs, auth = opts.auth)
+      HttpFeedClient.resolveHead(opts.url, from, opts.timeoutMs, opts.auth).id
     }(_.id))
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[HttpFeedOffset].lastEventId
-    val e = end.asInstanceOf[HttpFeedOffset].lastEventId
-    if (s == e) Array.empty
-    else {
-      // Opt-in fan-out of a pinned AvailableNow backlog. Steady-state
-      // micro-batches — and consumers that kept the default — stay ONE
-      // ordered partition; fanning out trades intra-batch arrival order
-      // for parallelism, which stateful downstreams (that repartition by
-      // key) never observed anyway.
-      //
-      // Coverage guard (both strategies): fan out ONLY when the plan can
-      // end EXACTLY at `e`. A checkpointed (s, e] written by a DIFFERENT
-      // run (e.g. a ProcessingTime run restarted as AvailableNow, or a
-      // server pageSize change between runs) can put `e` outside this
-      // run's pinned plan — a fan-out ending short of `e` would silently
-      // drop rows the WAL already records as consumed. The single-
-      // partition fallback reads exactly (s, e] regardless, so
-      // exactly-once survives any checkpoint/plan mismatch.
-      //
-      // Seq strategy: `e` must BE this run's pinned end (then sequence
-      // arithmetic splits (s, e] with no further requests; the final
-      // partition ends at `e` itself by construction). Histogram
-      // strategy: the page slice's last boundary must be `e` (batch
-      // bounds are page-aligned by construction, so the slice is exact).
-      val seqFan: Option[Array[InputPartition]] =
-        if (opts.backfillPartitions > 1)
-          availableNow.filter(_.id == e).flatMap(_.seq).flatMap { pin =>
-            val w = pin.width
-            val lo = if (s.isEmpty) Some(pin.firstSeq - 1)
-                     else HttpFeedBackfill.seqBoundOf(s, w)
-            val hi = HttpFeedBackfill.seqBoundOf(e, w)
-            for { l <- lo; h <- hi; if h > l } yield
-              HttpFeedBackfill.seqRangePartitions(opts, s, e,
-                HttpFeedBackfill.uniformSeqBounds(l, h, opts.backfillPartitions), w)
-          }
-        else None
-      seqFan.getOrElse {
-        val slice =
-          if (opts.backfillPartitions > 1)
-            availableNow.fold(IndexedSeq.empty[(String, Int)])(_.pages)
-              .filter(p => p._1 > s && p._1 <= e)
-          else IndexedSeq.empty
-        if (slice.nonEmpty && slice.last._1 == e)
-          HttpFeedBackfill.equiDepthPartitions(opts, s, slice)
-        else
-          // the pin's validated seq scheme lets the one reader read ahead;
-          // a range ending anywhere else (ProcessingTime batches, a foreign
-          // checkpoint end) reads serially
-          Array(HttpFeedInputPartition(opts.url, s, e, auth = opts.auth,
-            seqWidth = availableNow.filter(_.id == e).flatMap(_.seq).map(_.width)))
-      }
-    }
-  }
+  /** A pinned AvailableNow range plans as a bounded batch read of the same
+    * range would ([[HttpFeedBackfill.partitions]]); a ProcessingTime
+    * micro-batch has no pin and reads serially as one partition. */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    HttpFeedBackfill.partitions(opts, start.asInstanceOf[HttpFeedOffset].lastEventId,
+      end.asInstanceOf[HttpFeedOffset].lastEventId, availableNow)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new HttpFeedReaderFactory
@@ -307,22 +267,8 @@ class HttpFeedBatch(opts: HttpFeedOptions, limit: Option[Int] = None) extends Ba
     * and its page budget: the head walk stops after `limit` events, which
     * caps planning-time round-trips, and a global row limit over a
     * fan-out would admit rows from the wrong end of the order. Every other
-    * read finds the head with [[HttpFeedClient.resolveHead]] and, with
-    * `backfillPartitions=N`, splits (startId, head] by the strategy that
-    * found it (the spec blesses both id schemes, `README.md:156-159`):
-    *
-    *  1. **Sequence-prefixed ids — O(log feed) plan.** Seq prefixes are
-    *     positionally interpretable (`README.md:159`) and the server must
-    *     honor cursors for ABSENT ids (`README.md:153-154`), so the head
-    *     is found by binary-searching synthesized `lpad(seq)::` cursors
-    *     and (start, head] splits by sequence arithmetic
-    *     ([[HttpFeedBackfill.seqSplitBounds]]) — no walk on the driver,
-    *     whatever N is, so a single-partition read fetches each page once.
-    *  2. **Opaque/UUIDv6 ids, a seq-parsing server, or a range of at most
-    *     two pages — histogram split.** The serial walk that found the
-    *     head recorded the page histogram (free — same requests either
-    *     way) and [[HttpFeedBackfill.equiDepthPartitions]] emits
-    *     page-aligned ranges. */
+    * read finds the head with [[HttpFeedClient.resolveHead]] and splits
+    * (startId, head] with [[HttpFeedBackfill.partitions]]. */
   private def plan(): Array[InputPartition] = limit match {
     case Some(l) =>
       val head = HttpFeedClient.drainHead(opts.url, opts.startId, 0,
@@ -331,42 +277,73 @@ class HttpFeedBatch(opts: HttpFeedOptions, limit: Option[Int] = None) extends Ba
       else Array(HttpFeedInputPartition(opts.url, opts.startId, head, limit, opts.auth))
     case None =>
       val head = HttpFeedClient.resolveHead(opts.url, opts.startId, 0, opts.auth)
-      if (head.id == opts.startId) Array.empty
-      else if (opts.backfillPartitions <= 1)
-        Array(HttpFeedInputPartition(opts.url, opts.startId, head.id, auth = opts.auth,
-          seqWidth = head.seq.map(_.width)))
-      else head.seq match {
-        case Some(s) =>
-          // Sequences may have gaps (a DB sequence is monotonic, not
-          // dense), so equi-WIDTH seq ranges approximate equi-DEPTH row
-          // buckets; each range is exact in COVERAGE (the union telescopes
-          // to (startId, headId]) and only approximate in balance, which
-          // the density refinement repairs on heavily-compacted feeds at
-          // O(N) extra requests — still no O(feed) walk.
-          val bounds = HttpFeedBackfill.seqSplitBounds(opts, s.firstSeq - 1,
-            s.headSeq, s.width, s.samples)
-          HttpFeedBackfill.seqRangePartitions(opts, opts.startId, head.id, bounds, s.width)
-        case None =>
-          HttpFeedBackfill.equiDepthPartitions(opts, opts.startId, head.pages)
-      }
+      HttpFeedBackfill.partitions(opts, opts.startId, head.id, Some(head))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new HttpFeedReaderFactory
 }
 
-/** Shared equi-depth range splitter for bounded replays (batch `spark.read`
-  * AND a pinned Trigger.AvailableNow backlog): assigns page `j` with
-  * cumulative-before count `cumb` to bucket `cumb·N div total` — the
-  * `feed_backfill_partition_plan` operator's exact formula — and emits one
-  * (startId, endId] InputPartition per non-empty bucket. Ranges are
-  * page-aligned (a page is never split) and replayable by the spec's own
-  * `lastEventId` contract (`README.md:150-159`): each executor re-pages
-  * its range independently, so the initial 100 TB replay — the longest
-  * job this source ever runs — scales by N instead of serializing through
-  * one task. Rows arrive partition-ordered, not globally ordered; a
-  * consumer needing the feed's total order sorts by id, which at this
-  * scale it had to do anyway after any shuffle. */
+/** The partition planner of bounded ranges: a batch `spark.read` and a
+  * pinned Trigger.AvailableNow backlog both plan through [[partitions]].
+  * Ranges are replayable by the spec's own `lastEventId` contract
+  * (`README.md:150-159`): each executor re-pages its range independently,
+  * so the initial 100 TB replay — the longest job this source ever runs —
+  * scales by N instead of serializing through one task. Rows arrive
+  * partition-ordered, not globally ordered; a consumer needing the feed's
+  * total order sorts by id, which at this scale it had to do anyway after
+  * any shuffle. */
 private[graft] object HttpFeedBackfill {
+
+  /** The one plan of a bounded range (s, e] — a batch read's (startId,
+    * head] and an AvailableNow batch alike, so both split a range the same
+    * way and a replayed range plans the same partitions. `head` is the
+    * [[HttpFeedClient.resolveHead]] result that pinned the range; None
+    * (a ProcessingTime micro-batch) reads serially as one partition.
+    * Fanning out trades arrival order within the range for parallelism,
+    * which downstreams that repartition by key never observed anyway.
+    *
+    * Coverage guard: a range fans out ONLY when it ends exactly at the
+    * head, `head.id == e`. A checkpointed (s, e] written by a DIFFERENT
+    * run (a ProcessingTime run restarted as AvailableNow, a server
+    * pageSize change between runs) can put `e` outside this run's pin — a
+    * fan-out ending short of `e` would silently drop rows the WAL already
+    * records as consumed. The single partition reads exactly (s, e]
+    * regardless, and reads ahead when the head validated the seq scheme.
+    *
+    * With `backfillPartitions = N > 1` a guarded range splits by the
+    * strategy that found the head (the spec blesses both id schemes,
+    * `README.md:156-159`):
+    *
+    *  1. **Sequence-prefixed ids.** Seq prefixes are positionally
+    *     interpretable (`README.md:159`) and the server must honor cursors
+    *     for ABSENT ids (`README.md:153-154`), so (s, e] splits by sequence
+    *     arithmetic ([[seqSplitBounds]]), with no walk on the driver. The
+    *     split starts below the head's first sequence when `s` is the
+    *     read's startId, else at `s`'s own sequence ([[seqBoundOf]]).
+    *  2. **Opaque/UUIDv6 ids, a seq-parsing server, or a range of at most
+    *     two pages.** The serial walk that found the head recorded the
+    *     page histogram; its slice over (s, e] is page-aligned and ends at
+    *     `e`, and [[equiDepthPartitions]] splits it. */
+  def partitions(opts: HttpFeedOptions, s: String, e: String,
+                 head: Option[HttpFeedClient.Head]): Array[InputPartition] = {
+    val pin = head.filter(_.id == e)
+    def single: Array[InputPartition] = Array(HttpFeedInputPartition(opts.url, s, e,
+      auth = opts.auth, seqWidth = pin.flatMap(_.seq).map(_.width)))
+    if (s == e) Array.empty
+    else if (opts.backfillPartitions <= 1) single
+    else pin.flatMap { h =>
+      h.seq match {
+        case Some(q) =>
+          val lo = if (s == opts.startId) Some(q.firstSeq - 1) else seqBoundOf(s, q.width)
+          lo.filter(_ < q.headSeq).map(l => seqRangePartitions(opts, s, e,
+            seqSplitBounds(opts, l, q.headSeq, q.width, q.samples), q.width))
+        case None =>
+          Some(h.pages.filter(p => p._1 > s && p._1 <= e))
+            .filter(_.lastOption.exists(_._1 == e))
+            .map(equiDepthPartitions(opts, s, _))
+      }
+    }.getOrElse(single)
+  }
 
   /** Sequence covered through-and-including by an offset id under the seq
     * scheme: a real id `lpad(k)::suffix` covers through k; a synthesized
@@ -504,6 +481,11 @@ private[graft] object HttpFeedBackfill {
     }.toArray
   }
 
+  /** Equi-depth split of a page histogram: assigns page `j` with
+    * cumulative-before count `cumb` to bucket `cumb·N div total` — the
+    * `feed_backfill_partition_plan` operator's exact formula — and emits
+    * one (startId, endId] partition per non-empty bucket. Ranges are
+    * page-aligned: a page is never split. */
   def equiDepthPartitions(opts: HttpFeedOptions, startId: String,
                           pages: IndexedSeq[(String, Int)]): Array[InputPartition] = {
     val total = pages.iterator.map(_._2.toLong).sum

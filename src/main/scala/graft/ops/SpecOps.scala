@@ -195,7 +195,7 @@ object SpecOps {
     // (bounded: |feed| / page size rows), never event rows — the 2-pass
     // global-rank discipline.
     // Sequence-arithmetic backfill split (round 15; the O(log feed)
-    // planner of `HttpFeedBatch.planSeqSplit` as a relational operator):
+    // planner of `HttpFeedBackfill.partitions` as a relational operator):
     // for sequence-prefixed ids (README.md:159) the N=8 partition bounds
     // need only min/max — bound(i) = lo + span·i div 8 — NO page
     // histogram, no pass over the id space. The query then AUDITS the

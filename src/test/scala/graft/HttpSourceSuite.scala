@@ -207,7 +207,7 @@ class HttpSourceSuite extends AnyFunSuite {
       // and a probe STRICTLY past the head returns the empty page
       assert(HttpFeedClient.fetchPage(server.url, SeqId.encodeFn(41L, ""), 0).isEmpty)
       // the head-seq binary search lands exactly on the last sequence
-      assert(HttpFeedClient.probeHeadSeq(server.url, 1L, SeqId.Width) === 40L)
+      assert(HttpFeedClient.probeHeadSeq(server.url, 1L, SeqId.Width)._1 === 40L)
     } finally server.stop()
   }
 
@@ -1123,6 +1123,60 @@ class HttpSourceSuite extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("a batch read and the AvailableNow pin of the same range plan the same partitions") {
+    import graft.connector.{HttpFeedBatch, HttpFeedMicroBatchStream, HttpFeedOffset, HttpFeedOptions}
+    import org.apache.spark.sql.connector.read.InputPartition
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val dense = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val feeds = Seq(
+      "dense seq" -> new TestFeedServer(dense, pageSize = 10),
+      "gappy seq" -> new TestFeedServer(gappySeqEvents, pageSize = 50),
+      "18-digit seq" -> new TestFeedServer(bigSeqEvents, pageSize = 10),
+      "UUIDv6" -> new TestFeedServer((1L to 120L).map(uuidEnvelope), pageSize = 10),
+      "seq-parsing server" -> new TestFeedServer(dense.take(120), pageSize = 10,
+        seqParsingCursors = true),
+      "2-page feed" -> new TestFeedServer(dense.take(15), pageSize = 10))
+    def ranges(parts: Array[InputPartition]) = parts.toSeq
+      .map(_.asInstanceOf[HttpFeedInputPartition]).map(p => (p.startId, p.endId, p.seqWidth))
+    try {
+      for ((name, server) <- feeds; n <- Seq(1, 4)) {
+        // a path per N keeps each pin's requests out of the other's cache
+        val opts = HttpFeedOptions(server.url + s"/n$n", 100L, "", None, n)
+        val stream = new HttpFeedMicroBatchStream(opts)
+        stream.prepareForTriggerAvailableNow()
+        val pinEnd = stream.latestOffset(HttpFeedOffset(""), ReadLimit.allAvailable())
+        val before = server.requestCount
+        val pinned = stream.planInputPartitions(HttpFeedOffset(""), pinEnd)
+        // the split itself may only pay the density grid's max(16, 2N) probes
+        assert(server.requestCount - before <= math.max(16, 2 * n), s"$name at N=$n")
+        val batch = new HttpFeedBatch(opts).planInputPartitions()
+        assert(ranges(pinned) === ranges(batch), s"$name at N=$n")
+        if (name == "gappy seq" && n == 4) {
+          val sizes = pinned.map(p => readPartition(p.asInstanceOf[HttpFeedInputPartition])._1.length)
+          assert(sizes.sum === gappySeqEvents.length)
+          assert(sizes.min > 0 && sizes.max.toDouble / sizes.min <= 1.5,
+            s"skewed buckets: ${sizes.mkString(",")}")
+        }
+      }
+    } finally feeds.foreach(_._2.stop())
+  }
+
+  test("non-numeric, backfillPartitions < 1 and negative timeoutMs options fail naming the option") {
+    val events = (1L to 25L).map(i => envelopeJson(i, s"s$i"))
+    val server = new TestFeedServer(events, pageSize = 10)
+    def load(key: String, v: String) =
+      spark.read.format("http-feed").option("url", server.url).option(key, v).load()
+    try {
+      for ((key, v) <- Seq("backfillPartitions" -> "abc", "timeoutMs" -> "5s",
+                           "backfillPartitions" -> "0", "timeoutMs" -> "-1")) {
+        val e = intercept[IllegalArgumentException](load(key, v))
+        assert(e.getMessage.contains(s"'$key'") && e.getMessage.contains(s"'$v'"), e.getMessage)
+      }
+      // timeoutMs = 0 (no long poll) stays valid
+      assert(load("timeoutMs", "0").count() === 25)
+    } finally server.stop()
+  }
+
   test("micro-batch catch-up after downtime: latestOffset probes the head in O(log backlog) requests") {
     import graft.connector.{HttpFeedMicroBatchStream, HttpFeedOffset, HttpFeedOptions}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
@@ -1231,12 +1285,12 @@ class HttpSourceSuite extends AnyFunSuite {
         // the span only coarsens the stop: the head lies in [lo, lo + span)
         val (firstSeq, _) = HttpFeedClient.parseSeqId(events.head._1).get
         val span = HttpFeedClient.parseSeqId(events(pageSize - 1)._1).get._1 - firstSeq + 1
-        val (lo, loId, _) = HttpFeedClient.probeHeadSeqSampled(server.url, firstSeq, width,
+        val (lo, loId, _) = HttpFeedClient.probeHeadSeq(server.url, firstSeq, width,
           span = span)
         assert(lo <= lastSeq && lastSeq < lo + span, s"lo=$lo span=$span head=$lastSeq")
         assert(loId.exists(id => id <= events.last._1))
         // and without a span the public probe still lands exactly on the head
-        assert(HttpFeedClient.probeHeadSeq(server.url, firstSeq, width) === lastSeq)
+        assert(HttpFeedClient.probeHeadSeq(server.url, firstSeq, width)._1 === lastSeq)
       } finally server.stop()
     }
   }
