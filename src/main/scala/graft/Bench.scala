@@ -1,7 +1,6 @@
 package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -10,56 +9,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ ts correctness (Tables.events)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: the first use of each engine subsystem in a JVM pays
-    // multi-second classloading / codegen / JIT costs that would otherwise
-    // be billed to whichever query touches it first. Exercise each once:
-    // scans+shuffles, broadcast joins, localCheckpoint, the native graft
-    // kernels, higher-order functions, and a streaming micro-batch.
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(100000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/nation.parquet")
-        .groupBy("n_regionkey").count().collect()
-      graft.catalyst.GraftExtensions.install(spark)
-      val w = spark.range(1000).toDF("id").localCheckpoint()
-      w.join(broadcast(w.select(col("id").as("j"))), col("id") === col("j"))
-        .selectExpr(
-          "bitset_intersect_count(bitset_from_ids(array(CAST(id % 64 AS INT) + 1), 1)," +
-            " bitset_from_ids(array(CAST(j % 64 AS INT) + 1), 1))",
-          "ngram_shingles('warmup text', 5)", "word_bigrams('warmup text here')",
-          "vec_dot(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))",
-          "vec_sqdist(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))",
-          "aggregate(sequence(1, 3), 0L, (a, x) -> a + x)")
-        .collect()
-      graft.streaming.StreamOps.warmup(spark)
-    } catch { case _: Throwable => () }
+    val spark = Harness.session(4)
+    Harness.warmup(spark, sfDir)
     // verifyOnly keys are forced-strategy duplicates for the oracle gate;
     // their semantics are already timed under their canonical key.
-    // Sorted name order: deterministic run-to-run attribution (a Map's
-    // hash order reshuffles whenever a key is added, silently moving
-    // first-touch costs between queries) and family locality — the six
-    // graph_* queries run consecutively, so their shared edge /
-    // common-neighbor caches stay hot instead of sitting in the block
-    // manager across ~100 unrelated queries.
     // Optional local-iteration filter (comma-separated keys or prefixes
     // ending in '*'); the driver never sets it, so the contract run is
     // always the full sorted sweep.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(ks) => (SparkEntry.queries -- SparkEntry.verifyOnly).filter {
-        case (n, _) => ks.exists(k =>
-          if (k.endsWith("*")) n.startsWith(k.dropRight(1)) else n == k)
-      }
-      case None => SparkEntry.queries -- SparkEntry.verifyOnly
-    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(","))
+    val queries = SparkEntry.queries -- SparkEntry.verifyOnly
+    val selected = Harness.select(queries.keys, only)
     // One-time SHARED cache/fixture builds, forced up front and billed as
     // explicit `_build_*` lines: otherwise their cost lands on whichever
     // query happens to run first in sorted order, and per-query numbers
@@ -105,8 +64,8 @@ object Bench {
     val buildResults = builds
       .filter { case (_, prefixes, _) =>
         only.isEmpty || (prefixes.nonEmpty && prefixes.split(",").exists(p =>
-          if (p.endsWith("_")) selected.keys.exists(_.startsWith(p))
-          else selected.keys.exists(_ == p))) }
+          if (p.endsWith("_")) selected.exists(_.startsWith(p))
+          else selected.contains(p))) }
       .map { case (name, _, body) =>
         val t0 = System.nanoTime()
         val ok = try { body(); true }
@@ -146,11 +105,10 @@ object Bench {
     if (canaryOn) { runCanaries(); canarySamples.clear() } // untimed warm of the probe paths
     runCanaries()
     var sinceCanary = 0
-    val results = buildResults ++ selected
-      .toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = buildResults ++ selected.map { name =>
       val t0 = System.nanoTime()
       val ok = try {
-        graft.api.QueryHygiene.run(spark, name)(fn(spark, sfDir).count()); true
+        graft.api.QueryHygiene.run(spark, name)(queries(name)(spark, sfDir).count()); true
       } catch { case e: Throwable => System.err.println(s"BENCH_FAIL $name: $e"); false }
       // Stop the clock BEFORE the canary probes run: evaluating the elapsed
       // time after runCanaries() billed each ~0.9 s probe set to whichever

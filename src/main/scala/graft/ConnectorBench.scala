@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.connector.{HttpFeedClient, TestFeedServer}
 import graft.udf.SeqId
@@ -41,13 +40,7 @@ object ConnectorBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8)
 
     val nEvents = sys.env.getOrElse("GRAFT_CONNBENCH_EVENTS", "100000").toInt
     val events = mkEvents(nEvents)

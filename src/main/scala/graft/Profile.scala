@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer harness (not part of the library surface): time individual
-  * queries or dump their physical plans outside the full Bench run.
+  * queries or dump their physical plans outside the full Bench run, on
+  * the same session Bench and Verify build ([[Harness.session]], graft
+  * extension and rules installed).
   *
   *   sbt "runMain graft.Profile q1 q2"            # per-query wall time
   *   sbt "runMain graft.Profile --explain q1 q2"  # physical plans
+  *   sbt "runMain graft.Profile --explainf q1"    # formatted plans
+  *   sbt "runMain graft.Profile --phases q1 q2"   # build/plan/exec/hygiene split
   *
   * Data dir via SPARK_GRAFT_SF_DIR (defaults to sf0.1 for timing; use
   * sf0.01 for plan dumps to match docs/PLANS.md). Cores and shuffle
-  * partitions via SPARK_GRAFT_CPUS (default 32).
+  * partitions via SPARK_GRAFT_CPUS (default 32). Timing runs are preceded
+  * by Bench's warm-up ([[Harness.warmup]]); plan dumps skip it.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -23,16 +26,8 @@ object Profile {
     val formatted = args.headOption.contains("--explainf")
     val names = (if (explain || phases) args.drop(1) else args).toSeq
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ ts correctness (Tables.events)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel(if (explain) "ERROR" else "WARN")
-    if (!explain) {
-      spark.range(100000).selectExpr("sum(id)").collect() // warmup
-      graft.streaming.StreamOps.warmup(spark)
-    }
+    val spark = Harness.session(32)
+    if (!explain) Harness.warmup(spark, d)
     names.foreach { n =>
       if (phases) {
         // Split one bench-shaped run (QueryHygiene.run around build+count)

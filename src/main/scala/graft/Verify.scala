@@ -1,32 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, rest @ _*) = args
-    // optional trailing args: restrict to these query names (local
-    // iteration only — the driver always passes exactly two args)
-    val only: Option[Set[String]] = if (rest.isEmpty) None else Some(rest.toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, only @ _*) = args
+    val spark = Harness.session(4)
     new java.io.File(outDir).mkdirs()
-    // sorted order + post-query block sweep: same rationale as Bench —
-    // deterministic attribution, graph-family cache locality, and no
-    // accumulation of dead localCheckpoint blocks across ~190 queries
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
+    // optional trailing args restrict the run to these keys (exact names
+    // or `prefix*`; local iteration only — the driver always passes
+    // exactly two args). Sorted order + post-query block sweep: same
+    // rationale as Bench — deterministic attribution, graph-family cache
+    // locality, and no accumulation of dead localCheckpoint blocks.
+    val queries = SparkEntry.queries
+    Harness.select(queries.keys, only).foreach { name =>
       try graft.api.QueryHygiene.run(spark, name) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -71,4 +71,22 @@ object QueryHygiene {
         .foreach(v => spark.catalog.dropTempView(v))
     }
   }
+
+  /** Run `body` with the session conf `kvs` set, then give each key back
+    * its previous value, or unset it if it was unset, even when `body`
+    * throws. Spark reads most conf when it plans or starts a query, so
+    * scope `body` to that call: a streaming query runs on a clone of the
+    * session taken in `start()`, so a pin around `start()` holds for the
+    * stream's whole life and no other query sees it. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val set = conf.getAll
+    val old = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

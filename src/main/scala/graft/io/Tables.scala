@@ -104,7 +104,6 @@ object Tables {
     * discipline (merge-order-independent aggregates, total output
     * orders), so this changes WHERE rows are computed, never what. */
   def fanOut(df: DataFrame): DataFrame = {
-    if (sys.env.getOrElse("SPARK_GRAFT_FANOUT", "1") == "0") return df
     // Guards for arbitrary caller inputs (the public Vectors/Curation
     // APIs accept any DataFrame, not just the scan-rooted ones internal
     // call sites pass):
@@ -115,9 +114,11 @@ object Tables {
     //    re-execute — no cross-query stage reuse). Scan-rooted batch
     //    plans are the only inputs where probing .rdd is free: it plans
     //    the file splits but runs no job.
-    // NOTE: the width read assumes the single-threaded fixture drivers —
-    // a batch query built concurrently with a streaming fixture would see
-    // runToMemory's temporary width-1 pin and fan out to nothing.
+    // NOTE: the width is the session's: stream fixtures pin their own
+    // width only across the stream's start() (the query keeps it on its
+    // session clone), so a batch query built while a fixture feeds fans
+    // out as it would alone. A query built on another thread inside that
+    // start() window would still read the fixture's width.
     if (df.isStreaming) return df
     val qe = df.queryExecution
     if (qe.sparkPlan.find(
@@ -126,13 +127,7 @@ object Tables {
     if (qe.optimizedPlan.stats.sizeInBytes < MinFanOutBytes) return df
     val width = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt
-    val parts = df.rdd.getNumPartitions
-    // dev-only evidence print: the post-localCheckpoint plans some call
-    // sites dump can't show whether/where the fan-out fired
-    if (sys.env.get("SPARK_GRAFT_FANOUT_DEBUG").contains("1"))
-      println(s"FANOUT parts=$parts width=$width " +
-        (if (parts < width) "-> repartition" else "-> noop"))
-    if (parts < width) df.repartition(width) else df
+    if (df.rdd.getNumPartitions < width) df.repartition(width) else df
   }
 
   /** Float canonicalization (determinism rule 1): floor(x*scale) as BIGINT.

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, TimeMode, Trigger}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.connector.{HttpFeedClient, TestFeedServer}
+import graft.api.QueryHygiene.withConf
 import graft.io.Tables
 import graft.model.CloudEvent
 
@@ -313,28 +314,18 @@ object StreamOps {
     evRowsCollected(s, d); ()
   }
 
-  /** Scope the RocksDB state-store provider (required by
-    * transformWithState) to `body`'s query, with CHANGELOG checkpointing:
-    * each micro-batch commit uploads the delta instead of a full SST
-    * snapshot — the production setting for frequent small commits, and
-    * measurably cheaper here where a 2-3-batch fixture otherwise pays a
-    * full snapshot per batch. Same save/restore discipline as the
-    * provider conf (session-global; see the NOTE on stream_readmodel_tws). */
-  private def withRocksDB[T](s: SparkSession)(body: => T): T = {
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val oldProvider = s.conf.get(pk,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    val oldChangelog = s.conf.get(ck, "false")
-    s.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(ck, "true")
-    try body
-    finally {
-      s.conf.set(pk, oldProvider)
-      s.conf.set(ck, oldChangelog)
-    }
-  }
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The RocksDB state-store provider (required by transformWithState),
+    * with CHANGELOG checkpointing: each micro-batch commit uploads the
+    * delta instead of a full SST snapshot — the production setting for
+    * frequent small commits, and measurably cheaper here where a
+    * 2-3-batch fixture otherwise pays a full snapshot per batch. Passed
+    * to [[runToMemory]], which pins it only across the stream's start. */
+  private val RocksDB = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** Run a streaming DataFrame into an in-memory sink table and return the
     * table once its contents stabilize — the stabilization loop covers the
@@ -342,28 +333,25 @@ object StreamOps {
     * after the last data batch. `feed` drives the source and may call
     * `processAllAvailable` between `addData` calls to force real
     * cross-micro-batch state transitions.
+    *
+    * The shuffle width (and `conf`) is pinned only across `start()`: the
+    * query runs on a clone of the session taken there, so the pin holds
+    * for the stream's whole life while batch queries built during `feed`
+    * see the session's own width. Stateful shuffle width is fixed in the
+    * query's offset log at start; it is sized to the fixture volume (a
+    * state-store instance per partition is pure overhead at 20k rows). A
+    * real deployment sizes spark.sql.shuffle.partitions to the cluster
+    * before starting the stream.
     */
-  /** Env-gated phase timer for the fixture-constant audit (dev only):
-    * SPARK_GRAFT_STREAM_DEBUG=1 prints where each runToMemory call's wall
-    * time goes (query start / feed+first-drain / stabilization / stop). */
-  private val streamDebug = sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1")
-
   def runToMemory(s: SparkSession, df: DataFrame, name: String,
-                  mode: OutputMode)(feed: StreamingQuery => Unit): DataFrame = {
-    // Stateful shuffle width is pinned in the query's offset log at start;
-    // size it to the fixture volume (a state-store instance per partition
-    // is pure overhead at 20k rows). A real deployment sizes
-    // spark.sql.shuffle.partitions to the cluster before starting the
-    // stream — this scopes the fixture's choice to the streaming query.
-    val old = s.conf.get("spark.sql.shuffle.partitions", "200")
-    s.conf.set("spark.sql.shuffle.partitions", "1")
+                  mode: OutputMode, conf: (String, String)*)(
+                  feed: StreamingQuery => Unit): DataFrame = {
     val ckpt = scratchDir(s"graft_${name}_ckpt")
-    val t0 = System.nanoTime()
-    val q = df.writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .outputMode(mode).start()
-    val t1 = System.nanoTime()
-    var t2 = t1; var t3 = t1; var nspins = 0
+    val q = withConf(s, (ShufflePartitions -> "1") +: conf: _*) {
+      df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode).start()
+    }
     // Stability probe: the sink's row count, read directly off the
     // driver-resident MemorySink (allData.size == the memory table's
     // count in every output mode — Append/Update append per batch,
@@ -385,7 +373,6 @@ object StreamOps {
     try {
       feed(q)
       q.processAllAvailable()
-      t2 = System.nanoTime()
       var prev = -1L
       var cur = sinkRows()
       var spins = 0
@@ -404,19 +391,9 @@ object StreamOps {
         q.processAllAvailable()
         cur = sinkRows(); spins += 1
       }
-      t3 = System.nanoTime(); nspins = spins
     } finally {
       q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", old)
       deleteRecursively(ckpt) // memory sink holds the rows; checkpoint is done
-      if (streamDebug) {
-        val t4 = System.nanoTime()
-        def ms(a: Long, b: Long) = f"${(b - a) / 1e6}%7.1f"
-        val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-        println(s"STREAMPHASES $name start=${ms(t0, t1)} feed=${ms(t1, t2)} " +
-          s"stabilize=${ms(t2, t3)} spins=$nspins batches=$batches " +
-          s"stop=${ms(t3, t4)} ms")
-      }
     }
     s.table(name)
   }
@@ -426,25 +403,23 @@ object StreamOps {
     * operator in a session doesn't absorb the one-time startup cost. */
   def warmup(s: SparkSession): Unit = {
     import s.implicits._
-    val old = s.conf.get("spark.sql.shuffle.partitions", "200")
-    s.conf.set("spark.sql.shuffle.partitions", "1")
     try {
       val ms = MemoryStream[Ev](s)
       val ckpt = scratchDir("graft_warmup_ckpt")
-      val q = ms.toDF()
-        .withColumn("ets", timestamp_micros(col("ts_us")))
-        .withWatermark("ets", "10 minutes")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName(freshName("warmup"))
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start()
+      val q = withConf(s, ShufflePartitions -> "1") { // see runToMemory
+        ms.toDF()
+          .withColumn("ets", timestamp_micros(col("ts_us")))
+          .withWatermark("ets", "10 minutes")
+          .dropDuplicatesWithinWatermark("event_id")
+          .writeStream.format("memory").queryName(freshName("warmup"))
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append).start()
+      }
       ms.addData(Ev(1L, 1000000L, 1L, "t", 1.0))
       q.processAllAvailable()
       q.stop()
       deleteRecursively(ckpt)
-    } catch { case _: Throwable => () } finally {
-      s.conf.set("spark.sql.shuffle.partitions", old)
-    }
+    } catch { case e: Throwable => System.err.println(s"WARMUP_FAIL stream: $e") }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -521,21 +496,19 @@ object StreamOps {
       val rows = evRowsCollected(s, d).sortBy(r => (r.ts_us, r.event_id))
       val (b1, b2) = rows.splitAt(rows.length / 2)
       val ms = MemoryStream[Ev](s)
-      withRocksDB(s) {
-        val src = ms.toDF()
-          .withColumn("ets", timestamp_millis(expr("ts_us div 1000")))
-          .withWatermark("ets", "10 minutes")
-          .select(col("user_id"), col("ts_us")).as[(Long, Long)]
-        val out = src.groupByKey(_._1)
-          .transformWithState(new SessionTimerProcessor(30L * 60 * 1000000),
-            TimeMode.EventTime(), OutputMode.Append())
-        runToMemory(s, out.toDF(), freshName("session_timers"),
-            OutputMode.Append) { q =>
-          ms.addData(b1.toSeq)
-          q.processAllAvailable()        // batch boundary: open sessions carry
-          ms.addData(b2.toSeq)
-        }.orderBy("user_id", "start_us")
-      }
+      val src = ms.toDF()
+        .withColumn("ets", timestamp_millis(expr("ts_us div 1000")))
+        .withWatermark("ets", "10 minutes")
+        .select(col("user_id"), col("ts_us")).as[(Long, Long)]
+      val out = src.groupByKey(_._1)
+        .transformWithState(new SessionTimerProcessor(30L * 60 * 1000000),
+          TimeMode.EventTime(), OutputMode.Append())
+      runToMemory(s, out.toDF(), freshName("session_timers"),
+          OutputMode.Append, RocksDB: _*) { q =>
+        ms.addData(b1.toSeq)
+        q.processAllAvailable()        // batch boundary: open sessions carry
+        ms.addData(b2.toSeq)
+      }.orderBy("user_id", "start_us")
     }),
 
     // Cross-batch idempotency (README.md:113-114): dedup on id within the
@@ -574,26 +547,24 @@ object StreamOps {
       val sorted = ces.sortBy(_.id)
       val (b1, b2) = sorted.splitAt(sorted.length / 2)
       val ms = MemoryStream[CloudEvent](s)
-      // NOTE: withRocksDB's save/restore mutates the SESSION-global
-      // provider conf; a streaming query started concurrently on the same
-      // session would pick RocksDB up silently. Fine for the
-      // single-threaded fixture driver — use spark.newSession() to scope
-      // it if fixtures ever run concurrently.
-      withRocksDB(s) {
-        val model = ms.toDS()
-          .groupByKey(_.subject.getOrElse(""))
-          .transformWithState(new LatestStateProcessor, TimeMode.None(),
-            OutputMode.Update())
-        val emitted = runToMemory(s, model.toDF(), freshName("readmodel_tws"),
-            OutputMode.Update) { q =>
-          ms.addData(b1.toSeq)
-          q.processAllAvailable()        // batch boundary: RocksDB state carries
-          ms.addData(b2.toSeq)
-        }
-        finalReadModel(emitted)
-          .select(col("subject"), col("id"), col("event_type"), col("method"))
-          .orderBy("subject")
+      // NOTE: runToMemory sets the RocksDB provider on the shared
+      // session only across start(); the query keeps it on the session
+      // clone it runs on. A streaming query started on the same session
+      // by another thread inside that window would pick RocksDB up too —
+      // fine for the single-threaded fixture driver.
+      val model = ms.toDS()
+        .groupByKey(_.subject.getOrElse(""))
+        .transformWithState(new LatestStateProcessor, TimeMode.None(),
+          OutputMode.Update())
+      val emitted = runToMemory(s, model.toDF(), freshName("readmodel_tws"),
+          OutputMode.Update, RocksDB: _*) { q =>
+        ms.addData(b1.toSeq)
+        q.processAllAvailable()        // batch boundary: RocksDB state carries
+        ms.addData(b2.toSeq)
       }
+      finalReadModel(emitted)
+        .select(col("subject"), col("id"), col("event_type"), col("method"))
+        .orderBy("subject")
     }),
 
     // Streaming last-touch attribution (batch twin: attribution_touch):
@@ -608,21 +579,19 @@ object StreamOps {
       val rows = evRowsCollected(s, d).sortBy(r => (r.ts_us, r.event_id))
       val (b1, b2) = rows.splitAt(rows.length / 2)
       val ms = MemoryStream[Ev](s)
-      withRocksDB(s) {
-        val credits = ms.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new LastTouchProcessor, TimeMode.None(),
-            OutputMode.Append())
-        val emitted = runToMemory(s, credits.toDF(),
-            freshName("attribution_tws"), OutputMode.Append) { q =>
-          ms.addData(b1.toSeq)
-          q.processAllAvailable()        // batch boundary: touch state carries
-          ms.addData(b2.toSeq)
-        }
-        emitted.groupBy("touch")
-          .agg(count(lit(1)).as("n_purchases"), sum("vc").as("sum_value_c"))
-          .orderBy("touch")
+      val credits = ms.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new LastTouchProcessor, TimeMode.None(),
+          OutputMode.Append())
+      val emitted = runToMemory(s, credits.toDF(),
+          freshName("attribution_tws"), OutputMode.Append, RocksDB: _*) { q =>
+        ms.addData(b1.toSeq)
+        q.processAllAvailable()        // batch boundary: touch state carries
+        ms.addData(b2.toSeq)
       }
+      emitted.groupBy("touch")
+        .agg(count(lit(1)).as("n_purchases"), sum("vc").as("sum_value_c"))
+        .orderBy("touch")
     }),
 
     // Streaming quantile-sketch maintenance (batch twin: quantile_hist):
@@ -900,44 +869,39 @@ object StreamOps {
       val sinkCols = Seq("event_id", "ts_us", "user_id", "event_type", "value", "bucket")
       val upsert: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, _) => {
         val sp = batch.sparkSession
-        // dynamic partition overwrite is scoped to this write — save/restore
-        // so the shared session doesn't leak the mode into later queries
-        val oldMode = sp.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          val incoming = batch.withColumn("bucket", col("user_id") % 16)
+        val incoming = batch.withColumn("bucket", col("user_id") % 16)
+          .select(sinkCols.map(col): _*)
+        val files = new java.io.File(stateDir).listFiles()
+        val hasState = files != null && files.nonEmpty
+        val existing =
+          if (!hasState) incoming.limit(0)
+          else sp.read.parquet(stateDir)
+            .withColumn("bucket", col("bucket").cast("long"))
             .select(sinkCols.map(col): _*)
-          val files = new java.io.File(stateDir).listFiles()
-          val hasState = files != null && files.nonEmpty
-          val existing =
-            if (!hasState) incoming.limit(0)
-            else sp.read.parquet(stateDir)
-              .withColumn("bucket", col("bucket").cast("long"))
-              .select(sinkCols.map(col): _*)
-          val touched = incoming.select("bucket").distinct()
-          val w = Window.partitionBy("user_id").orderBy(col("event_id").desc)
-          val merged = existing.join(touched, Seq("bucket"), "left_semi")
-            .unionByName(incoming)
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-          // sever lineage only when the write overwrites files the plan reads
-          val safe = if (hasState) merged.localCheckpoint(true) else merged
-          safe.write.mode("overwrite").partitionBy("bucket").parquet(stateDir)
-        } finally sp.conf.set("spark.sql.sources.partitionOverwriteMode", oldMode)
+        val touched = incoming.select("bucket").distinct()
+        val w = Window.partitionBy("user_id").orderBy(col("event_id").desc)
+        val merged = existing.join(touched, Seq("bucket"), "left_semi")
+          .unionByName(incoming)
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+        // sever lineage only when the write overwrites files the plan reads
+        val safe = if (hasState) merged.localCheckpoint(true) else merged
+        // dynamic partition overwrite as a write option: scoped to this
+        // write, not to the session
+        safe.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bucket").parquet(stateDir)
       }
 
-      val old = s.conf.get("spark.sql.shuffle.partitions", "200")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "1") // fixture-sized, see runToMemory
-        val q = ms.toDF().writeStream
+      val q = withConf(s, ShufflePartitions -> "1") { // fixture-sized, see runToMemory
+        ms.toDF().writeStream
           .option("checkpointLocation", ckpt)
           .outputMode(OutputMode.Update)
           .foreachBatch(upsert)
           .start()
-        try {
-          ms.addData(b1.toSeq); q.processAllAvailable() // micro-batch 1
-          ms.addData(b2.toSeq); q.processAllAvailable() // micro-batch 2 merges
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", old)
+      }
+      try {
+        ms.addData(b1.toSeq); q.processAllAvailable() // micro-batch 1
+        ms.addData(b2.toSeq); q.processAllAvailable() // micro-batch 2 merges
+      } finally q.stop()
       s.read.parquet(stateDir)
         .filter(col("event_type") =!= "error") // tombstones removed at read
         .select(col("user_id").as("subject"), col("event_id"), col("ts_us"), col("event_type"))
@@ -1288,19 +1252,17 @@ object StreamOps {
         }
         incoming.write.mode("overwrite").parquet(s"$corpusDir/batch=$bid")
       }
-      val old = s.conf.get("spark.sql.shuffle.partitions", "200")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "2") // fixture-sized
-        val q = ms.toDF().writeStream
+      val q = withConf(s, ShufflePartitions -> "2") { // fixture-sized, see runToMemory
+        ms.toDF().writeStream
           .option("checkpointLocation", ckpt)
           .outputMode(OutputMode.Update)
           .foreachBatch(admit)
           .start()
-        try {
-          ms.addData(standing.toSeq); q.processAllAvailable() // corpus lands
-          ms.addData(fresh.toSeq); q.processAllAvailable()    // batch admitted
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", old)
+      }
+      try {
+        ms.addData(standing.toSeq); q.processAllAvailable() // corpus lands
+        ms.addData(fresh.toSeq); q.processAllAvailable()    // batch admitted
+      } finally q.stop()
       s.read.parquet(pairsDir)
         .select(col("d_new"), col("d_old"), col("jac_c"))
         .orderBy("d_new", "d_old")

@@ -680,4 +680,45 @@ class StreamingSuite extends AnyFunSuite {
     } finally
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", oldProvider)
   }
+
+  test("a fan-out built while a stream fixture feeds sees the session width") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ms = MemoryStream[StreamOps.Ev](spark)
+    val agg = ms.toDF().groupBy(col("user_id")).agg(count(lit(1)).as("n"))
+    var fanned = -1
+    var stateWidth = -1
+    val out = StreamOps.runToMemory(spark, agg, "fanout_during_feed",
+        OutputMode.Complete) { q =>
+      ms.addData((1L to 100L).map(i => StreamOps.Ev(i, i * 1000, i % 5, "e", 1.0)))
+      q.processAllAvailable()
+      fanned = graft.io.Tables.fanOut(spark.range(0, 200000, 1, 1).toDF("id"))
+        .rdd.getNumPartitions
+      stateWidth = q.lastProgress.stateOperators(0).numShufflePartitions.toInt
+    }
+    assert(fanned === width, "a batch plan built during feed must fan out to the session width")
+    assert(stateWidth === 1, "the fixture itself must still run at width 1")
+    assert(out.count() === 5)
+  }
+
+  test("withConf restores a set key, unsets an unset key, also when the body throws") {
+    import graft.api.QueryHygiene.withConf
+    val setKey = "spark.graft.test.setKey"
+    val unsetKey = "spark.graft.test.unsetKey"
+    spark.conf.set(setKey, "before")
+    try {
+      withConf(spark, setKey -> "inside", unsetKey -> "inside") {
+        assert(spark.conf.get(setKey) === "inside")
+        assert(spark.conf.get(unsetKey) === "inside")
+      }
+      assert(spark.conf.get(setKey) === "before")
+      assert(!spark.conf.getAll.contains(unsetKey))
+      intercept[IllegalStateException] {
+        withConf(spark, setKey -> "inside", unsetKey -> "inside") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(setKey) === "before")
+      assert(!spark.conf.getAll.contains(unsetKey))
+    } finally spark.conf.unset(setKey)
+  }
 }

@@ -10,7 +10,7 @@ sorts columns by name on both sides, and compares row-by-row.
 --expect-all: treat a key with no result directory as FAIL instead of
 not-run. Use for FULL Verify runs, where a missing dir means the run
 crashed or silently skipped a key; the default skip semantics are for
-subset runs (SPARK_GRAFT_ONLY-filtered Verify).
+subset runs (Verify with trailing key args: exact names or `prefix*`).
 """
 import json, sys, glob, os
 import duckdb

@@ -14,5 +14,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS -Xmx${GRAFT_MEM:-8g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" "$MAIN" "$@"
