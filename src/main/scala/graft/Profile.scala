@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+
 /** Developer harness (not part of the library surface): time individual
   * queries or dump their physical plans outside the full Bench run, on
   * the same session Bench and Verify build ([[Harness.session]], graft
@@ -9,26 +14,56 @@ package graft
   *   sbt "runMain graft.Profile --explain q1 q2"  # physical plans
   *   sbt "runMain graft.Profile --explainf q1"    # formatted plans
   *   sbt "runMain graft.Profile --phases q1 q2"   # build/plan/exec/hygiene split
+  *   sbt "runMain graft.Profile --census [keys]"  # SortAggregate count per key
   *
   * Data dir via SPARK_GRAFT_SF_DIR (defaults to sf0.1 for timing; use
-  * sf0.01 for plan dumps to match docs/PLANS.md). Cores and shuffle
-  * partitions via SPARK_GRAFT_CPUS (default 32). Timing runs are preceded
-  * by Bench's warm-up ([[Harness.warmup]]); plan dumps skip it.
+  * sf0.01 for plan dumps to match docs/PLANS.md, sf0.001 for the census
+  * in docs/SORTAGG_CENSUS.txt). Cores and shuffle partitions via
+  * SPARK_GRAFT_CPUS (default 32). Timing runs are preceded by Bench's
+  * warm-up ([[Harness.warmup]]); plan dumps and the census skip it.
   */
 object Profile {
+
+  /** Every node of `df`'s physical plan, with adaptive plans unwrapped and
+    * the plans of its subqueries included. */
+  def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  /** How many `SortAggregate` nodes the physical plan of `key` holds.
+    * Counting nodes instead of diffing explain text keeps the census
+    * stable across JVMs. */
+  def sortAggregates(spark: SparkSession, sfDir: String, key: String): Int =
+    graft.api.QueryHygiene.run(spark, key) {
+      planNodes(SparkEntry.queries(key)(spark, sfDir))
+        .count(_.isInstanceOf[SortAggregateExec])
+    }
+
+  /** The keys the census covers: every key but the streaming fixtures
+    * (their DataFrames are materialized results). */
+  def censusKeys: Seq[String] =
+    SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).toSeq.sorted
+
   def main(args: Array[String]): Unit = {
     val explain = args.headOption.contains("--explain") ||
       args.headOption.contains("--explainf")
     val phases = args.headOption.contains("--phases")
+    val census = args.headOption.contains("--census")
     // --explainf: FormattedMode (the `.explain("formatted")` shape the
     // optimization-round plan dumps under plans/ use); --explain stays
     // SimpleMode to match docs/PLANS.md.
     val formatted = args.headOption.contains("--explainf")
-    val names = (if (explain || phases) args.drop(1) else args).toSeq
+    val names = (if (explain || phases || census) args.drop(1) else args).toSeq
+    val keys = if (census) Harness.select(censusKeys, names) else names
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(32)
-    if (!explain) Harness.warmup(spark, d)
-    names.foreach { n =>
+    if (!explain && !census) Harness.warmup(spark, d)
+    keys.foreach { n =>
       if (phases) {
         // Split one bench-shaped run (QueryHygiene.run around build+count)
         // into its phases, for the per-key-constant audit:
@@ -57,6 +92,9 @@ object Profile {
         println(f"PHASES $n%-28s build=${ms(t(1) - t(0))} plan=${ms(t(2) - t(1))} " +
           f"exec1=${ms(t(3) - t(2))} exec2=${ms(t(4) - t(3))} " +
           f"hyg=${ms(total - (t(4) - t(0)))} total=${ms(total)} ms")
+      } else if (census) {
+        val c = sortAggregates(spark, d, n)
+        if (c > 0) println(s"SORTAGG $n $c")
       } else if (explain) {
         val df = SparkEntry.queries(n)(spark, d)
         println(s"===== $n =====")

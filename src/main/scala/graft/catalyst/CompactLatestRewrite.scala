@@ -10,14 +10,17 @@ import org.apache.spark.sql.types.IntegerType
   *
   * {{{ Filter(rn = 1, Window(row_number over (partition BY k ORDER BY o DESC) AS rn, child)) }}}
   *
-  * into a hash aggregate
+  * into an aggregate
   *
   * {{{ Aggregate(k, max_by(struct(child.*), o)) }}}
   *
   * The window form sorts every partition's full history; the aggregate form
   * is a partial+final `max_by` — map-side combine keeps only one row per
   * key per task, so at 100 TB the shuffle carries |keys| rows instead of
-  * |events| (SURVEY.md §4's `ReplaceWindowWithMaxBy` stretch goal).
+  * |events| (SURVEY.md §4's `ReplaceWindowWithMaxBy` stretch goal). Spark
+  * plans it as a partial+final `SortAggregate`, not a hash aggregate: the
+  * struct payload has no fixed-width aggregation buffer, so each side of
+  * the exchange sorts its rows by key (docs/PLANS.md, LoopOps batch).
   *
   * Fires only when the pattern is exact: a single row_number window
   * expression, a non-empty partition spec, ONE descending order key, and a

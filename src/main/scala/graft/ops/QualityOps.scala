@@ -13,13 +13,14 @@ import graft.io.Tables
   * salted join is worth it.
   *
   * Scale shapes (100 TB notes):
-  *  - table_column_stats: ONE pass over lineitem computing all per-column
-  *    aggregates together (count/ndv/min/max × 8 columns); the exact
-  *    multi-column distinct goes through Spark's Expand (×|distinct cols|
-  *    row amplification before partial aggregation) — the exact-NDV
-  *    contract is the point here; swap ndv to approx_count_distinct at
-  *    true 100 TB and the shape is unchanged. Reshape to long form is a
-  *    single-row explode.
+  *  - table_column_stats: ONE pass over lineitem that explodes each row
+  *    into 8 (column, value) entries (8× rows) feeding a map-side-combining
+  *    partial hash aggregate on (column, value), so the shuffle carries at
+  *    most one row per distinct value per task — no Expand, and no sort
+  *    over data rows. A second aggregate over that histogram (Σ ndv rows)
+  *    gives count/ndv/min/max per column; only its string min/max runs as
+  *    a SortAggregate. The exact-NDV contract is the point here and sizes
+  *    the histogram; at true 100 TB, swap ndv to per-column sketches.
   *  - dq_violation_report: every rule is a key-shuffled join (or a pure
   *    scan predicate) feeding ONE map-side-combinable aggregate; rules
   *    sharing a join (lineitem⋈orders) are computed in the same pass.
@@ -38,38 +39,41 @@ object QualityOps {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ANALYZE-style per-column statistics for lineitem: non-null count,
-    // exact NDV, canonical min/max — one pass, reshaped to one row per
-    // column. min/max are emitted as canonical STRINGS (longs and
-    // floor-canonicalized doubles rendered as integers) so the output
-    // schema is uniform across column types.
+    // exact NDV, canonical min/max, one row per column. min/max are
+    // emitted as canonical STRINGS (longs and floor-canonicalized doubles
+    // rendered as integers) so the output schema is uniform across column
+    // types. Every statistic is read off one histogram of (column, value)
+    // entries; a null value fills no slot.
     "table_column_stats" -> ((s, d) => {
+      import s.implicits._
       val li = Tables.lineitem(s, d)
-        .withColumn("ship_day", dayIdx(col("l_shipdate")))
-      def cs(name: String, c: Column, canonical: Column => Column) = Seq(
-        count(c).as(s"${name}_n"),
-        count_distinct(c).as(s"${name}_ndv"),
-        canonical(min(c)).cast("string").as(s"${name}_min"),
-        canonical(max(c)).cast("string").as(s"${name}_max"))
-      val ident = (c: Column) => c
-      val money = (c: Column) => Tables.canon(c)
-      val aggs =
-        cs("l_orderkey", col("l_orderkey"), ident) ++
-          cs("l_partkey", col("l_partkey"), ident) ++
-          cs("l_quantity", col("l_quantity"), money) ++
-          cs("l_extendedprice", col("l_extendedprice"), money) ++
-          cs("l_discount", col("l_discount"), money) ++
-          cs("l_returnflag", col("l_returnflag"), ident) ++
-          cs("l_linestatus", col("l_linestatus"), ident) ++
-          cs("ship_day", col("ship_day"), ident)
-      val agg = li.agg(aggs.head, aggs.tail: _*)
-      val cols = Seq("l_orderkey", "l_partkey", "l_quantity",
-        "l_extendedprice", "l_discount", "l_returnflag", "l_linestatus",
-        "ship_day")
-      agg.select(explode(array(cols.map(n => struct(
-          lit(n).as("column"), col(s"${n}_n").as("n_nonnull"),
-          col(s"${n}_ndv").as("ndv"), col(s"${n}_min").as("min_s"),
-          col(s"${n}_max").as("max_s"))): _*)).as("r"))
-        .select("r.column", "r.n_nonnull", "r.ndv", "r.min_s", "r.max_s")
+      val panel = Seq(
+        ("l_orderkey", col("l_orderkey"), "lv"),
+        ("l_partkey", col("l_partkey"), "lv"),
+        ("l_quantity", col("l_quantity"), "dv"),
+        ("l_extendedprice", col("l_extendedprice"), "dv"),
+        ("l_discount", col("l_discount"), "dv"),
+        ("l_returnflag", col("l_returnflag"), "sv"),
+        ("l_linestatus", col("l_linestatus"), "sv"),
+        ("ship_day", dayIdx(col("l_shipdate")), "lv"))
+      val slots = Seq("lv" -> "long", "dv" -> "double", "sv" -> "string")
+      def slotted(v: Column, slot: String) = slots.map { case (sl, t) =>
+        (if (sl == slot) v else lit(null)).cast(t).as(sl) }
+      val hist = li.select(explode(array(panel.map { case (n, v, sl) =>
+          struct(lit(n).as("column") +: slotted(v, sl): _*) }: _*)).as("e"))
+        .select("e.*")
+        .groupBy("column", "lv", "dv", "sv").count()
+      // an all-null entry per column, so an empty table still has 8 rows
+      val seeds = panel.map(_._1).toDF("column")
+        .select(col("column") +: slotted(lit(null), "none") :+ lit(0L).as("count"): _*)
+      val nonNull = slots.map(sl => col(sl._1).isNotNull).reduce(_ || _)
+      // the dv slot holds money, canonicalized after min/max (floor is monotone)
+      def ends(f: Column => Column) = coalesce(f(col("lv")).cast("string"),
+        Tables.canon(f(col("dv"))).cast("string"), f(col("sv")))
+      hist.unionByName(seeds).groupBy("column").agg(
+          sum(when(nonNull, col("count")).otherwise(0L)).as("n_nonnull"),
+          count(when(nonNull, true)).as("ndv"),
+          ends(min(_)).as("min_s"), ends(max(_)).as("max_s"))
         .orderBy("column")
     }),
 

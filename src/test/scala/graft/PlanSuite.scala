@@ -67,6 +67,46 @@ class PlanSuite extends AnyFunSuite {
     }
   }
 
+  test("table_column_stats plans no Expand; its sort aggregates read only aggregated input") {
+    import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    val nodes = Profile.planNodes(
+      SparkEntry.queries("table_column_stats")(spark, TestSpark.sfDir))
+    assert(!nodes.exists(_.isInstanceOf[ExpandExec]), nodes.head.treeString)
+    // the scans a node reads without a hash aggregate in between
+    def unaggregated(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: HashAggregateExec => Nil
+      case s: FileSourceScanExec => Seq(s)
+      case _ => p.children.flatMap(unaggregated)
+    }
+    val sorts = nodes.collect { case a: SortAggregateExec => a }
+    assert(sorts.nonEmpty, "the string min/max still needs a sort aggregate")
+    sorts.foreach(a => assert(a.children.flatMap(unaggregated).isEmpty,
+      s"a sort aggregate reads the lineitem scan unaggregated:\n${nodes.head.treeString}"))
+  }
+
+  test("SortAggregate census: no key plans more sort aggregates than docs/SORTAGG_CENSUS.txt") {
+    val src = scala.io.Source.fromFile("docs/SORTAGG_CENSUS.txt")
+    val allowed = try src.getLines().map(_.trim.split("\\s+")).collect {
+      case Array("SORTAGG", k, n) => k -> n.toInt
+    }.toMap finally src.close()
+    assert(allowed.nonEmpty, "the census file lists no key")
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.catalyst.CompactLatestRewrite
+    try {
+      val over = Profile.censusKeys.flatMap { k =>
+        val (n, cap) = (Profile.sortAggregates(spark, TestSpark.sfDir, k), allowed.getOrElse(k, 0))
+        if (n > cap) Some(s"$k: $n > $cap") else None
+      }
+      assert(over.isEmpty, "keys plan more SortAggregate nodes than the census " +
+        s"allows (fix the plan, or justify raising its line):\n${over.mkString("\n")}")
+    } finally {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations
+          .filterNot(_ == graft.catalyst.CompactLatestRewrite)
+    }
+  }
+
   test("join_bucketed sort-merge-joins with no exchange below the join") {
     val p = planOf("join_bucketed")
     assert(p.contains("SortMergeJoin"), s"expected a sort-merge join:\n$p")

@@ -32,6 +32,74 @@ class QualityOpsSuite extends AnyFunSuite {
     assert(rows("l_returnflag")._2 == rf.distinct.length)
   }
 
+  /** The single-pass aggregate table_column_stats replaced (8 exact
+    * distincts through Spark's Expand), kept as the reference. */
+  private def singlePassColumnStats(li: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    val t = li.withColumn("ship_day",
+      expr("unix_micros(cast(l_shipdate as timestamp)) div 86400000000"))
+    val cols = Seq("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
+      "l_discount", "l_returnflag", "l_linestatus", "ship_day")
+    val money = Set("l_quantity", "l_extendedprice", "l_discount")
+    val aggs = cols.flatMap { n =>
+      val canonical = (c: Column) => if (money(n)) Tables.canon(c) else c
+      Seq(count(col(n)).as(s"${n}_n"), count_distinct(col(n)).as(s"${n}_ndv"),
+        canonical(min(col(n))).cast("string").as(s"${n}_min"),
+        canonical(max(col(n))).cast("string").as(s"${n}_max"))
+    }
+    t.agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(cols.map(n => struct(lit(n).as("column"),
+        col(s"${n}_n").as("n_nonnull"), col(s"${n}_ndv").as("ndv"),
+        col(s"${n}_min").as("min_s"), col(s"${n}_max").as("max_s"))): _*)).as("r"))
+      .select("r.column", "r.n_nonnull", "r.ndv", "r.min_s", "r.max_s")
+      .orderBy("column")
+  }
+
+  test("table_column_stats ≡ the single-pass aggregate on nulls, ±0.0, NaN and an empty table") {
+    import spark.implicits._
+    val ts = (s: String) => Some(java.sql.Timestamp.valueOf(s))
+    // every column has nulls, l_linestatus is all null, each double column
+    // holds -0.0, 0.0 and NaN, and every column repeats a value
+    val li = Seq(
+      (Some(1L), Some(10L), Some(1.0), Some(100.5), Some(0.0), Some("A"),
+        Option.empty[String], ts("1995-03-01 10:00:00")),
+      (Some(1L), None, Some(-0.0), Some(Double.NaN), Some(-0.0), Some("N"),
+        None, ts("1995-03-01 23:59:59")),
+      (None, Some(10L), Some(Double.NaN), Some(100.5), Some(0.05), None,
+        None, None),
+      (Some(3L), Some(7L), None, None, Some(Double.NaN), Some("A"),
+        None, ts("1969-12-31 12:00:00")),
+      (Some(2L), Some(10L), Some(0.0), Some(-0.0), Some(-2.5), Some("R"),
+        None, ts("1998-12-01 00:00:00")),
+      (Some(2L), None, Some(1.0), Some(0.0), None, Some("N"), None, None),
+      (None, None, None, None, None, None, None, None))
+      .toDF("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
+        "l_discount", "l_returnflag", "l_linestatus", "l_shipdate")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_column_stats").toString
+    try {
+      li.write.parquet(s"$tmp/edge/lineitem.parquet")
+      li.limit(0).write.parquet(s"$tmp/empty/lineitem.parquet")
+      for (dir <- Seq(s"$tmp/edge", s"$tmp/empty")) {
+        val got = QualityOps.queries("table_column_stats")(spark, dir).collect().toSeq
+        val want = singlePassColumnStats(Tables.lineitem(spark, dir)).collect().toSeq
+        assert(got == want, dir)
+      }
+      val edge = QualityOps.queries("table_column_stats")(spark, s"$tmp/edge")
+        .collect().map(r => r.getString(0) -> r).toMap
+      val ls = edge("l_linestatus")
+      assert(ls.getLong(1) == 0 && ls.getLong(2) == 0 && ls.isNullAt(3) && ls.isNullAt(4))
+      val disc = edge("l_discount") // -0.0 ≡ 0.0, NaN is one value above all
+      assert(disc.getLong(1) == 5 && disc.getLong(2) == 4)
+      assert(disc.getString(3) == "-25000" && disc.getString(4) == "0")
+      val empty = QualityOps.queries("table_column_stats")(spark, s"$tmp/empty").collect()
+      assert(empty.length == 8)
+      empty.foreach(r => assert(r.getLong(1) == 0 && r.getLong(2) == 0 &&
+        r.isNullAt(3) && r.isNullAt(4), r))
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
   test("dq_violation_report ≡ brute-force constraint evaluation") {
     val rows = QualityOps.queries("dq_violation_report")(spark, d).collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
