@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The session, warm-up and key selection shared by the mains (Bench,
   * Verify, Profile, ConnectorBench, EntrySmoke), so each of them runs the
   * engine users get: the session is built with [[catalyst.GraftExtensions]]
-  * installed, rules included. */
+  * installed, its post-planner rule included. */
 object Harness {
 
   /** `local[SPARK_GRAFT_CPUS]` (else `defaultCpus`) with the shuffle width

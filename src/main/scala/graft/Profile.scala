@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 /** Developer harness (not part of the library surface): time individual
   * queries or dump their physical plans outside the full Bench run, on
   * the same session Bench and Verify build ([[Harness.session]], graft
-  * extension and rules installed).
+  * extension and its post-planner rule installed).
   *
   *   sbt "runMain graft.Profile q1 q2"            # per-query wall time
   *   sbt "runMain graft.Profile --explain q1 q2"  # physical plans
@@ -35,14 +35,11 @@ object Profile {
     nodes(df.queryExecution.executedPlan)
   }
 
-  /** How many `SortAggregate` nodes the physical plan of `key` holds.
+  /** How many `SortAggregate` nodes the physical plan of `df` holds.
     * Counting nodes instead of diffing explain text keeps the census
     * stable across JVMs. */
-  def sortAggregates(spark: SparkSession, sfDir: String, key: String): Int =
-    graft.api.QueryHygiene.run(spark, key) {
-      planNodes(SparkEntry.queries(key)(spark, sfDir))
-        .count(_.isInstanceOf[SortAggregateExec])
-    }
+  def sortAggregates(df: DataFrame): Int =
+    planNodes(df).count(_.isInstanceOf[SortAggregateExec])
 
   /** The keys the census covers: every key but the streaming fixtures
     * (their DataFrames are materialized results). */
@@ -93,7 +90,9 @@ object Profile {
           f"exec1=${ms(t(3) - t(2))} exec2=${ms(t(4) - t(3))} " +
           f"hyg=${ms(total - (t(4) - t(0)))} total=${ms(total)} ms")
       } else if (census) {
-        val c = sortAggregates(spark, d, n)
+        val c = graft.api.QueryHygiene.run(spark, n) {
+          sortAggregates(SparkEntry.queries(n)(spark, d))
+        }
         if (c > 0) println(s"SORTAGG $n $c")
       } else if (explain) {
         val df = SparkEntry.queries(n)(spark, d)

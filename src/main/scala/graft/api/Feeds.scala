@@ -34,17 +34,14 @@ object Feeds {
   /** Aggregate-feed compaction (`README.md:184-192`): keep only the
     * newest entry per subject, newest = greatest `order`. One shuffle on
     * the subject key, with one row per key per task on the map side:
-    * with [[graft.catalyst.GraftExtensions]] installed the optimizer
-    * rewrites this window alone into a partial+final `max_by` aggregate.
-    * Under [[readModel]] it does not: the optimizer folds the tombstone
-    * filter into `__rn = 1`, the rewrite's exact pattern no longer
-    * matches, and Spark's own partial `WindowGroupLimit` does the
-    * map-side cut before the exchange instead (pinned by
-    * RewriteRuleSuite).
+    * Spark plans a partial `WindowGroupLimit` before the exchange and a
+    * final one after it, here and under [[readModel]] (pinned by
+    * PlanSuite).
     *
     * Over a bounded `http-feed` read planned as one partition (the
-    * default `backfillPartitions = 1`), with the extension installed at
-    * session build, there is no exchange at all:
+    * default `backfillPartitions = 1`), with
+    * [[graft.catalyst.GraftExtensions]] installed at session build, there
+    * is no exchange at all:
     * [[graft.catalyst.SinglePartitionFeedScan]] lets the scan report
     * `SinglePartition`, so the sort and window run in the scan's one task
     * and the query is one stage. The trade-off: that per-subject work no

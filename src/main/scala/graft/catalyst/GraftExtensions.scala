@@ -13,17 +13,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    `bitset_from_tokens`), the text kernels (`packed_tf_min_overlap`,
   *    `ngram_shingles`, `word_bigrams`) and the vector kernels
   *    (`vec_dot`, `vec_sqdist`, `vec_sqdist_long`);
-  *  - the optimizer rule [[CompactLatestRewrite]] (compaction window →
-  *    `max_by` aggregate);
   *  - the post-planner rule [[SinglePartitionFeedScan]] (a one-partition
   *    bounded `http-feed` read reports `SinglePartition`).
+  *
+  * No optimizer rule: Spark's partial `WindowGroupLimit` already gives
+  * compaction its map-side cut.
   *
   * Two entry points:
   *
   *  - `spark.sql.extensions=graft.catalyst.GraftExtensions` at session
   *    build time, or `SparkSession.builder().withExtensions(new
   *    GraftExtensions)` — the standard deployment paths, and the only ones
-  *    that install the two rules;
+  *    that install [[SinglePartitionFeedScan]];
   *  - [[GraftExtensions.install]] on a live session, which registers the
   *    functions only; queries that use a kernel call it on the session
   *    they are given.
@@ -31,7 +32,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functionDescriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => CompactLatestRewrite)
     ext.injectQueryPostPlannerStrategyRule(_ => SinglePartitionFeedScan)
   }
 }
@@ -85,7 +85,7 @@ object GraftExtensions {
   )
 
   /** Idempotently register the native functions on a live session. The
-    * rules need a session built with the extension. */
+    * post-planner rule needs a session built with the extension. */
   def install(spark: SparkSession): Unit =
     functionDescriptors.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)

@@ -12,7 +12,7 @@ import graft.io.Tables
   *
   * Scale notes: every operator is a declarative plan — cursor filters push
   * into the parquet scan (`PushedFilters: [GT(event_id, …)]`), compaction is
-  * one shuffle on the subject key (window or max_by), and nothing touches the
+  * one shuffle on the subject key, and nothing touches the
   * driver. At 100 TB the feed would be ingested once (single ordered stream,
   * reference `README.md:9`) then repartitioned by `subject`; these batch
   * operators run on that partitioning without further shuffles.

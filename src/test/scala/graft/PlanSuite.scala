@@ -52,18 +52,38 @@ class PlanSuite extends AnyFunSuite {
       s"bitset strategy must not hash-shuffle:\n$p")
   }
 
-  test("feed_compact_latest rewrites to max_by under GraftExtensions") {
-    graft.catalyst.GraftExtensions.install(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.catalyst.CompactLatestRewrite
-    try {
-      val p = SparkEntry.queries("feed_compact_latest")(spark, TestSpark.sfDir)
-        .queryExecution.optimizedPlan.toString
-      assert(p.contains("max_by"), s"compaction window must rewrite to max_by:\n$p")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.catalyst.CompactLatestRewrite)
+  test("compaction keeps its window: a partial WindowGroupLimit runs before the exchange") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
+    import spark.implicits._
+    val sample = Seq(
+      (1L, 10L, "a"), (1L, 20L, "b"), (1L, 30L, "c"),
+      (2L, 11L, "d"), (2L, 21L, "e"),
+      (3L, 12L, "f")
+    ).toDF("subject", "event_id", "payload")
+    val (subject, order) = (col("subject"), col("event_id"))
+    val cases = Seq(
+      "compactLatest" -> (graft.api.Feeds.compactLatest(sample, subject, order),
+        Set((1L, "c"), (2L, "e"), (3L, "f"))),
+      "readModel" -> (graft.api.Feeds.readModel(sample, subject, order, col("payload") === "c"),
+        Set((2L, "e"), (3L, "f"))))
+    for ((name, (df, expected)) <- cases) {
+      val physical = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      def limits(p: SparkPlan) = p.collect { case w: WindowGroupLimitExec => w.mode }
+      val exchanges = physical.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length === 1, s"$name:\n$physical")
+      // map side: one row per subject per task survives into the shuffle
+      assert(limits(exchanges.head.child) === Seq(Partial), s"$name:\n$physical")
+      assert(limits(physical) === Seq(Final, Partial), s"$name:\n$physical")
+      assert(physical.collect { case a: SortAggregateExec => a }.isEmpty, s"$name:\n$physical")
+      assert(df.collect().map(r => (r.getLong(0), r.getString(2))).toSet === expected, name)
     }
   }
 
@@ -83,28 +103,6 @@ class PlanSuite extends AnyFunSuite {
     assert(sorts.nonEmpty, "the string min/max still needs a sort aggregate")
     sorts.foreach(a => assert(a.children.flatMap(unaggregated).isEmpty,
       s"a sort aggregate reads the lineitem scan unaggregated:\n${nodes.head.treeString}"))
-  }
-
-  test("SortAggregate census: no key plans more sort aggregates than docs/SORTAGG_CENSUS.txt") {
-    val src = scala.io.Source.fromFile("docs/SORTAGG_CENSUS.txt")
-    val allowed = try src.getLines().map(_.trim.split("\\s+")).collect {
-      case Array("SORTAGG", k, n) => k -> n.toInt
-    }.toMap finally src.close()
-    assert(allowed.nonEmpty, "the census file lists no key")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.catalyst.CompactLatestRewrite
-    try {
-      val over = Profile.censusKeys.flatMap { k =>
-        val (n, cap) = (Profile.sortAggregates(spark, TestSpark.sfDir, k), allowed.getOrElse(k, 0))
-        if (n > cap) Some(s"$k: $n > $cap") else None
-      }
-      assert(over.isEmpty, "keys plan more SortAggregate nodes than the census " +
-        s"allows (fix the plan, or justify raising its line):\n${over.mkString("\n")}")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.catalyst.CompactLatestRewrite)
-    }
   }
 
   test("join_bucketed sort-merge-joins with no exchange below the join") {

@@ -11,6 +11,11 @@ import org.apache.spark.sql.execution.window.WindowExec
   * allowlists are the reviewed exceptions — a new operator that
   * introduces one of these shapes fails here until it is either fixed or
   * consciously allowed.
+  *
+  * The same per-key test holds the `SortAggregate` census: each key must
+  * plan exactly as many `SortAggregate` nodes as its line in
+  * docs/SORTAGG_CENSUS.txt (`Profile --census`; an unlisted key counts
+  * 0), so the DataFrame is built once for both checks.
   */
 class ScaleInvariantSuite extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -112,10 +117,10 @@ class ScaleInvariantSuite extends AnyFunSuite {
 
   /** Queries whose heavy work happens eagerly at DataFrame-construction
     * time (driver union-find / hook+compress over localCheckpoints), so
-    * the returned plan is just a scan of materialized results — sweeping
-    * it would assert nothing about the real computation while paying its
-    * full execution cost. Their plan-shape guarantees live in the
-    * operators they compose (dedup_ngram_jaccard) and TrainOpsSuite. */
+    * the returned plan is just a scan of materialized results — its shape
+    * says nothing about the real computation, so only the census counts
+    * it. Their plan-shape guarantees live in the operators they compose
+    * (dedup_ngram_jaccard) and TrainOpsSuite. */
   private val eagerlyMaterialized =
     Set("lm_greedy_decode", // 8 eager ≤1-row localCheckpoint step-jobs at
       // construction (the declarative chain walk) — no driver collect
@@ -159,22 +164,45 @@ class ScaleInvariantSuite extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  SparkEntry.queries.toSeq.sortBy(_._1)
-    .filterNot(_._1.startsWith("stream_")) // streaming fixtures return materialized results
-    .filterNot { case (n, _) => eagerlyMaterialized(n) }
-    .foreach { case (name, fn) =>
-      test(s"$name: no cartesian; BNLJ/global-window only by design") {
-        val plan = fn(spark, d).queryExecution.sparkPlan
-        val cart = plan.collect { case c: CartesianProductExec => c }
-        assert(cart.isEmpty, s"$name plans a cartesian product:\n$plan")
-        val bnlj = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
-        if (!bnljByDesign(name))
-          assert(bnlj.isEmpty,
-            s"$name plans a broadcast nested-loop join with an unbounded side:\n$plan")
-        val gw = plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-        if (!globalWindowByDesign(name))
-          assert(gw.isEmpty,
-            s"$name moves data rows through a single-partition window:\n$plan")
+  private val census: Map[String, Int] = {
+    val src = scala.io.Source.fromFile("docs/SORTAGG_CENSUS.txt")
+    try src.getLines().map(_.trim.split("\\s+")).collect {
+      case Array("SORTAGG", k, n) => k -> n.toInt
+    }.toMap finally src.close()
+  }
+
+  test("docs/SORTAGG_CENSUS.txt lists only swept keys") {
+    assert(census.nonEmpty, "the census file lists no key")
+    val unknown = census.keySet -- Profile.censusKeys
+    assert(unknown.isEmpty, s"census lines for keys the sweep does not plan: $unknown")
+  }
+
+  // streaming fixtures return materialized results: Profile.censusKeys skips them
+  Profile.censusKeys.foreach { name =>
+    val shaped = !eagerlyMaterialized(name)
+    test(if (shaped) s"$name: no cartesian; BNLJ/global-window only by design"
+         else s"$name: SortAggregate count matches docs/SORTAGG_CENSUS.txt") {
+      graft.api.QueryHygiene.run(spark, name) {
+        val df = SparkEntry.queries(name)(spark, d)
+        if (shaped) {
+          val plan = df.queryExecution.sparkPlan
+          val cart = plan.collect { case c: CartesianProductExec => c }
+          assert(cart.isEmpty, s"$name plans a cartesian product:\n$plan")
+          val bnlj = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+          if (!bnljByDesign(name))
+            assert(bnlj.isEmpty,
+              s"$name plans a broadcast nested-loop join with an unbounded side:\n$plan")
+          val gw = plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+          if (!globalWindowByDesign(name))
+            assert(gw.isEmpty,
+              s"$name moves data rows through a single-partition window:\n$plan")
+        }
+        val (n, listed) = (Profile.sortAggregates(df), census.getOrElse(name, 0))
+        assert(n <= listed, s"$name plans $n SortAggregate nodes, more than its $listed in " +
+          "docs/SORTAGG_CENSUS.txt (fix the plan, or justify raising its line)")
+        assert(n >= listed, s"$name plans $n SortAggregate nodes, fewer than its $listed in " +
+          "docs/SORTAGG_CENSUS.txt: regenerate the file with Profile --census")
       }
     }
+  }
 }
