@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -14,6 +15,7 @@ import org.apache.spark.sql.execution.aggregate.SortAggregateExec
   *   sbt "runMain graft.Profile --explain q1 q2"  # physical plans
   *   sbt "runMain graft.Profile --explainf q1"    # formatted plans
   *   sbt "runMain graft.Profile --phases q1 q2"   # build/plan/exec/hygiene split
+  *                                                # + jobs/stages per consumed run
   *   sbt "runMain graft.Profile --census [keys]"  # SortAggregate count per key
   *
   * Data dir via SPARK_GRAFT_SF_DIR (defaults to sf0.1 for timing; use
@@ -46,6 +48,17 @@ object Profile {
   def censusKeys: Seq[String] =
     SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).toSeq.sorted
 
+  /** Counts Spark jobs and submitted stages (a reused shuffle's stage is
+    * skipped, never submitted). Events arrive on the listener bus thread;
+    * read [[snapshot]] after draining the bus. */
+  private final class WorkCounter extends SparkListener {
+    @volatile private var jobs = 0
+    @volatile private var stages = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages += 1
+    def snapshot: (Int, Int) = (jobs, stages)
+  }
+
   def main(args: Array[String]): Unit = {
     val explain = args.headOption.contains("--explain") ||
       args.headOption.contains("--explainf")
@@ -59,36 +72,53 @@ object Profile {
     val keys = if (census) Harness.select(censusKeys, names) else names
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(32)
+    val counter = new WorkCounter
+    if (phases) spark.sparkContext.addSparkListener(counter)
     if (!explain && !census) Harness.warmup(spark, d)
     keys.foreach { n =>
       if (phases) {
-        // Split one bench-shaped run (QueryHygiene.run around build+count)
-        // into its phases, for the per-key-constant audit:
+        // Split one bench-shaped run (QueryHygiene.run around build and a
+        // consumed write) into its phases, for the per-key-constant audit:
         //   build = the query closure (DataFrame construction; streaming
         //           fixtures do real work here)
         //   plan  = analysis + optimization + physical planning
-        //   exec1 = first count (includes codegen compile + run)
-        //   exec2 = second count in the same session (warm plan/codegen)
+        //   exec1 = first write of every row and column to the `noop`
+        //           sink, as perfbench's query-mix consumes a key
+        //           (includes codegen compile + run)
+        //   exec2 = second write in the same session (warm plan/codegen)
         //   hyg   = the rest: QueryHygiene's catalog snapshot before the
         //           body and its sweep after it
+        // jobs/stages = exec1/exec2's Spark jobs and submitted (not
+        // skipped) stages, counted by one listener between bus drains.
         def ms(ns: Long): String = f"${ns / 1e6}%8.1f"
-        val t = new Array[Long](5) // the four phases' edges
+        def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+        val dur = new Array[Long](4) // build, plan, exec1, exec2
+        def timed[A](i: Int)(f: => A): A = {
+          val a = System.nanoTime(); val r = f; dur(i) = System.nanoTime() - a; r
+        }
+        val edges = new Array[(Int, Int)](3) // (jobs, stages) around exec1/exec2
+        var drainNs = 0L // the drains stay out of every phase
+        def mark(i: Int): Unit = {
+          val a = System.nanoTime()
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+          edges(i) = counter.snapshot
+          drainNs += System.nanoTime() - a
+        }
         val t0 = System.nanoTime()
         graft.api.QueryHygiene.run(spark, n) {
-          t(0) = System.nanoTime()
-          val df = SparkEntry.queries(n)(spark, d)
-          t(1) = System.nanoTime()
-          df.queryExecution.executedPlan // force analyze+optimize+plan
-          t(2) = System.nanoTime()
-          df.count()
-          t(3) = System.nanoTime()
-          df.count()
-          t(4) = System.nanoTime()
+          val df = timed(0)(SparkEntry.queries(n)(spark, d))
+          timed(1)(df.queryExecution.executedPlan) // force analyze+optimize+plan
+          mark(0)
+          timed(2)(consume(df)); mark(1)
+          timed(3)(consume(df)); mark(2)
         }
-        val total = System.nanoTime() - t0
-        println(f"PHASES $n%-28s build=${ms(t(1) - t(0))} plan=${ms(t(2) - t(1))} " +
-          f"exec1=${ms(t(3) - t(2))} exec2=${ms(t(4) - t(3))} " +
-          f"hyg=${ms(total - (t(4) - t(0)))} total=${ms(total)} ms")
+        val total = System.nanoTime() - t0 - drainNs
+        def delta(f: ((Int, Int)) => Int): String =
+          s"${f(edges(1)) - f(edges(0))}/${f(edges(2)) - f(edges(1))}"
+        println(f"PHASES $n%-28s build=${ms(dur(0))} plan=${ms(dur(1))} " +
+          f"exec1=${ms(dur(2))} exec2=${ms(dur(3))} " +
+          f"hyg=${ms(total - dur.sum)} total=${ms(total)} ms " +
+          s"jobs=${delta(_._1)} stages=${delta(_._2)}")
       } else if (census) {
         val c = graft.api.QueryHygiene.run(spark, n) {
           sortAggregates(SparkEntry.queries(n)(spark, d))

@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *     boundary cumulative is a PARTITIONED window inside each
   *     superbucket;
   *  4. the ≤ 1024-row superbucket summary folds through a bounded
-  *     broadcast range self-join (≤ 1024² pairs by construction).
+  *     broadcast all-pairs self-join (≤ 1024² pairs by construction):
+  *     per superbucket, the sum below it and the grand total.
   *
   * No WindowExec in the plan is unpartitioned; the only nested-loop joins
-  * broadcast a 1-row stats/total relation or the ≤1024-row superbucket
+  * broadcast the 1-row stats relation or the ≤1024-row superbucket
   * summary. The per-bucket boundary relation (lvl2) is NOT statically
   * bounded the same way — it carries one row per non-empty level-1 bucket
   * (up to 2²⁰ × the spec count in the worst case), so its join is left
@@ -58,8 +59,7 @@ object Histograms {
     def aggAll(df: DataFrame, keys: Seq[String], in: Int => String,
                out: Int => String): DataFrame = {
       val aggs = is.map(i => sum(col(in(i))).as(out(i)))
-      if (keys.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-      else df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     }
     val h0 = hist.withColumn("_gh_v", value.cast("long"))
     val withW = is.foldLeft(h0)((df, i) =>
@@ -101,11 +101,14 @@ object Histograms {
     val s2 = aggAll(lvl2, Seq("_gh_b2"), i => s"_gh_bt$i", i => s"_gh_st$i")
     val below = s2.select(col("_gh_b2").as("_gh_b2b") +:
       is.map(i => col(s"_gh_st$i").as(s"_gh_sb$i")): _*)
-    val cum2 = s2.join(broadcast(below), col("_gh_b2b") < col("_gh_b2"), "left")
-      .groupBy("_gh_b2")
-      .agg(coalesce(sum(col("_gh_sb0")), lit(0L)).as("_gh_cb0"),
-        is.tail.map(i => coalesce(sum(col(s"_gh_sb$i")), lit(0L)).as(s"_gh_cb$i")): _*)
-    val totals = aggAll(s2, Seq.empty, i => s"_gh_st$i", i => s"_gh_tt$i")
+    // every superbucket pair (≤ 1024²) gives both the sum below each
+    // superbucket and the grand total
+    val cumAggs = is.flatMap(i => Seq(
+      coalesce(sum(when(col("_gh_b2b") < col("_gh_b2"), col(s"_gh_sb$i"))), lit(0L))
+        .as(s"_gh_cb$i"),
+      sum(col(s"_gh_sb$i")).as(s"_gh_tt$i")))
+    val cum2 = s2.select("_gh_b2").crossJoin(broadcast(below))
+      .groupBy("_gh_b2").agg(cumAggs.head, cumAggs.tail: _*)
     // assemble: boundary(superbucket) + boundary(bucket) + in-bucket.
     // lvl2 (per-bucket boundaries) can reach 2^20 rows × specs, so no
     // static broadcast hint: AQE broadcasts when the runtime size fits
@@ -117,7 +120,6 @@ object Histograms {
         col("_gh_b1") === col("_gh_b1j"))
       .join(broadcast(cum2.withColumnRenamed("_gh_b2", "_gh_b2j")),
         col("_gh_b2") === col("_gh_b2j"))
-      .crossJoin(broadcast(totals))
     val out = is.foldLeft(joined) { (df, i) =>
       val withCum = df.withColumn(specs(i).cumName,
         col(s"_gh_cb$i") + col(s"_gh_c2$i") + col(s"_gh_c1$i"))

@@ -18,6 +18,16 @@ import graft.io.Tables
   *    range, not the row count; every window is group-partitioned over
   *    that histogram. This is the same design win_ntile_dense proved:
   *    global order statistics without a global sort.
+  *  - corr_spearman aggregates lineitem ONCE, into an (x, y) cell
+  *    histogram; it is the only data-sized work (one partial aggregate),
+  *    and every later step is cell- or value-sized. The cells are bounded
+  *    by the TPC-H column domains at every scale factor —
+  *    floor(l_quantity) ∈ [1, 50] and floor(l_extendedprice) div 100 ≤
+  *    1049 — so there are ≤ ~52.5k cells and the all-pairs rank join
+  *    holds ≤ 50² + 1050² pairs. The moment sums run in DECIMAL(38,0)
+  *    with the operands promoted before the multiply: per cell
+  *    c·r2′² ≤ N³ (|r2′| ≤ N), and so is each whole sum, which fits up
+  *    to N ≈ 4.6·10¹² rows; ANSI decimal overflow fails loudly past that.
   *  - vec_power_iteration: s = Aᵀ(A·1) over canon(1e4)-quantized
   *    coordinates — both matvecs are map-side integer sums (per-row
   *    array fold, then a |dim|-cell aggregate), so the result is
@@ -32,48 +42,8 @@ object RobustOps {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Spearman rank correlation between quantity and price (bucketed to
-    // hundreds of dollars): tie-aware DOUBLED midranks per value bucket
-    // (r2 = 2·cum_lt + n_b + 1 — the auc_eval trick, everything BIGINT),
-    // then Pearson over the per-row midrank pairs. Both rank maps are
-    // value-bounded histograms; the only data-sized work is two
-    // broadcast joins and one moment aggregate. All moment math runs in
-    // DECIMAL(38,0): Σr2'² reaches 4N³ (past int64 from ~1.3M rows —
-    // the sf1 sweep hit exactly this), and the per-row product 4N²
-    // wraps int64 from N ≈ 1.5·10⁹ rows — under the 100 TB design
-    // scale — so the operands are promoted BEFORE the multiply
-    // (decimal(19,0)² fits decimal(38,0) up to N ≈ 4·10¹² rows). The
-    // decimal cost is per-row multiply + aggregate buffers; the final
-    // ρ math is double.
-    "corr_spearman" -> ((s, d) => {
-      val rows = Tables.lineitem(s, d).select(
-        floor(col("l_quantity")).cast("long").as("x"),
-        expr("CAST(floor(l_extendedprice) AS BIGINT) div 100").as("y"))
-      // CENTERED doubled midranks r2' = r2 − (N+1): midranks always sum
-      // to N(N+1)/2 exactly (ties included), so Σr2' = 0 EXACTLY and
-      // Pearson collapses to sxy/√(sxx·syy) — every sum stays ≤ ~N³,
-      // inside int64 where the uncentered N⁴ cross terms overflow.
-      def midranks(c: String): DataFrame = {
-        val h = rows.groupBy(c).agg(count(lit(1)).as("nb"))
-        graft.api.Histograms.cumulativeFold(h, col(c),
-            Seq(graft.api.Histograms.CumSpec(col("nb"), "cum_lt", Some("ntot"))))
-          .withColumn(s"r2$c",
-            lit(2L) * col("cum_lt") + col("nb") - col("ntot"))
-          .select(col(c), col(s"r2$c"))
-      }
-      rows.join(broadcast(midranks("x")), "x")
-        .join(broadcast(midranks("y")), "y")
-        .withColumn("r2xd", col("r2x").cast("decimal(19,0)"))
-        .withColumn("r2yd", col("r2y").cast("decimal(19,0)"))
-        .agg(count(lit(1)).as("n"),
-          sum((col("r2xd") * col("r2xd")).cast("decimal(38,0)")).as("sxx"),
-          sum((col("r2yd") * col("r2yd")).cast("decimal(38,0)")).as("syy"),
-          sum((col("r2xd") * col("r2yd")).cast("decimal(38,0)")).as("sxy"))
-        .select(col("n"),
-          when(col("sxx") > 0 && col("syy") > 0,
-            floor(col("sxy").cast("double") /
-              (sqrt(col("sxx").cast("double")) * sqrt(col("syy").cast("double")))
-              * lit(10000.0)).cast("long")).as("rho_c"))
-    }),
+    // hundreds of dollars): see [[spearman]].
+    "corr_spearman" -> ((s, d) => spearman(Tables.lineitem(s, d))),
 
     // Weighted median unit price per return flag, weighted by quantity
     // units: smallest price bucket where twice the cumulative weight
@@ -215,6 +185,66 @@ object RobustOps {
         .orderBy("t1", "t2")
     })
   )
+
+  /** Spearman ρ between `floor(l_quantity)` and `floor(l_extendedprice)
+    * div 100`, as `(n, rho_c)` with ρ floor-quantized to 10⁻⁴ (null when
+    * either axis has no spread). Tie-aware CENTERED doubled midranks
+    * r2′ = 2·cum_lt + nb − ntot: midranks sum to N(N+1)/2 exactly, so
+    * Σr2′ = 0 and Pearson collapses to sxy/√(sxx·syy).
+    *
+    * The data is aggregated ONCE, into the (x, y) cell histogram `cells`;
+    * everything after it is cell- or value-sized:
+    *  - both marginals come off `cells` in one aggregate, stacked as
+    *    (axis, v, nb);
+    *  - both midrank maps come from one broadcast equi-join on `axis`
+    *    (cum_lt = Σ nb₂ over smaller values, ntot = Σ nb₂). A null value
+    *    counts in ntot and in no cum_lt, and has no rank itself, so a
+    *    cell with a null coordinate drops out of the moments;
+    *  - the rank table broadcasts back onto `cells` (stacked per axis)
+    *    for the three c-weighted moment sums.
+    * Scale bounds and decimal headroom: see the object header.
+    */
+  def spearman(lineitem: DataFrame): DataFrame = {
+    val cells = lineitem.select(
+        floor(col("l_quantity")).cast("long").as("x"),
+        expr("CAST(floor(l_extendedprice) AS BIGINT) div 100").as("y"))
+      .groupBy("x", "y").agg(count(lit(1)).as("c"))
+    // every cell once per axis, keyed by its value on that axis
+    val byAxis = cells.select(col("x"), col("y"), col("c"),
+      expr("stack(2, 0, x, 1, y)").as(Seq("axis", "v")))
+    val marginals = byAxis.groupBy("axis", "v").agg(sum("c").as("nb"))
+    val ranks = marginals
+      .join(broadcast(marginals.select(col("axis"), col("v").as("v2"), col("nb").as("nb2"))),
+        "axis")
+      .groupBy("axis", "v", "nb")
+      .agg(coalesce(sum(when(col("v2") < col("v"), col("nb2"))), lit(0L)).as("cum_lt"),
+        sum("nb2").as("ntot"))
+      .select(col("axis").as("ra"), col("v").as("rv"),
+        when(col("v").isNotNull, lit(2L) * col("cum_lt") + col("nb") - col("ntot")).as("r2"))
+    // (x, y) stays cells' partitioning through the stack and the
+    // broadcast join, so regrouping the two ranks per cell needs no
+    // shuffle. `<=>` keeps the optimizer from inferring `v IS NOT NULL`
+    // into the rank join's streamed side: both sides then stay one
+    // marginals exchange (a null value matches its own null rank).
+    val ranked = byAxis.join(broadcast(ranks),
+        col("axis") === col("ra") && col("v") <=> col("rv"))
+      .groupBy("x", "y", "c")
+      .agg(max(when(col("axis") === 0, col("r2"))).cast("decimal(19,0)").as("r2x"),
+        max(when(col("axis") === 1, col("r2"))).cast("decimal(19,0)").as("r2y"))
+      .filter(col("r2x").isNotNull && col("r2y").isNotNull)
+      .withColumn("cd", col("c").cast("decimal(19,0)"))
+    // moments in DECIMAL(38,0), operands promoted before the multiply
+    def moment(a: String, b: String) =
+      sum((col("cd") * col(a) * col(b)).cast("decimal(38,0)"))
+    ranked.agg(coalesce(sum("c"), lit(0L)).as("n"),
+        moment("r2x", "r2x").as("sxx"), moment("r2y", "r2y").as("syy"),
+        moment("r2x", "r2y").as("sxy"))
+      .select(col("n"),
+        when(col("sxx") > 0 && col("syy") > 0,
+          floor(col("sxy").cast("double") /
+            (sqrt(col("sxx").cast("double")) * sqrt(col("syy").cast("double")))
+            * lit(10000.0)).cast("long")).as("rho_c"))
+  }
 
   def oracles: Map[String, String] = Map(
     "eval_kendall_tau_daily" ->

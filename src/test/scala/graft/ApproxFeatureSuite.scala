@@ -185,6 +185,61 @@ class ApproxFeatureSuite extends AnyFunSuite {
     assert(rho >= -10000 && rho <= 10000)
   }
 
+  /** corr_spearman as it was planned before the cell histogram: one
+    * range-partitioned [[graft.api.Histograms.cumulativeFold]] per axis,
+    * both midrank maps broadcast back over the data rows. */
+  private def spearmanByFolds(lineitem: org.apache.spark.sql.DataFrame) = {
+    import graft.api.Histograms.{CumSpec, cumulativeFold}
+    val rows = lineitem.select(
+      floor(col("l_quantity")).cast("long").as("x"),
+      expr("CAST(floor(l_extendedprice) AS BIGINT) div 100").as("y"))
+    def midranks(c: String) =
+      cumulativeFold(rows.groupBy(c).agg(count(lit(1)).as("nb")), col(c),
+          Seq(CumSpec(col("nb"), "cum_lt", Some("ntot"))))
+        .select(col(c), (lit(2L) * col("cum_lt") + col("nb") - col("ntot"))
+          .cast("decimal(19,0)").as(s"r2$c"))
+    def moment(a: String, b: String) = sum((col(a) * col(b)).cast("decimal(38,0)"))
+    rows.join(broadcast(midranks("x")), "x").join(broadcast(midranks("y")), "y")
+      .agg(count(lit(1)).as("n"), moment("r2x", "r2x").as("sxx"),
+        moment("r2y", "r2y").as("syy"), moment("r2x", "r2y").as("sxy"))
+      .select(col("n"),
+        when(col("sxx") > 0 && col("syy") > 0,
+          floor(col("sxy").cast("double") /
+            (sqrt(col("sxx").cast("double")) * sqrt(col("syy").cast("double")))
+            * lit(10000.0)).cast("long")).as("rho_c"))
+  }
+
+  test("corr_spearman cell histogram ≡ the two-fold plan on ties, nulls and degenerate inputs") {
+    def lineitem(rows: Seq[(Option[Double], Option[Double])]) =
+      rows.toDF("l_quantity", "l_extendedprice")
+    val rnd = new scala.util.Random(11)
+    // 3 quantities × 4 price buckets, skewed so the ranks correlate
+    val ties = (1 to 400).map { i =>
+      val q = 1 + i % 3
+      (Some(q + rnd.nextDouble()), Some(100.0 * (q + rnd.nextInt(2)) + rnd.nextInt(100)))
+    }
+    val nulls = ties.zipWithIndex.map {
+      case ((_, p), i) if i % 7 == 0 => (None, p)
+      case ((q, _), i) if i % 11 == 0 => (q, None)
+      case (r, _) => r
+    }
+    val oneQuantity = ties.map { case (_, p) => (Some(5.5), p) }
+    val cases = Seq("ties" -> ties, "nulls" -> nulls, "one quantity" -> oneQuantity,
+      "empty" -> Seq.empty[(Option[Double], Option[Double])])
+    val got = cases.map { case (name, rows) =>
+      val li = lineitem(rows)
+      val (want, have) = (spearmanByFolds(li).collect().toSeq,
+        graft.ops.RobustOps.spearman(li).collect().toSeq)
+      assert(have == want, name)
+      name -> have.head
+    }.toMap
+    val nonNull = nulls.count { case (q, p) => q.isDefined && p.isDefined }
+    assert(got("nulls").getLong(0) == nonNull, "a row with a null axis is not ranked")
+    assert(!got("ties").isNullAt(1) && got("ties").getLong(1) > 0)
+    assert(got("one quantity").isNullAt(1), "no spread on x: rho_c is null")
+    assert(got("empty").getLong(0) == 0L && got("empty").isNullAt(1))
+  }
+
   test("feature_bin_quantile: bins partition orders, ranges ordered, sizes near N/10") {
     val rows = SparkEntry.queries("feature_bin_quantile")(spark, d)
       .as[(Long, Long, Long, Long)].collect()

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 
 /** Physical-plan regression tests: docs/PLANS.md documents the plans each
   * operator is DESIGNED to produce; this suite pins the load-bearing
@@ -54,7 +56,6 @@ class PlanSuite extends AnyFunSuite {
 
   test("compaction keeps its window: a partial WindowGroupLimit runs before the exchange") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -87,22 +88,37 @@ class PlanSuite extends AnyFunSuite {
     }
   }
 
+  /** The scans `p` reads without a hash aggregate in between. */
+  private def unaggregated(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: HashAggregateExec => Nil
+    case s: FileSourceScanExec => Seq(s)
+    case _ => p.children.flatMap(unaggregated)
+  }
+
   test("table_column_stats plans no Expand; its sort aggregates read only aggregated input") {
-    import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     val nodes = Profile.planNodes(
       SparkEntry.queries("table_column_stats")(spark, TestSpark.sfDir))
     assert(!nodes.exists(_.isInstanceOf[ExpandExec]), nodes.head.treeString)
-    // the scans a node reads without a hash aggregate in between
-    def unaggregated(p: SparkPlan): Seq[SparkPlan] = p match {
-      case _: HashAggregateExec => Nil
-      case s: FileSourceScanExec => Seq(s)
-      case _ => p.children.flatMap(unaggregated)
-    }
     val sorts = nodes.collect { case a: SortAggregateExec => a }
     assert(sorts.nonEmpty, "the string min/max still needs a sort aggregate")
     sorts.foreach(a => assert(a.children.flatMap(unaggregated).isEmpty,
       s"a sort aggregate reads the lineitem scan unaggregated:\n${nodes.head.treeString}"))
+  }
+
+  test("corr_spearman joins only aggregated lineitem: no window, no nested-loop join") {
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val nodes = Profile.planNodes(
+      SparkEntry.queries("corr_spearman")(spark, TestSpark.sfDir))
+    val plan = nodes.head.treeString
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), plan)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), plan)
+    val joins = nodes.collect { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty, plan)
+    joins.foreach(j => assert(j.children.flatMap(unaggregated).isEmpty,
+      s"a join reads lineitem rows before the cell aggregate:\n$plan"))
   }
 
   test("join_bucketed sort-merge-joins with no exchange below the join") {

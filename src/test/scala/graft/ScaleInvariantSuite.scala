@@ -77,10 +77,10 @@ class ScaleInvariantSuite extends AnyFunSuite {
     "emb_covariance_topk",  // × single-row vector count (n for n·Σxy − ΣxΣy)
     "stats_selectivity_probe", // × 1-row stats + 3-row probe panel + 256-cell hist
     // range-partitioned histogram folds (api/Histograms.cumulativeFold):
-    // 1-row stats/total broadcasts + the bounded (<=1024-row)
-    // superbucket boundary self-join
+    // the 1-row stats broadcast + the bounded (<=1024-row) superbucket
+    // boundary self-join
     "auc_eval", "score_percentile_norm", "orders_value_pareto",
-    "abc_xyz_matrix", "feature_bin_quantile", "corr_spearman",
+    "abc_xyz_matrix", "feature_bin_quantile",
     "corpus_shuffle_order", "train_shard_manifest", "quality_pipeline_e2e",
     "q15_top_supplier",  // × single-row max-revenue bound
     "q22_idle_customers", // × single-row positive-balance average
@@ -162,6 +162,35 @@ class ScaleInvariantSuite extends AnyFunSuite {
         run += (i % 13 + 1).toLong
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  // the superbucket all-pairs join yields both the prefix below each
+  // superbucket and the grand totals: check both, per spec, across many
+  // superbuckets, negative values and weights, and every fold direction
+  test("cumulativeFold: two specs over negative values ≡ brute force, both orders, inclusive or not") {
+    import org.apache.spark.sql.functions.col
+    import graft.api.Histograms.{CumSpec, cumulativeFold}
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    val rows = (0 until 50).map { i =>
+      ((rnd.nextInt(2000) - 1000L) + i * 5000L * (if (i % 2 == 0) 1 else -1),
+        rnd.nextInt(9) + 1L, rnd.nextInt(5) - 2L)
+    }.distinctBy(_._1)
+    val hist = rows.toDF("v", "w", "u")
+    for (asc <- Seq(true, false); inclusive <- Seq(true, false)) {
+      val got = cumulativeFold(hist, col("v"),
+          Seq(CumSpec(col("w"), "cw", Some("tw")), CumSpec(col("u"), "cu", Some("tu"))),
+          asc, inclusive)
+        .select("v", "cw", "tw", "cu", "tu").as[(Long, Long, Long, Long, Long)]
+        .collect().sortBy(_._1).toSeq
+      def cum(v: Long, f: ((Long, Long, Long)) => Long) = rows.filter { r =>
+        val before = if (asc) r._1 < v else r._1 > v
+        before || (inclusive && r._1 == v)
+      }.map(f).sum
+      val want = rows.sortBy(_._1).map(r => (r._1, cum(r._1, _._2), rows.map(_._2).sum,
+        cum(r._1, _._3), rows.map(_._3).sum))
+      assert(got == want, s"ascending=$asc inclusive=$inclusive")
+    }
   }
 
   private val census: Map[String, Int] = {
