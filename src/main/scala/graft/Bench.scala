@@ -81,8 +81,8 @@ object Bench {
     // the canary samples bracketing the band inflate with it, turning "box
     // noise" from a post-hoc story into per-run evidence. Warmed once
     // untimed; ~50 ms/set steady-state, EXCLUDED from the reported total
-    // (they are not queries). Disable with SPARK_GRAFT_CANARY=0.
-    val canaryOn = sys.env.getOrElse("SPARK_GRAFT_CANARY", "1") != "0" && only.isEmpty
+    // (they are not queries). Off when SPARK_GRAFT_ONLY selects a subset.
+    val canaryOn = only.isEmpty
     val canaryEvery = 40
     val canaries: Seq[(String, () => Unit)] = {
       import org.apache.spark.sql.functions._

@@ -41,15 +41,15 @@ object Harness {
           .groupBy("n_regionkey").count().collect(); ()
       }),
       "kernels" -> (() => {
+        import graft.catalyst.Kernels._
         val w = spark.range(1000).toDF("id").localCheckpoint()
+        def bits(c: String) = bitsetFromIds(array((col(c) % 64).cast("int") + 1), lit(1))
+        val one = array(lit(1.0f))
         w.join(broadcast(w.select(col("id").as("j"))), col("id") === col("j"))
-          .selectExpr(
-            "bitset_intersect_count(bitset_from_ids(array(CAST(id % 64 AS INT) + 1), 1)," +
-              " bitset_from_ids(array(CAST(j % 64 AS INT) + 1), 1))",
-            "ngram_shingles('warmup text', 5)", "word_bigrams('warmup text here')",
-            "vec_dot(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))",
-            "vec_sqdist(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))",
-            "aggregate(sequence(1, 3), 0L, (a, x) -> a + x)")
+          .select(bitsetIntersectCount(bits("id"), bits("j")),
+            ngramShingles(lit("warmup text"), lit(5)), wordBigrams(lit("warmup text here")),
+            vecDot(one, one), vecSqDist(one, array(lit(2.0f))),
+            aggregate(sequence(lit(1), lit(3)), lit(0L), (a, x) => a + x))
           .collect(); ()
       }),
       "stream" -> (() => graft.streaming.StreamOps.warmup(spark)))

@@ -11,11 +11,11 @@ import org.apache.spark.sql.execution.aggregate.SortAggregateExec
   * the same session Bench and Verify build ([[Harness.session]], graft
   * extension and its post-planner rule installed).
   *
-  *   sbt "runMain graft.Profile q1 q2"            # per-query wall time
+  *   sbt "runMain graft.Profile q1 q2"            # build/plan/exec/hygiene split
+  *                                                # + jobs/stages per consumed run
+  *                                                # (same as `--phases q1 q2`)
   *   sbt "runMain graft.Profile --explain q1 q2"  # physical plans
   *   sbt "runMain graft.Profile --explainf q1"    # formatted plans
-  *   sbt "runMain graft.Profile --phases q1 q2"   # build/plan/exec/hygiene split
-  *                                                # + jobs/stages per consumed run
   *   sbt "runMain graft.Profile --census [keys]"  # SortAggregate count per key
   *
   * Data dir via SPARK_GRAFT_SF_DIR (defaults to sf0.1 for timing; use
@@ -60,21 +60,23 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
-    val explain = args.headOption.contains("--explain") ||
-      args.headOption.contains("--explainf")
-    val phases = args.headOption.contains("--phases")
-    val census = args.headOption.contains("--census")
+    val mode = args.headOption.filter(Set("--explain", "--explainf", "--phases", "--census"))
+    val explain = mode.exists(_.startsWith("--explain"))
+    val census = mode.contains("--census")
+    val phases = !explain && !census
     // --explainf: FormattedMode (the `.explain("formatted")` shape the
     // optimization-round plan dumps under plans/ use); --explain stays
     // SimpleMode to match docs/PLANS.md.
-    val formatted = args.headOption.contains("--explainf")
-    val names = (if (explain || phases || census) args.drop(1) else args).toSeq
+    val formatted = mode.contains("--explainf")
+    val names = (if (mode.isDefined) args.drop(1) else args).toSeq
     val keys = if (census) Harness.select(censusKeys, names) else names
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(32)
     val counter = new WorkCounter
-    if (phases) spark.sparkContext.addSparkListener(counter)
-    if (!explain && !census) Harness.warmup(spark, d)
+    if (phases) {
+      spark.sparkContext.addSparkListener(counter)
+      Harness.warmup(spark, d)
+    }
     keys.foreach { n =>
       if (phases) {
         // Split one bench-shaped run (QueryHygiene.run around build and a
@@ -124,20 +126,12 @@ object Profile {
           sortAggregates(SparkEntry.queries(n)(spark, d))
         }
         if (c > 0) println(s"SORTAGG $n $c")
-      } else if (explain) {
+      } else {
         val df = SparkEntry.queries(n)(spark, d)
         println(s"===== $n =====")
         println(df.queryExecution.explainString(
           if (formatted) org.apache.spark.sql.execution.FormattedMode
           else org.apache.spark.sql.execution.SimpleMode))
-      } else {
-        // time construction + count: streaming fixtures (and adaptive
-        // plan probes) do real work eagerly while the query is BUILT —
-        // timing only the terminal action would hide it (Bench times
-        // both the same way)
-        val t0 = System.nanoTime()
-        val c = SparkEntry.queries(n)(spark, d).count()
-        println(f"QUERY $n%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$c")
       }
     }
     spark.stop()

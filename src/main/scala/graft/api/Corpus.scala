@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.catalyst.Kernels
 
 /** User-facing corpus-analysis & packing API (the §2.12 operators as
   * column-parameterized, DataFrame-in/DataFrame-out functions an adopter
@@ -34,9 +35,8 @@ object Corpus {
     * counts) and `dup_tok_frac` / `dup_big_frac` (raw doubles). Uses the
     * native word_bigrams kernel; map-only. */
   def repetitionStats(df: DataFrame, text: Column): DataFrame = {
-    graft.catalyst.GraftExtensions.install(df.sparkSession)
     val toks = split(text, " ")
-    val bigs = call_function("word_bigrams", text)
+    val bigs = Kernels.wordBigrams(text)
     df.withColumn("n_tok", size(toks).cast("long"))
       .withColumn("n_dup_tok", (size(toks) - size(array_distinct(toks))).cast("long"))
       .withColumn("n_dup_big", (size(bigs) - size(array_distinct(bigs))).cast("long"))
@@ -138,7 +138,6 @@ object Corpus {
     * collisions — two self-joins on an integer key, never a cross join. */
   def srpLshPairs(df: DataFrame, id: Column, vec: Column, dim: Int,
                   tau: Double): DataFrame = {
-    graft.catalyst.GraftExtensions.install(df.sparkSession)
     val planes: IndexedSeq[Seq[Double]] =
       (0 until 16).map(b => (1 to dim).map(i => srpSign(b, i)))
     val bit = (b: Int) =>

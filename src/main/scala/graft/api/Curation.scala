@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.catalyst.Kernels
 
 /** User-facing training-data curation API: DataFrame-in/DataFrame-out,
   * column-parameterized — the library surface an adopter calls on their
@@ -81,8 +82,6 @@ object Curation {
                    len: Column, tau: Double, lenBand: Int = 20,
                    denseDictLimit: Int = 4096,
                    broadcastRowLimit: Long = 500000L): DataFrame = {
-    val s = docs.sparkSession
-    graft.catalyst.GraftExtensions.install(s)
     val docsT = docs.select(id.cast("long").as("doc_id"), group.as("grp"),
         len.cast("long").as("len"), tokens.as("tks"))
       .localCheckpoint() // feeds the vocab probe and both strategies
@@ -92,7 +91,7 @@ object Curation {
       val (dictMap, nWords) = dict.get
       val sets = docsT.select(col("doc_id"), col("grp"), col("len"),
         size(col("tks")).cast("long").as("n"),
-        call_function("bitset_from_tokens", col("tks"), dictMap, lit(nWords)).as("bs"))
+        Kernels.bitsetFromTokens(col("tks"), dictMap, lit(nWords)).as("bs"))
       val a = sets.select(col("doc_id").as("d1"), col("grp").as("g1"),
           col("len").as("c1"), col("n").as("n1"), col("bs").as("b1"))
         .withColumn("cb1", floor(col("c1") / lenBand))
@@ -108,7 +107,7 @@ object Curation {
       a.join(bSide, col("g1") === col("g2") && col("cb1") === col("cb2") &&
           col("d1") < col("d2") && abs(col("c1") - col("c2")) <= lenBand &&
           col("n2") >= col("n1") * tau && col("n1") >= col("n2") * tau)
-        .withColumn("shared", call_function("bitset_intersect_count", col("b1"), col("b2")))
+        .withColumn("shared", Kernels.bitsetIntersectCount(col("b1"), col("b2")))
         .filter(col("shared") * lit(1.0) / (col("n1") + col("n2") - col("shared")) >= tau)
         .select(col("d1"), col("d2"), col("shared"), col("n1"), col("n2"))
     } else {
@@ -178,13 +177,12 @@ object Curation {
   def decontaminate(corpus: DataFrame, corpusId: Column, corpusText: Column,
                     bench: DataFrame, benchId: Column, benchText: Column,
                     n: Int): DataFrame = {
-    graft.catalyst.GraftExtensions.install(corpus.sparkSession)
     val c = graft.io.Tables.fanOut(corpus.select(corpusId.as("doc_id"),
         corpusText.as("_graft_text")))
       .select(col("doc_id"),
-        explode(call_function("ngram_shingles", col("_graft_text"), lit(n))).as("g"))
+        explode(Kernels.ngramShingles(col("_graft_text"), lit(n))).as("g"))
     val b = bench.select(benchId.as("bdoc"),
-      explode(call_function("ngram_shingles", benchText, lit(n))).as("g"))
+      explode(Kernels.ngramShingles(benchText, lit(n))).as("g"))
     c.join(broadcast(b), "g")
       .groupBy("doc_id")
       .agg(countDistinct(col("bdoc")).as("n_bench_hits"))

@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.catalyst.Kernels
 
 /** Text-relevance scoring API: TF-IDF and BM25 ranking against a fixed
   * query-term set, and a bigram language-model scorer (the
@@ -124,10 +125,9 @@ object Relevance {
     * (auto-broadcast when small; vocab-keyed shuffle joins at scale). */
   def bigramLmScore(docs: DataFrame, id: Column, group: Column,
                     text: Column): DataFrame = {
-    graft.catalyst.GraftExtensions.install(docs.sparkSession)
     val base = docs.select(id.as("_graft_id"), group.as("_graft_g"),
       split(text, " ").as("_graft_toks"),
-      call_function("word_bigrams", text).as("_graft_bigs"))
+      Kernels.wordBigrams(text).as("_graft_bigs"))
     val uni = base.select(col("_graft_g"), explode(col("_graft_toks")).as("_graft_w"))
     val cu = uni.groupBy("_graft_g", "_graft_w").agg(count(lit(1)).as("_graft_cu"))
     val vb = uni.groupBy("_graft_g")
@@ -165,17 +165,16 @@ object Relevance {
     * them by key — nothing is ever both-sides-large. */
   def bigramLmEval(train: DataFrame, eval: DataFrame, id: Column,
                    group: Column, text: Column): DataFrame = {
-    graft.catalyst.GraftExtensions.install(train.sparkSession)
     val tUni = train.select(group.as("_graft_g"),
         explode(split(text, " ")).as("_graft_w"))
     val cu = tUni.groupBy("_graft_g", "_graft_w").agg(count(lit(1)).as("_graft_cu"))
     val vb = tUni.groupBy("_graft_g")
       .agg(count_distinct(col("_graft_w")).as("_graft_v"))
     val cb = train.select(group.as("_graft_g"),
-        explode(call_function("word_bigrams", text)).as("_graft_b"))
+        explode(Kernels.wordBigrams(text)).as("_graft_b"))
       .groupBy("_graft_g", "_graft_b").agg(count(lit(1)).as("_graft_cb"))
     val evBi = eval.select(id.as("_graft_id"), group.as("_graft_g"),
-      explode(call_function("word_bigrams", text)).as("_graft_b"))
+      explode(Kernels.wordBigrams(text)).as("_graft_b"))
     val p = (coalesce(col("_graft_cb"), lit(0L)) + lit(1.0)) /
       (coalesce(col("_graft_cu"), lit(0L)) + col("_graft_v"))
     evBi

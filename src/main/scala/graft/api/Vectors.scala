@@ -3,23 +3,21 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.catalyst.Kernels
+import graft.io.Tables
 
 /** User-facing vector/similarity API over embedding columns
   * (`array<float>` or `array<double>`). The scalar helpers are Column
   * functions backed by the native codegen'd kernels
-  * (graft.catalyst.VecExpressions) — call [[graft.catalyst
-  * .GraftExtensions.install]] on the session first (the DataFrame
-  * operators below do it for you); accumulation order is fixed
-  * left-to-right double, so results are reproducible across engines.
+  * (graft.catalyst.VecExpressions); they and the DataFrame operators
+  * below work on any session, with no extension or registration.
+  * Accumulation order is fixed left-to-right double, so results are
+  * reproducible across engines.
   */
 object Vectors {
 
-  /** Scale-adaptive fan-out for a CPU-heavy kernel input — see
-    * [[graft.io.Tables.fanOut]] (shared by the dedup/text kernels too). */
-  private def fanOut(df: DataFrame): DataFrame = graft.io.Tables.fanOut(df)
-
   /** In-order double dot product of two vector columns. */
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def dot(a: Column, b: Column): Column = Kernels.vecDot(a, b)
 
   /** L2 norm of a vector column. */
   def norm(v: Column): Column = sqrt(dot(v, v))
@@ -28,7 +26,7 @@ object Vectors {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Squared L2 distance of two vector columns. */
-  def sqDist(a: Column, b: Column): Column = call_function("vec_sqdist", a, b)
+  def sqDist(a: Column, b: Column): Column = Kernels.vecSqDist(a, b)
 
   /** Exact k-nearest-neighbors by squared L2: for every query row, the
     * `k` nearest data rows (self-matches by id excluded). The query side
@@ -37,8 +35,7 @@ object Vectors {
     * `(qid, rank, id, dist)` with rank 1..k (ties broken by id). */
   def knn(data: DataFrame, id: Column, vec: Column,
           queries: DataFrame, qid: Column, qvec: Column, k: Int): DataFrame = {
-    graft.catalyst.GraftExtensions.install(data.sparkSession)
-    val d = fanOut(data.select(id.cast("long").as("id"), vec.as("v")))
+    val d = Tables.fanOut(data.select(id.cast("long").as("id"), vec.as("v")))
     val q = queries.select(qid.cast("long").as("qid"), qvec.as("qv"))
     // null distances (null/ragged vectors) must sort LAST, not rank 1
     val w = Window.partitionBy("qid").orderBy(col("dist").asc_nulls_last, col("id"))
@@ -69,14 +66,13 @@ object Vectors {
   def knnQuantized(data: DataFrame, id: Column, vec: Column,
                    queries: DataFrame, qid: Column, qvec: Column,
                    k: Int, scale: Long = 100000L): DataFrame = {
-    graft.catalyst.GraftExtensions.install(data.sparkSession)
-    val d = fanOut(data.select(id.cast("long").as("id"), quantize(vec, scale).as("v")))
+    val d = Tables.fanOut(data.select(id.cast("long").as("id"), quantize(vec, scale).as("v")))
     val q = queries.select(qid.cast("long").as("qid"),
       quantize(qvec, scale).as("qv"))
     val w = Window.partitionBy("qid").orderBy(col("dist").asc_nulls_last, col("id"))
     d.crossJoin(broadcast(q))
       .filter(col("id") =!= col("qid"))
-      .withColumn("dist", call_function("vec_sqdist_long", col("v"), col("qv")))
+      .withColumn("dist", Kernels.vecSqDistLong(col("v"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("id"), col("dist"))
@@ -86,7 +82,6 @@ object Vectors {
     * (one-row `queries` DataFrame). Returns `(id, cos)`, best first. */
   def cosineTopK(data: DataFrame, id: Column, vec: Column,
                  query: DataFrame, qvec: Column, k: Int): DataFrame = {
-    graft.catalyst.GraftExtensions.install(data.sparkSession)
     val d = data.select(id.cast("long").as("id"), vec.as("v"))
     val q = query.select(qvec.as("qv"))
     d.crossJoin(broadcast(q))

@@ -1,7 +1,8 @@
 package graft.catalyst
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
@@ -206,7 +207,7 @@ object Bitsets {
   * words) from an array of 1-based dictionary ids. `nWords` must be a
   * foldable non-negative integer. */
 case class BitsetFromIdsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernels.Named {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -226,14 +227,12 @@ case class BitsetFromIdsExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BitsetFromIdsExpr =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "bitset_from_ids"
 }
 
 /** `bitset_intersect_count(a, b)`: BIGINT popcount of the pairwise AND of
   * two equal-width bitsets. */
 case class BitsetIntersectCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernels.Named {
 
   override def dataType: DataType = LongType
 
@@ -255,15 +254,13 @@ case class BitsetIntersectCountExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BitsetIntersectCountExpr =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "bitset_intersect_count"
 }
 
 /** `bitset_containment_shared(a, b, n1)`: early-exit containment verify
   * (see [[Bitsets.containmentShared]]) — exact shared count when
   * ≥ ⌈0.8·n1⌉, −1 otherwise. */
 case class BitsetContainmentSharedExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with Kernels.Named {
 
   override def dataType: DataType = LongType
 
@@ -288,15 +285,13 @@ case class BitsetContainmentSharedExpr(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): BitsetContainmentSharedExpr =
     copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def prettyName: String = "bitset_containment_shared"
 }
 
 /** `sorted_intersect_count(a, b)`: BIGINT |A ∩ B| of two SORTED
   * array<bigint> by two-pointer merge (see
   * [[Bitsets.sortedIntersectCount]]). */
 case class SortedIntersectCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernels.Named {
 
   override def dataType: DataType = LongType
 
@@ -318,14 +313,12 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "sorted_intersect_count"
 }
 
 /** `packed_tf_min_overlap(a, b)`: Σ min(tf) over shared ids of two sorted
   * `id << 20 | tf`-packed arrays (see [[Bitsets.packedTfMinOverlap]]). */
 case class PackedTfMinOverlapExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernels.Named {
 
   override def dataType: DataType = LongType
 
@@ -347,14 +340,12 @@ case class PackedTfMinOverlapExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PackedTfMinOverlapExpr =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "packed_tf_min_overlap"
 }
 
 /** `word_bigrams(text)`: consecutive space-separated word bigrams (see
   * [[Bitsets.wordBigrams]]). */
 case class WordBigramsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with Kernels.Named {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -373,8 +364,6 @@ case class WordBigramsExpr(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): WordBigramsExpr =
     copy(child = newChild)
-
-  override def prettyName: String = "word_bigrams"
 }
 
 /** `bitset_from_tokens(tokens, dictMap, nWords)`: dense bitset from an
@@ -383,7 +372,7 @@ case class WordBigramsExpr(child: Expression)
   * the per-row cost is one hash lookup per token — the zero-shuffle
   * dictionary-encode used by the small-dictionary dedup strategies. */
 case class BitsetFromTokensExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends TernaryExpression with Kernels.Named {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -414,14 +403,12 @@ case class BitsetFromTokensExpr(first: Expression, second: Expression, third: Ex
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): BitsetFromTokensExpr =
     copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def prettyName: String = "bitset_from_tokens"
 }
 
 /** `ngram_shingles(text, n)`: distinct character n-gram array of a string
   * (see [[Bitsets.ngramShingles]] for the exact SQL-equivalent semantics). */
 case class NgramShinglesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernels.Named {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -441,6 +428,4 @@ case class NgramShinglesExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NgramShinglesExpr =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "ngram_shingles"
 }

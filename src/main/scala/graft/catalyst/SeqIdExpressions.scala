@@ -39,7 +39,7 @@ object SeqIdCodec {
 
 /** `seq_id_decode_native(id)`: BIGINT sequence prefix of a seq-id, null if
   * the input is not a well-formed `<digits>::<suffix>` id. */
-case class SeqIdDecodeExpr(child: Expression) extends UnaryExpression {
+case class SeqIdDecodeExpr(child: Expression) extends UnaryExpression with Kernels.Named {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
@@ -61,6 +61,4 @@ case class SeqIdDecodeExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SeqIdDecodeExpr =
     copy(child = newChild)
-
-  override def prettyName: String = "seq_id_decode_native"
 }

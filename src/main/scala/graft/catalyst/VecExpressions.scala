@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * inside whole-stage codegen. Element types may be FLOAT or DOUBLE on
   * either side (embeddings are float; derived centroids are double).
   */
-abstract class VecFoldExpr extends BinaryExpression {
+abstract class VecFoldExpr extends BinaryExpression with Kernels.Named {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -96,7 +96,6 @@ case class VecDotExpr(left: Expression, right: Expression) extends VecFoldExpr {
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDotExpr =
     copy(left = newLeft, right = newRight)
-  override def prettyName: String = "vec_dot"
 }
 
 /** `vec_sqdist_long(a, b)`: exact squared L2 distance of two
@@ -111,7 +110,7 @@ case class VecDotExpr(left: Expression, right: Expression) extends VecFoldExpr {
   * element yields NULL. Overflow note: |q|≤2^20-scaled unit vectors of
   * dim ≤ 4096 stay far inside int64 (diff² ≤ 2^42 · dim). */
 case class VecSqDistLongExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernels.Named {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 
   override def dataType: DataType = LongType
@@ -163,7 +162,6 @@ case class VecSqDistLongExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecSqDistLongExpr =
     copy(left = newLeft, right = newRight)
-  override def prettyName: String = "vec_sqdist_long"
 }
 
 /** `vec_sqdist(a, b)`: in-order squared L2 distance of two numeric arrays. */
@@ -174,5 +172,4 @@ case class VecSqDistExpr(left: Expression, right: Expression) extends VecFoldExp
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecSqDistExpr =
     copy(left = newLeft, right = newRight)
-  override def prettyName: String = "vec_sqdist"
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.api.Vectors
 import graft.io.Tables
+import graft.catalyst.Kernels
 
 /** §2.44 (cont.) bit-packed vectors & graph structure (added round 6):
   * binary-quantized Hamming retrieval (the 1-bit/dim end of the
@@ -59,7 +60,6 @@ object BitGraphOps {
     // quantized-integer squared L2 (the knn_classify_eval distance
     // contract) cut to top-5 per query.
     "vec_hamming_topk" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // vec_sqdist_long
       val packed = Tables.embeddings(s, d).select(col("vec_id"),
         Vectors.quantize(col("embedding"), 100000L).as("ev"),
         signWord("embedding", 0).as("w1"), signWord("embedding", 32).as("w2"))
@@ -74,7 +74,7 @@ object BitGraphOps {
           expr("CAST(bit_count(w1 ^ q1) + bit_count(w2 ^ q2) AS BIGINT)"))
         .withColumn("rk1", row_number().over(wH))
         .filter(col("rk1") <= 20)
-        .withColumn("dist", call_function("vec_sqdist_long", col("ev"), col("qe")))
+        .withColumn("dist", Kernels.vecSqDistLong(col("ev"), col("qe")))
         .withColumn("rk", row_number().over(wE))
         .filter(col("rk") <= 5)
         .select(col("qid"), col("rk").cast("long").as("rk"), col("vec_id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.io.Tables.{canon, canon100}
+import graft.catalyst.Kernels
 
 /** §2.12 corpus-analysis & packing operators — the remaining stages of a
   * production pretraining pipeline: PII redaction, intra-document
@@ -159,7 +160,6 @@ object CorpusOps {
     // scans read code tables. Output: the 4 codes + the floor-quantized
     // total reconstruction error (integer, merge-order independent).
     "vec_pq_encode" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val emb = Tables.embeddings(s, d)
       val subs = explode(sequence(lit(0), lit(3)))
       val cents = emb.filter(col("vec_id") < 8)
@@ -170,7 +170,7 @@ object CorpusOps {
       val vecs = emb.withColumn("sub", subs)
         .select(col("vec_id"), col("sub"),
           expr("slice(embedding, sub * 16 + 1, 16)").as("vslice"))
-      val sqd = call_function("vec_sqdist", col("vslice"), col("cslice"))
+      val sqd = Kernels.vecSqDist(col("vslice"), col("cslice"))
       val best = vecs.join(broadcast(cents), Seq("sub"))
         .select(col("vec_id"), col("sub"),
           struct(sqd.as("sqd"), col("cid").as("cid")).as("w"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.api.{Sampling, Sketches}
 import graft.io.Tables
 import graft.io.Tables.canon100
+import graft.catalyst.Kernels
 
 /** §2.17 feature-extraction & cohort operators — the statistics an
   * embedding-training / analytics pipeline derives from the corpus and the
@@ -52,7 +53,6 @@ object FeatureOps {
     // exact integer products. Top-20 pairs per language by the INTEGER
     // pair count (never by the float pmi), pmi floor-canonicalized.
     "cooccur_pmi" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val docs = Tables.documents(s, d)
       val uni = docs
         .select(col("lang"), explode(split(col("text"), " ")).as("w"))
@@ -62,7 +62,7 @@ object FeatureOps {
       // (vocabulary-sized), exactly as uniTot derives from uni
       val biAll = docs
         .select(col("lang"),
-          explode(call_function("word_bigrams", col("text"))).as("bg"))
+          explode(Kernels.wordBigrams(col("text"))).as("bg"))
         .groupBy("lang", "bg").agg(count(lit(1)).as("c_ab"))
       val biTot = biAll.groupBy("lang").agg(sum("c_ab").as("tot_b"))
       val bi = biAll
@@ -123,11 +123,10 @@ object FeatureOps {
     // missed by design — that is the ANN trade the blocking buys; the
     // unblocked LSH variant (dedup_embedding_lsh) covers the other end.
     "dedup_semantic_block" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val emb = Tables.embeddings(s, d)
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val sqd = call_function("vec_sqdist", col("embedding"), col("cvec"))
+      val sqd = Kernels.vecSqDist(col("embedding"), col("cvec"))
       val assigned = emb.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("embedding"),
           struct(sqd.as("sqd"), col("cid").as("cid")).as("wst"))
@@ -135,14 +134,14 @@ object FeatureOps {
         .select(col("vec_id"), col("wst.cid").as("cid"))
         .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
         .withColumn("nrm",
-          sqrt(call_function("vec_dot", col("embedding"), col("embedding"))))
+          sqrt(Kernels.vecDot(col("embedding"), col("embedding"))))
       val a = assigned.select(col("cid"), col("vec_id").as("v1"),
         col("embedding").as("e1"), col("nrm").as("nrm1"))
       val b = assigned.select(col("cid"), col("vec_id").as("v2"),
         col("embedding").as("e2"), col("nrm").as("nrm2"))
       a.join(b, Seq("cid")).filter(col("v1") < col("v2"))
         .withColumn("cos",
-          call_function("vec_dot", col("e1"), col("e2")) / (col("nrm1") * col("nrm2")))
+          Kernels.vecDot(col("e1"), col("e2")) / (col("nrm1") * col("nrm2")))
         .filter(col("cos") >= 0.35)
         .select(col("cid"), col("v1"), col("v2"), Tables.canon(col("cos")).as("cos_c"))
         .orderBy("v1", "v2")
@@ -219,23 +218,22 @@ object FeatureOps {
     // no matter the row count — the roaring-style structure an engine
     // keeps for low-cardinality columns.
     "bitmap_index_overlap" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val bm = Tables.events(s, d)
         .select(col("event_type"),
           (expr("user_id % 1024") + 1).cast("int").as("bucket"))
         .groupBy("event_type")
         .agg(collect_set(col("bucket")).as("buckets"))
         .select(col("event_type"),
-          call_function("bitset_from_ids", col("buckets"), lit(16)).as("bs"))
+          Kernels.bitsetFromIds(col("buckets"), lit(16)).as("bs"))
       val a = bm.select(col("event_type").as("ta"), col("bs").as("ba"))
       val b = bm.select(col("event_type").as("tb"), col("bs").as("bb"))
       a.join(broadcast(b), col("ta") < col("tb"))
         .select(col("ta"), col("tb"),
-          call_function("bitset_intersect_count", col("ba"), col("ba"))
+          Kernels.bitsetIntersectCount(col("ba"), col("ba"))
             .as("n_a"),
-          call_function("bitset_intersect_count", col("bb"), col("bb"))
+          Kernels.bitsetIntersectCount(col("bb"), col("bb"))
             .as("n_b"),
-          call_function("bitset_intersect_count", col("ba"), col("bb"))
+          Kernels.bitsetIntersectCount(col("ba"), col("bb"))
             .as("n_overlap"))
         .withColumn("jaccard_ppm",
           expr("(n_overlap * 1000000) div (n_a + n_b - n_overlap)"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
+import graft.catalyst.Kernels
 
 /** §2.18 graph analytics over the co-purchase graph: parts are nodes, an
   * undirected edge connects two parts that appear in the same order — the
@@ -427,7 +428,6 @@ object GraphOps {
 
   private[graft] def commonNeighbors(s: SparkSession, d: String): DataFrame =
     cnCache.computeIfAbsent((s, d), _ => graft.api.QueryHygiene.pinning(s) {
-      graft.catalyst.GraftExtensions.install(s) // sorted_intersect_count
       // the adjacency cache already stores each node's SORTED neighbor
       // array, so every edge's cn is a single-pass two-pointer merge
       // (native codegen'd kernel — no per-row hash set the way
@@ -446,8 +446,7 @@ object GraphOps {
         .join(broadcast(adj.select(col("u").as("v"), col("vs").as("nv"),
           col("deg").as("deg_v"))), "v")
         .select(col("u"), col("v"), col("deg_u"), col("deg_v"),
-          call_function("sorted_intersect_count",
-            col("nu"), col("nv")).as("cn"))
+          Kernels.sortedIntersectCount(col("nu"), col("nv")).as("cn"))
         // localCheckpoint (eager, disk-backed) like the adjacency cache:
         // truncates the broadcast-join lineage so eviction re-reads the
         // spilled block rather than re-broadcasting and re-intersecting

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.io.Tables.{canon, canon100}
+import graft.catalyst.Kernels
 
 /** §2.8 LLM-data-pipeline operators (SURVEY.md): tokenization, dedup
   * (exact + near-dup Jaccard), vector similarity search, centroids, k-NN,
@@ -26,16 +27,10 @@ import graft.io.Tables.{canon, canon100}
   */
 object LlmOps {
 
-  /** In-order dot product of two float vectors, exact double ops — the
+  /** Sum of squares of a float vector, exact in-order double ops — the
     * native codegen'd kernel (graft.catalyst.VecDotExpr), bit-identical to
-    * the HOF fold it replaces. Queries using it install GraftExtensions. */
-  private def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  private def ssq(a: Column): Column = dot(a, a)
-
-  /** Wrap a query so the session has the native graft expressions. */
-  private def native(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => { graft.catalyst.GraftExtensions.install(s); f(s, d) }
+    * the HOF fold it replaces. */
+  private def ssq(a: Column): Column = Kernels.vecDot(a, a)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // whitespace tokenize → explode → global token frequencies, top-50
@@ -48,9 +43,9 @@ object LlmOps {
 
     // top-5 bigrams per language — single pass, no self-join; the native
     // word_bigrams kernel replaces a per-position interpreted HOF concat
-    "text_bigrams" -> native((s, d) => {
+    "text_bigrams" -> ((s, d) => {
       val counted = Tables.documents(s, d)
-        .select(col("lang"), explode(call_function("word_bigrams", col("text"))).as("bg"))
+        .select(col("lang"), explode(Kernels.wordBigrams(col("text"))).as("bg"))
         .groupBy("lang", "bg").agg(count(lit(1)).as("n"))
       val w = Window.partitionBy("lang").orderBy(col("n").desc, col("bg"))
       counted.withColumn("rk", row_number().over(w))
@@ -94,20 +89,20 @@ object LlmOps {
     }),
 
     // L2 norm per embedding
-    "vec_norm" -> native((s, d) => {
+    "vec_norm" -> ((s, d) => {
       Tables.embeddings(s, d)
         .select(col("vec_id"), canon100(sqrt(ssq(col("embedding")))).as("norm_c"))
         .orderBy("vec_id")
     }),
 
     // similarity search: cosine vs query vector (vec 0), top-10
-    "vec_cosine_topk" -> native((s, d) => {
+    "vec_cosine_topk" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       emb.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= 0)
         .withColumn("cos",
-          dot(col("embedding"), col("qe")) /
+          Kernels.vecDot(col("embedding"), col("qe")) /
             (sqrt(ssq(col("embedding"))) * sqrt(ssq(col("qe")))))
         .select(col("vec_id"), canon(col("cos")).as("cos_c"))
         .orderBy(col("cos_c").desc, col("vec_id")).limit(10)
@@ -126,11 +121,11 @@ object LlmOps {
     }),
 
     // brute-force k-NN: 5 nearest others for query vecs id<5 (squared L2)
-    "vec_knn_brute" -> native((s, d) => {
+    "vec_knn_brute" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val dist = call_function("vec_sqdist", col("embedding"), col("qe"))
+      val dist = Kernels.vecSqDist(col("embedding"), col("qe"))
       val w = Window.partitionBy("qid").orderBy(col("dist"), col("vec_id"))
       emb.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("qid"))
@@ -142,7 +137,7 @@ object LlmOps {
     }),
 
     // multimodal: text metadata ⋈ vectors in one relation, per-language
-    "multimodal_join" -> native((s, d) => {
+    "multimodal_join" -> ((s, d) => {
       Tables.documents(s, d)
         .join(Tables.embeddings(s, d), col("doc_id") === col("vec_id"))
         .withColumn("norm", sqrt(ssq(col("embedding"))))
@@ -173,11 +168,11 @@ object LlmOps {
     // collected pairs — bounded by construction (k and the shortlist are
     // constants, never data-sized). The oracle unrolls the same five
     // argmax steps as chained CTEs.
-    "retrieval_mmr" -> native((s, d) => {
+    "retrieval_mmr" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       val sl = emb.crossJoin(broadcast(q)).filter(col("vec_id") =!= 0)
-        .withColumn("simq_c", canon(dot(col("embedding"), col("qe")) /
+        .withColumn("simq_c", canon(Kernels.vecDot(col("embedding"), col("qe")) /
           (sqrt(ssq(col("embedding"))) * sqrt(ssq(col("qe"))))))
         .select(col("vec_id"), col("embedding"), col("simq_c"))
         .orderBy(col("simq_c").desc, col("vec_id")).limit(20)
@@ -185,7 +180,7 @@ object LlmOps {
       val a = sl.select(col("vec_id").as("av"), col("embedding").as("ea"))
       val b = sl.select(col("vec_id").as("bv"), col("embedding").as("eb"))
       val pairs = a.join(broadcast(b), col("av") =!= col("bv"))
-        .withColumn("sim_c", canon(dot(col("ea"), col("eb")) /
+        .withColumn("sim_c", canon(Kernels.vecDot(col("ea"), col("eb")) /
           (sqrt(ssq(col("ea"))) * sqrt(ssq(col("eb"))))))
         .select("av", "bv", "sim_c")
       val short = sl.select("vec_id", "simq_c").collect()

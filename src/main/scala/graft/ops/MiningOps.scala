@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.io.Tables.canon
+import graft.catalyst.Kernels
 
 /** §2.21 similarity mining & robust analytics — asymmetric containment
   * dedup, fuzzy (edit-distance) joins, inverted-index construction,
@@ -47,7 +48,6 @@ object MiningOps {
     // inverted-index prefix filter (containmentPrefixPath). All
     // threshold math is integer (⌈4n/5⌉ = (4n+4) div 5).
     "dedup_containment" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       // fanOut BEFORE the shingling projection: the checkpointed relation
       // is ALSO the probe side of the ordered all-pairs verify below, so
       // a single-split scan would run both the shingle kernel and the
@@ -55,7 +55,7 @@ object MiningOps {
       val docs = Tables.fanOut(Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("text")))
         .select(col("doc_id"), col("lang"),
-          call_function("ngram_shingles", col("text"), lit(5)).as("gs"))
+          Kernels.ngramShingles(col("text"), lit(5)).as("gs"))
         .localCheckpoint() // feeds the dictionary probe and both strategies
       val dense = graft.api.Curation.denseDictionary(
         docs.select(explode(col("gs")).as("tk")))
@@ -74,7 +74,7 @@ object MiningOps {
           // bounded by rare-shingle collisions at any corpus size.
           val sets = docs.select(col("doc_id"), col("lang"),
             size(col("gs")).cast("long").as("n"),
-            call_function("bitset_from_tokens", col("gs"), dictMap,
+            Kernels.bitsetFromTokens(col("gs"), dictMap,
               lit(nWords)).as("bs"))
           // candidate-side cut (round 13): a per-language n-QUANTILE band
           // joins into the hash key. Ordered pairs need n1 ≤ n2 and the
@@ -100,8 +100,7 @@ object MiningOps {
             // threshold filter, but the ≫99% non-matching pairs bail
             // after a few words instead of all 32 (Bitsets
             // .containmentShared; measured at sf1 in BASELINE.md)
-            .withColumn("shared", call_function("bitset_containment_shared",
-              col("b1"), col("b2"), col("n1")))
+            .withColumn("shared", Kernels.bitsetContainmentShared(col("b1"), col("b2"), col("n1")))
             .filter(col("shared") >= 0)
             .select(col("d1"), col("d2"), col("shared"), col("n1"), col("n2"),
               canon(col("shared") * lit(1.0) / col("n1")).as("cont_c"))
@@ -120,11 +119,10 @@ object MiningOps {
     // check (the shingle-join DuckDB oracle is quadratic there).
     // Verification-only (SparkEntry.verifyOnly).
     "dedup_containment_prefix" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val docs = Tables.fanOut(Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("text")))
         .select(col("doc_id"), col("lang"),
-          call_function("ngram_shingles", col("text"), lit(5)).as("gs"))
+          Kernels.ngramShingles(col("text"), lit(5)).as("gs"))
         .localCheckpoint()
       containmentPrefixPath(docs)
     }),
@@ -405,7 +403,7 @@ object MiningOps {
       col("n").as("n2"))
     cand.join(a1, "d1").join(a2, "d2")
       .withColumn("shared",
-        call_function("sorted_intersect_count", col("t1"), col("t2")))
+        Kernels.sortedIntersectCount(col("t1"), col("t2")))
       .filter(col("shared") * 5 >= col("n1") * 4)
       .select(col("d1"), col("d2"), col("shared"), col("n1"), col("n2"),
         canon(col("shared") * lit(1.0) / col("n1")).as("cont_c"))

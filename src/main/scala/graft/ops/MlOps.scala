@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
+import graft.catalyst.Kernels
 
 /** §2.37 distributed ML training steps — the aggregate-shaped inner
   * loops of classical ML expressed as exact Spark aggregations: the
@@ -104,14 +105,13 @@ object MlOps {
     // localCheckpointed so round r+1 never re-derives rounds 1..r —
     // Lloyd iteration gets its centroids without a single global sort.
     "vec_kmeanspp_init" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // vec_sqdist_long
       val emb = Tables.embeddings(s, d).select(col("vec_id"),
         graft.api.Vectors.quantize(col("embedding"), 100000L).as("qv"))
       val c1 = emb.orderBy("vec_id").limit(1).localCheckpoint()
       var cur = emb
         .crossJoin(broadcast(c1.select(col("qv").as("ce"))))
         .withColumn("dmin",
-          call_function("vec_sqdist_long", col("qv"), col("ce")))
+          Kernels.vecSqDistLong(col("qv"), col("ce")))
         .drop("ce").localCheckpoint()
       val first = c1.select(lit(1L).as("step"), col("vec_id").as("cid"),
         lit(0L).as("maxmin_d"))
@@ -127,7 +127,7 @@ object MlOps {
           .select(col("qv").as("ce"))
         cur = cur.crossJoin(broadcast(cVec))
           .withColumn("dmin", least(col("dmin"),
-            call_function("vec_sqdist_long", col("qv"), col("ce"))))
+            Kernels.vecSqDistLong(col("qv"), col("ce"))))
           .drop("ce").localCheckpoint()
       }
       picks.reduce(_ unionByName _).orderBy("step")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.io.Tables.canon
+import graft.catalyst.Kernels
 
 /** Training-data-pipeline operators beyond the core §2.8 set (BASELINE.json
   * north star: dedup, similarity search, multimodal columns, text analysis
@@ -29,14 +30,6 @@ import graft.io.Tables.canon
   */
 object Pipeline {
 
-  /** In-order fold dot product / squared L2 via the native codegen'd
-    * kernels (graft.catalyst.VecExpressions) — bit-identical to the HOF
-    * folds they replace, and to the DuckDB oracle's list_reduce form.
-    * Queries using them install GraftExtensions first. */
-  private def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  private def sqDist(a: Column, b: Column): Column = call_function("vec_sqdist", a, b)
-
   /** Distinct word tokens per document. `array_distinct` BEFORE the
     * explode keeps the dedup row-local (doc_id is unique, so per-doc
     * distinct equals the global distinct of (doc_id, …, tk)) — no
@@ -44,12 +37,6 @@ object Pipeline {
   private def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("n_chars"),
       explode(array_distinct(split(col("text"), " "))).as("tk"))
-
-  /** |A ∩ B| of two equal-width bitsets via the native popcount-fold
-    * expression (graft.catalyst.BitsetIntersectCountExpr). Requires
-    * [[graft.catalyst.GraftExtensions]] installed on the session. */
-  private def bitsetShared(a: Column, b: Column): Column =
-    call_function("bitset_intersect_count", a, b)
 
   private val stopwords = graft.api.Curation.Stopwords
 
@@ -128,13 +115,13 @@ object Pipeline {
       val sets = docs
         .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("tks"))
         .select(col("doc_id"), size(col("tks")).cast("long").as("n"),
-          call_function("bitset_from_tokens", col("tks"), dictMap, lit(nWords)).as("bs"))
+          Kernels.bitsetFromTokens(col("tks"), dictMap, lit(nWords)).as("bs"))
       c
         .join(candSide(sets, "d1").select(col("doc_id").as("d1"),
           col("n").as("n1"), col("bs").as("bs1")), "d1")
         .join(candSide(sets, "d2").select(col("doc_id").as("d2"),
           col("n").as("n2"), col("bs").as("bs2")), "d2")
-        .withColumn("shared", bitsetShared(col("bs1"), col("bs2")))
+        .withColumn("shared", Kernels.bitsetIntersectCount(col("bs1"), col("bs2")))
         .withColumn("jac", col("shared") * lit(1.0) /
           (col("n1") + col("n2") - col("shared")))
     } else {
@@ -244,7 +231,6 @@ object Pipeline {
     * twin. */
   private def weightedJaccard(s: SparkSession, d: String,
                               forceShuffle: Boolean): DataFrame = {
-    graft.catalyst.GraftExtensions.install(s)
     val tok = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("tk"))
@@ -275,7 +261,7 @@ object Pipeline {
     val bSide = if (bounded) broadcast(b) else b.hint("shuffle_hash")
     a.join(bSide, col("l1") === col("l2") && col("cb1") === col("cb2") &&
         col("d1") < col("d2") && abs(col("t1") - col("t2")) <= 20)
-      .withColumn("smin", call_function("packed_tf_min_overlap", col("pa"), col("pb")))
+      .withColumn("smin", Kernels.packedTfMinOverlap(col("pa"), col("pb")))
       .filter(col("smin") * lit(1.0) / (col("t1") + col("t2") - col("smin")) >= 0.4)
       .select(col("d1"), col("d2"),
         canon(col("smin") * lit(1.0) / (col("t1") + col("t2") - col("smin")))
@@ -293,7 +279,6 @@ object Pipeline {
   private[graft] def incrementalPairs(s: SparkSession, newDocs: DataFrame,
                                       corpus: DataFrame,
                                       tau: Double = 0.5): DataFrame = {
-    graft.catalyst.GraftExtensions.install(s)
     val all = newDocs.select("doc_id", "lang", "text")
       .unionByName(corpus.select("doc_id", "lang", "text"))
     val tok = all.select(col("doc_id"), col("lang"),
@@ -317,7 +302,6 @@ object Pipeline {
     // verification on full token sets (false positives filtered, false
     // negatives bounded by 1-(1-J²)⁴ by construction).
     "dedup_minhash_lsh" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // native bitset expressions
       val tok = tokens(Tables.documents(s, d)).localCheckpoint() // reused 3x
       val bands = lshBands(tok)
       val cand = lshSide(bands, 1)
@@ -336,7 +320,6 @@ object Pipeline {
     // takes when it outgrows a broadcast at corpus scale. Verification-
     // only — SparkEntry.verifyOnly excludes it from the bench headline.
     "dedup_minhash_shuffle" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val tok = tokens(Tables.documents(s, d)).localCheckpoint()
       val bands = lshBands(tok)
       val cand = lshSide(bands, 1)
@@ -360,7 +343,6 @@ object Pipeline {
     // join. The streaming admission fixture runs the same helpers via
     // [[incrementalPairs]], whose inputs arrive as separate relations.
     "dedup_incremental" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val tok = tokens(Tables.documents(s, d)).localCheckpoint()
       val bands = lshBands(tok)
       val cand = lshSide(bands.filter(col("doc_id") % 5 === 0), 1)
@@ -386,7 +368,6 @@ object Pipeline {
     // at sf1 it is this key's direct differential evidence (the
     // chained-CTE DuckDB oracle is quadratic there). Verification-only.
     "dedup_incremental_fullscan" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val tok = tokens(Tables.documents(s, d)).localCheckpoint()
       val bands = lshBands(tok)
       val cand = lshSide(bands, 1)
@@ -475,10 +456,9 @@ object Pipeline {
     // verification for small dictionaries or exact All-Pairs prefix +
     // PPJoin filtering for the 100 TB large-dictionary shape.
     "dedup_ngram_jaccard" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // native shingling kernel
       val docsG = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
-          call_function("ngram_shingles", col("text"), lit(5)).as("gs"))
+          Kernels.ngramShingles(col("text"), lit(5)).as("gs"))
       graft.api.Curation.nearDupPairs(docsG, col("doc_id"), col("gs"),
           col("lang"), col("n_chars"), tau = 0.7)
         .withColumn("jac", col("shared") * lit(1.0) /
@@ -495,10 +475,9 @@ object Pipeline {
     // it from the bench headline (it would only re-measure a forced
     // suboptimal plan for this corpus).
     "dedup_ngram_jaccard_prefix" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val docsG = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
-          call_function("ngram_shingles", col("text"), lit(5)).as("gs"))
+          Kernels.ngramShingles(col("text"), lit(5)).as("gs"))
       graft.api.Curation.nearDupPairs(docsG, col("doc_id"), col("gs"),
           col("lang"), col("n_chars"), tau = 0.7, denseDictLimit = 0)
         .withColumn("jac", col("shared") * lit(1.0) /
@@ -512,10 +491,9 @@ object Pipeline {
     // (group, length-band) equi-join — the physical shape a huge corpus
     // with a small dictionary takes. Verification-only, same oracle.
     "dedup_ngram_jaccard_shuffle" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val docsG = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
-          call_function("ngram_shingles", col("text"), lit(5)).as("gs"))
+          Kernels.ngramShingles(col("text"), lit(5)).as("gs"))
       graft.api.Curation.nearDupPairs(docsG, col("doc_id"), col("gs"),
           col("lang"), col("n_chars"), tau = 0.7, broadcastRowLimit = 0L)
         .withColumn("jac", col("shared") * lit(1.0) /
@@ -529,15 +507,14 @@ object Pipeline {
     // ONCE per vector and joined in — the pair stage folds only the dot
     // product (3× fewer per-pair HOF evaluations than the naive form).
     "dedup_embedding_cosine" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // native vector kernels
       val emb = Tables.embeddings(s, d)
-        .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+        .withColumn("nrm", sqrt(Kernels.vecDot(col("embedding"), col("embedding"))))
       val a = emb.select(col("vec_id").as("v1"), col("label").as("lb1"),
         col("embedding").as("e1"), col("nrm").as("nrm1"))
       val b = emb.select(col("vec_id").as("v2"), col("label").as("lb2"),
         col("embedding").as("e2"), col("nrm").as("nrm2"))
       a.join(b, col("lb1") === col("lb2") && col("v1") < col("v2"))
-        .withColumn("cos", dot(col("e1"), col("e2")) / (col("nrm1") * col("nrm2")))
+        .withColumn("cos", Kernels.vecDot(col("e1"), col("e2")) / (col("nrm1") * col("nrm2")))
         .filter(col("cos") >= 0.35)
         .select(col("v1"), col("v2"), canon(col("cos")).as("cos_c"))
         .orderBy("v1", "v2")
@@ -547,7 +524,6 @@ object Pipeline {
     // centroids; each query (vec_id < 5) probes its nearest cell only
     // (nprobe=1), then exact top-5 by squared L2 within the cell.
     "ann_ivf_topk" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // native vector kernels
       val emb = Tables.embeddings(s, d)
       val cent = emb
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -558,14 +534,14 @@ object Pipeline {
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val assign = queries.crossJoin(broadcast(cent))
-        .withColumn("cdist", sqDist(col("qe"), col("centroid"))) // float vs double sides
+        .withColumn("cdist", Kernels.vecSqDist(col("qe"), col("centroid"))) // float vs double sides
         .withColumn("rk", row_number().over(
           Window.partitionBy("qid").orderBy(col("cdist"), col("label"))))
         .filter(col("rk") === 1)
         .select(col("qid"), col("qe"), col("label").as("cell"))
       val w = Window.partitionBy("qid").orderBy(col("dist"), col("vec_id"))
       emb.join(broadcast(assign), col("label") === col("cell") && col("vec_id") =!= col("qid"))
-        .withColumn("dist", sqDist(col("embedding"), col("qe")))
+        .withColumn("dist", Kernels.vecSqDist(col("embedding"), col("qe")))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5)
         .select(col("qid"), col("rk"), col("vec_id"), canon(col("dist")).as("dist_c"))
@@ -581,7 +557,6 @@ object Pipeline {
     // column so ONE plan evaluates the whole curve (no per-setting
     // re-scan of the index structure).
     "ann_ivf_nprobe_sweep" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val emb = Tables.embeddings(s, d)
       val cent = emb
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -592,7 +567,7 @@ object Pipeline {
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val cells = queries.crossJoin(broadcast(cent))
-        .withColumn("cdist", sqDist(col("qe"), col("centroid")))
+        .withColumn("cdist", Kernels.vecSqDist(col("qe"), col("centroid")))
         .withColumn("crk", row_number().over(
           Window.partitionBy("qid").orderBy(col("cdist"), col("label"))))
         .filter(col("crk") <= 3)
@@ -602,7 +577,7 @@ object Pipeline {
         .filter(col("crk") <= col("np"))
       val cand = emb.join(broadcast(probes),
           col("label") === col("cell") && col("vec_id") =!= col("qid"))
-        .withColumn("dist", sqDist(col("embedding"), col("qe")))
+        .withColumn("dist", Kernels.vecSqDist(col("embedding"), col("qe")))
         .localCheckpoint() // consumed by the scan count AND the top-k
       val scanned = cand.groupBy("np").agg(count(lit(1)).as("n_scanned"))
       val top = cand
@@ -639,7 +614,6 @@ object Pipeline {
     // the ADC sum (quantize-before-sum rule); the re-rank reuses the
     // exact-distance ordering already oracle-proven in ann_ivf_topk.
     "ann_ivf_pq_topk" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // native vector kernels
       val emb = Tables.embeddings(s, d)
       // coarse quantizer: Voronoi cells of the 8 seed vectors (the same
       // seeds as kmeans_assign_step)
@@ -649,14 +623,14 @@ object Pipeline {
       // (tie → lower cell id via the struct-min)
       val cells = emb.crossJoin(broadcast(coarse))
         .select(col("vec_id"),
-          struct(sqDist(col("embedding"), col("cemb")).as("cd"),
+          struct(Kernels.vecSqDist(col("embedding"), col("cemb")).as("cd"),
             col("ccell")).as("w"))
         .groupBy("vec_id").agg(min(col("w")).as("w"))
         .select(col("vec_id"), col("w.ccell").as("cell"))
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val assign = queries.crossJoin(broadcast(coarse))
-        .withColumn("cdist", sqDist(col("qe"), col("cemb")))
+        .withColumn("cdist", Kernels.vecSqDist(col("qe"), col("cemb")))
         .withColumn("rk", row_number().over(
           Window.partitionBy("qid").orderBy(col("cdist"), col("ccell"))))
         .filter(col("rk") <= 2) // nprobe = 2
@@ -677,7 +651,7 @@ object Pipeline {
           expr("slice(embedding, sub * 4 + 1, 4)").as("vslice"))
         .join(broadcast(cb), Seq("sub"))
         .select(col("vec_id"), col("sub"),
-          struct(sqDist(col("vslice"), col("cslice")).as("sqd"),
+          struct(Kernels.vecSqDist(col("vslice"), col("cslice")).as("sqd"),
             col("cid").as("cid")).as("w"))
         .groupBy("vec_id", "sub").agg(min(col("w")).as("w"))
         .select(col("vec_id"), col("sub"), col("w.cid").as("cid"))
@@ -687,7 +661,7 @@ object Pipeline {
           expr("slice(qe, sub * 4 + 1, 4)").as("qslice"))
         .join(broadcast(cb), Seq("sub"))
         .select(col("qid"), col("sub"), col("cid"),
-          canon(sqDist(col("qslice"), col("cslice"))).as("dc"))
+          canon(Kernels.vecSqDist(col("qslice"), col("cslice"))).as("dc"))
       // ADC scan of the probed cells → top-20 shortlist per query
       val wAdc = Window.partitionBy("qid").orderBy(col("adc_c"), col("vec_id"))
       val shortlist = codes
@@ -703,7 +677,7 @@ object Pipeline {
       val wEx = Window.partitionBy("qid").orderBy(col("dist"), col("vec_id"))
       emb.join(broadcast(shortlist), "vec_id")
         .join(broadcast(queries), "qid")
-        .withColumn("dist", sqDist(col("embedding"), col("qe")))
+        .withColumn("dist", Kernels.vecSqDist(col("embedding"), col("qe")))
         .withColumn("rk", row_number().over(wEx))
         .filter(col("rk") <= 5)
         .select(col("qid"), col("rk"), col("vec_id"), canon(col("dist")).as("dist_c"))
@@ -753,7 +727,6 @@ object Pipeline {
     // dedup family when it applies (popcount AND instead of a per-(doc,
     // lang) string-array intersect).
     "text_langid" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val tok = tokens(Tables.documents(s, d))
       val prof = tok.groupBy("lang", "tk").agg(count(lit(1)).as("n"))
         .withColumn("rk", row_number().over(
@@ -767,12 +740,12 @@ object Pipeline {
           val (dictMap, nWords) = dict.get
           val docs = Tables.documents(s, d)
             .select(col("doc_id"), col("lang"),
-              call_function("bitset_from_tokens",
+              Kernels.bitsetFromTokens(
                 array_distinct(split(col("text"), " ")), dictMap, lit(nWords)).as("bs"))
           docs.crossJoin(broadcast(prof.select(col("plang"),
-              call_function("bitset_from_tokens", col("profile"), dictMap, lit(nWords)).as("pbs"))))
+              Kernels.bitsetFromTokens(col("profile"), dictMap, lit(nWords)).as("pbs"))))
             .withColumn("score",
-              call_function("bitset_intersect_count", col("bs"), col("pbs")))
+              Kernels.bitsetIntersectCount(col("bs"), col("pbs")))
         } else {
           val docs = tok.groupBy("doc_id", "lang")
             .agg(collect_list(col("tk")).as("tks"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.api.{Layout, Relevance, Sketches}
 import graft.io.Tables
 import graft.io.Tables.canon
+import graft.catalyst.Kernels
 
 /** §2.13 relevance, sketch & layout operators — ranking (TF-IDF / BM25),
   * a bigram-LM quality scorer, fixed-memory sketches (count-min heavy
@@ -85,7 +86,6 @@ object StatsOps {
     // 100 TB the top-k is still 50 rows), and the fusion join is
     // 50×50.
     "rank_fusion_rrf" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // native vector kernels
       val lexTop = Relevance.bm25(Tables.documents(s, d), col("doc_id"),
           col("text"), Terms, k1 = K1, b = B)
         .select(col("id").as("doc_id"), canon(col("score")).as("score_c"))
@@ -95,9 +95,9 @@ object StatsOps {
         .select(col("doc_id"), col("rl"))
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-      val dotq = call_function("vec_dot", col("embedding"), col("qe"))
-      val nE = sqrt(call_function("vec_dot", col("embedding"), col("embedding")))
-      val nQ = sqrt(call_function("vec_dot", col("qe"), col("qe")))
+      val dotq = Kernels.vecDot(col("embedding"), col("qe"))
+      val nE = sqrt(Kernels.vecDot(col("embedding"), col("embedding")))
+      val nQ = sqrt(Kernels.vecDot(col("qe"), col("qe")))
       val vecTop = emb.crossJoin(broadcast(q)).filter(col("vec_id") =!= 0)
         .withColumn("cos_c", canon(dotq / (nE * nQ)))
         .select(col("vec_id"), col("cos_c"))
@@ -210,10 +210,9 @@ object StatsOps {
     // per term before the integer per-doc sum. Count tables are
     // vocabulary-sized; totals are |langs|-row.
     "lm_jelinek_mercer" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s) // word_bigrams kernel
       val base = Tables.documents(s, d).select(col("doc_id"), col("lang"),
         split(col("text"), " ").as("toks"),
-        call_function("word_bigrams", col("text")).as("bigs"))
+        Kernels.wordBigrams(col("text")).as("bigs"))
       val uni = base.select(col("lang"), explode(col("toks")).as("w"))
       val cu = uni.groupBy("lang", "w").agg(count(lit(1)).as("c"))
       val nt = uni.groupBy("lang").agg(count(lit(1)).as("nt"))
@@ -242,11 +241,10 @@ object StatsOps {
     // floor-quantized within-cluster squared distance, and an integer
     // member-component checksum.
     "kmeans_assign_step" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val emb = Tables.embeddings(s, d)
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val sqd = call_function("vec_sqdist", col("embedding"), col("cvec"))
+      val sqd = Kernels.vecSqDist(col("embedding"), col("cvec"))
       val best = emb.crossJoin(broadcast(cents))
         .select(col("vec_id"),
           struct(sqd.as("sqd"), col("cid").as("cid")).as("w"))

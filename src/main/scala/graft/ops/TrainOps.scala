@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.io.Tables.canon
+import graft.catalyst.Kernels
 
 /** §2.11 training-data curation operators: the stages that sit AROUND the
   * dedup/similarity core in a real pretraining pipeline — deterministic
@@ -205,7 +206,6 @@ object TrainOps {
     // of the library's operators; the composition itself is oracle-checked
     // end to end.
     "curation_pipeline_e2e" -> ((s, d) => {
-      graft.catalyst.GraftExtensions.install(s)
       val docs = Tables.documents(s, d)
       val toks = split(col("text"), " ")
       val kept = filter(toks, t => !t.isin(stopwords: _*))
@@ -217,7 +217,7 @@ object TrainOps {
         .filter(col("rn") === 1).drop("rn")
       val quality = exactKept.filter(col("n_tok") >= 20).localCheckpoint()
       val docsG = quality.select(col("doc_id"), col("lang"), col("n_chars"),
-        call_function("ngram_shingles", col("text"), lit(5)).as("gs"))
+        Kernels.ngramShingles(col("text"), lit(5)).as("gs"))
       val pairs = graft.api.Curation.nearDupPairs(docsG, col("doc_id"), col("gs"),
         col("lang"), col("n_chars"), tau = 0.7).select("d1", "d2")
       val dropped = connectedComponents(pairs)

@@ -87,7 +87,6 @@ class ApiSuite extends AnyFunSuite {
   }
 
   test("Vectors: dot/norm/cosine/knn/cosineTopK on small known vectors") {
-    graft.catalyst.GraftExtensions.install(spark)
     import graft.api.Vectors
     val data = Seq(
       (1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)),
@@ -111,7 +110,6 @@ class ApiSuite extends AnyFunSuite {
   }
 
   test("Vectors.knn ranks null/ragged vectors last, never as nearest") {
-    graft.catalyst.GraftExtensions.install(spark)
     import graft.api.Vectors
     val data = Seq(
       (1L, Some(Seq(1.0f, 0.0f))), (2L, Some(Seq(0.0f, 1.0f))),

@@ -121,7 +121,6 @@ class FeatureOpsSuite extends AnyFunSuite {
   }
 
   test("cooccur_pmi: counts ≥ 5, dense per-lang ranks, pmi matches recomputation") {
-    graft.catalyst.GraftExtensions.install(spark)
     val out = SparkEntry.queries("cooccur_pmi")(spark, d).collect()
     if (out.nonEmpty) {
       assert(out.forall(_.getLong(2) >= 5))
@@ -140,8 +139,7 @@ class FeatureOpsSuite extends AnyFunSuite {
       val cB = toks.filter($"w" === w2).count()
       val totU = toks.count()
       val bis = docs.filter($"lang" === lang)
-        .select(explode(call_function("word_bigrams",
-          concat_ws(" ", $"ts"))).as("bg"))
+        .select(explode(graft.catalyst.Kernels.wordBigrams(concat_ws(" ", $"ts"))).as("bg"))
       val cAB = bis.filter($"bg" === top.getString(1)).count()
       val totB = bis.count()
       val pmi = math.log((cAB.toDouble * totU * totU) / (totB.toDouble * cA * cB))

@@ -189,7 +189,6 @@ class PlanSuite extends AnyFunSuite {
     // the cached relation's HashPartitioning(u) — exactly one exchange
     // (the v-side re-key), the native merge kernel in the projection
     val es = graft.ops.GraphOps.edges(spark, TestSpark.sfDir)
-    graft.catalyst.GraftExtensions.install(spark)
     import org.apache.spark.sql.functions._
     val adj = es.groupBy("u")
       .agg(sort_array(collect_set(col("v"))).as("nbrs"))
@@ -199,7 +198,7 @@ class PlanSuite extends AnyFunSuite {
       .join(adj.select(col("u").as("v"), col("nbrs").as("nv"),
         col("deg").as("deg_v")), "v")
       .select(col("u"), col("v"),
-        call_function("sorted_intersect_count", col("nu"), col("nv")).as("cn"))
+        graft.catalyst.Kernels.sortedIntersectCount(col("nu"), col("nv")).as("cn"))
     val plan = build.queryExecution.sparkPlan
     assert(plan.toString.contains("sorted_intersect_count"),
       s"cn must use the native merge kernel:\n$plan")
