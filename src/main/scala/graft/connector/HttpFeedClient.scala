@@ -3,9 +3,16 @@ package graft.connector
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
+
+import graft.udf.CloudEventsParse
 
 /** Minimal HTTP Feeds protocol client (reference `README.md:84-146`): one
   * GET endpoint, `lastEventId` cursor + optional long-poll `timeout` query
@@ -19,18 +26,30 @@ object HttpFeedClient {
 
   private val mapper = new ObjectMapper()
 
-  /** One envelope as parsed JSON (kept as JsonNode; the reader projects).
-    * `cacheControl` records the server's caching verdict
+  /** One response page: the envelope rows the partition reader emits,
+    * built by one streaming pass over the body ([[parsePage]]), with the
+    * body itself. `cacheControl` records the server's caching verdict
     * (reference `README.md:330-332`): full immutable batches arrive as
     * `public, max-age=…` and may be served from any HTTP cache; growing
-    * or principal-filtered pages are `no-store`. `bytes` is the size of
-    * the response body the page was parsed from. */
-  final case class Page(events: IndexedSeq[JsonNode],
-                        cacheControl: Option[String] = None,
-                        bytes: Long = 0L) {
-    def isEmpty: Boolean = events.isEmpty
-    def lastId: Option[String] =
-      events.lastOption.map(_.get("id").asText())
+    * or principal-filtered pages are `no-store`. Ids, emptiness and
+    * density samples read the rows' `id` column.
+    *
+    * `events` is a tree view of the body for callers that want the raw
+    * envelopes. It is parsed on first use; no engine path uses it. */
+  final case class Page(rows: IndexedSeq[InternalRow],
+                        cacheControl: Option[String],
+                        body: Array[Byte]) {
+    lazy val events: IndexedSeq[JsonNode] = {
+      val root = mapper.readTree(body) // a JSON array: parsePage checked it
+      (0 until root.size()).map(root.get)
+    }
+    /** Size of the response body. */
+    def bytes: Long = body.length.toLong
+    def isEmpty: Boolean = rows.isEmpty
+    /** The id of envelope `i` on the page. */
+    def id(i: Int): String = rows(i).getUTF8String(IdCol).toString
+    def firstId: Option[String] = if (isEmpty) None else Some(id(0))
+    def lastId: Option[String] = if (isEmpty) None else Some(id(rows.length - 1))
     /** True iff the server marked this page publicly cacheable. */
     def cacheable: Boolean = cacheControl.exists(cc =>
       cc.contains("max-age") && !cc.contains("no-store") &&
@@ -45,6 +64,14 @@ object HttpFeedClient {
     * change (ids are append-only and totally ordered,
     * `README.md:148-159`).
     *
+    * An entry is the response body and its `Cache-Control` value, not the
+    * parsed page: a hit re-runs [[parsePage]] over the bytes. A JSON tree
+    * of a 113 KB page of 100 envelopes held 202 KB of heap. The cache is
+    * an LRU bounded both by entry count and by summed body bytes
+    * ([[PageCache.MaxBytes]]), so a server with large pages cannot make
+    * it pin more heap than one with small pages; a body larger than the
+    * byte bound is never stored.
+    *
     * The PRINCIPAL is part of the key (a digest of the `Authorization`
     * value, never the raw credential): the spec says auth-protected
     * feeds must be `no-store` (`README.md:328`) and the client honors
@@ -55,12 +82,10 @@ object HttpFeedClient {
     * `cache` parameter: the streaming source wires one per executor for
     * replay/backfill reads. */
   final class PageCache(maxEntries: Int = 1024) {
-    private val m = java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String, String), Page](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String, String), Page]): Boolean =
-          size() > maxEntries // LRU bound: replay working sets are windows
-      })
+    // access-ordered, so iteration starts at the least recently used
+    private val m = new java.util.LinkedHashMap[(String, String, String),
+      (Array[Byte], Option[String])](16, 0.75f, true)
+    private var held = 0L // summed body bytes of the entries, under `m`'s lock
     private val hitCount = new java.util.concurrent.atomic.AtomicInteger(0)
     /** Digest of the Authorization value — cache keys must separate
       * principals without retaining the credential itself. */
@@ -70,21 +95,39 @@ object HttpFeedClient {
           .digest(a.getBytes(StandardCharsets.UTF_8))
           .map("%02x".format(_)).mkString
       }
-    private[connector] def get(url: String, cursor: String,
-                               auth: Option[String]): Option[Page] = {
-      val p = Option(m.get((url, cursor, principalKey(auth))))
-      if (p.isDefined) hitCount.incrementAndGet()
-      p
+    private[graft] def get(url: String, cursor: String,
+                           auth: Option[String]): Option[Page] = {
+      val key = (url, cursor, principalKey(auth))
+      m.synchronized(Option(m.get(key))).map { case (body, cc) =>
+        hitCount.incrementAndGet()
+        parsePage(url, cursor, body, cc)
+      }
     }
-    private[connector] def put(url: String, cursor: String,
-                               auth: Option[String], page: Page): Unit =
-      if (page.cacheable) m.put((url, cursor, principalKey(auth)), page)
-    def size: Int = m.size()
+    private[graft] def put(url: String, cursor: String,
+                           auth: Option[String], page: Page): Unit =
+      if (page.cacheable && page.bytes <= PageCache.MaxBytes) m.synchronized {
+        val old = m.put((url, cursor, principalKey(auth)), (page.body, page.cacheControl))
+        if (old != null) held -= old._1.length
+        held += page.bytes
+        val lru = m.values().iterator()
+        while (m.size() > maxEntries || held > PageCache.MaxBytes) {
+          held -= lru.next()._1.length
+          lru.remove()
+        }
+      }
+    def size: Int = m.synchronized(m.size())
+    /** Summed body bytes of the cached pages. */
+    def bodyBytes: Long = m.synchronized(held)
     def hits: Int = hitCount.get()
     /** Test hook: empty the cache — simulates the distributed case where
       * plan-time fetches happened on the DRIVER and executors start with
       * cold caches (in local mode one JVM otherwise shares them). */
-    private[graft] def clear(): Unit = m.clear()
+    private[graft] def clear(): Unit = m.synchronized { m.clear(); held = 0L }
+  }
+
+  object PageCache {
+    /** Body bytes one cache holds: 1024 entries of a 128 KiB page. */
+    val MaxBytes: Long = 128L << 20
   }
 
   /** JVM-wide cache used by the DSv2 partition readers: on a replayed
@@ -123,7 +166,10 @@ object HttpFeedClient {
   /** GET one page after `lastEventId` (empty string = feed start,
     * `README.md:300`); `timeoutMs > 0` requests a long poll. `auth` is
     * sent as the `Authorization` header (feeds may be Basic/Bearer
-    * protected, `README.md:321-328`).
+    * protected, `README.md:321-328`). The returned page's rows are built
+    * and checked ([[parsePage]]) before it is cached or returned. A
+    * successful response leaves its connection in the JDK's keep-alive
+    * pool, so a serial walk reuses one connection.
     *
     * Transient failures (connection errors, HTTP 5xx, 429) are retried up
     * to `maxAttempts` — a 1000-executor job must survive a server blip
@@ -190,6 +236,7 @@ object HttpFeedClient {
     conn.setConnectTimeout(30000)
     conn.setReadTimeout((timeoutMs + 30000).toInt)
     auth.foreach(a => conn.setRequestProperty("Authorization", a))
+    var read = false
     try {
       val code = conn.getResponseCode
       if (code == 401 || code == 403)
@@ -202,37 +249,150 @@ object HttpFeedClient {
       if (code >= 400)
         throw new IllegalStateException(
           s"HTTP $code from $url — non-retryable client error")
-      // parse the bytes directly: Jackson detects the UTF-8 encoding
-      // itself, so no intermediate String copy of the page
-      val body = conn.getInputStream.readAllBytes()
-      Page(validated(url, lastEventId, mapper.readTree(body)),
-        Option(conn.getHeaderField("Cache-Control")), body.length.toLong)
-    } finally conn.disconnect()
+      val cacheControl = Option(conn.getHeaderField("Cache-Control"))
+      val in = conn.getInputStream
+      // a body read to its end and closed returns the connection to the
+      // keep-alive pool; every other outcome drops it
+      val body = try in.readAllBytes() finally in.close()
+      read = true
+      parsePage(url, lastEventId, body, cacheControl)
+    } finally if (!read) conn.disconnect()
   }
 
-  /** The events of a response body, checked once before anything caches
-    * or follows them: a JSON array whose elements carry textual ids that
-    * strictly increase, the first after a non-empty `cursor`. */
-  private def validated(url: String, cursor: String, root: JsonNode): IndexedSeq[JsonNode] = {
+  /** Core envelope attributes (README.md:306-316 plus the engine's
+    * `time_us` metadata twin of `time`); everything else is an extension
+    * attribute (README.md:318). */
+  private[connector] val CoreAttributes: Set[String] = Set(
+    "specversion", "id", "type", "source", "time", "time_us",
+    "subject", "method", "datacontenttype", "data")
+
+  private val Schema = CloudEventsParse.envelopeSchema
+  private val IdCol = Schema.fieldIndex("id")
+  private val TimeUsCol = Schema.fieldIndex("time_us")
+  private val ContentTypeCol = Schema.fieldIndex("datacontenttype")
+  private val DataCol = Schema.fieldIndex("data")
+  private val ExtensionsCol = Schema.fieldIndex("extensions")
+  private val DefaultContentType = UTF8String.fromString("application/json")
+  // the row column of each core attribute; Skip for `time`, which rides
+  // as `time_us`
+  private val Skip = -1
+  private val CoreColumns: java.util.Map[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer]()
+    CoreAttributes.foreach(a => m.put(a, if (Schema.fieldNames.contains(a)) Schema.fieldIndex(a) else Skip))
+    m
+  }
+
+  /** The rows of a response body, built in one streaming pass that also
+    * checks the page before anything caches or follows it: a JSON array
+    * of objects whose ids are textual and strictly increase, the first
+    * after a non-empty `cursor`. A body that breaks this throws
+    * [[FeedProtocolException]]; a body that is not JSON throws Jackson's
+    * parse error, an IOException the retry loop treats as transient.
+    *
+    * An envelope maps to a row of [[CloudEventsParse.envelopeSchema]]:
+    *  - string attributes as text; a non-textual value as the text of its
+    *    JSON node (a number's digits, `true`; an object or array reads
+    *    as "") — except `data`, which is an Object in the spec and keeps
+    *    non-textual values as compact JSON for `from_json` late binding,
+    *    as the `from_json` path ([[CloudEventsParse.parsePage]]) does;
+    *  - `time_us` as a long (a JSON node's `asLong` for non-integers);
+    *  - `datacontenttype` takes the spec default `application/json` when
+    *    missing or null (README.md:315); any other value passes through;
+    *  - every other key is an extension attribute (README.md:318), kept in
+    *    wire order with textual values verbatim and others as compact JSON.
+    * A key given twice keeps its last value, at its first key's position,
+    * as a parsed `ObjectNode` would. Values other than strings, integers
+    * and null are read through a JsonNode of just that value. */
+  private[connector] def parsePage(url: String, cursor: String, body: Array[Byte],
+                                   cacheControl: Option[String]): Page = {
     def violation(what: String) =
       new FeedProtocolException(s"$url broke the feed protocol after cursor '$cursor': $what")
-    if (!root.isArray) throw violation("the response body is not a JSON array")
-    val buf = new ArrayBuffer[JsonNode](root.size())
-    var prev = cursor
-    root.forEach { n =>
-      val id = n.get("id")
-      if (id == null || !id.isTextual)
-        throw violation(s"event ${buf.length} has no textual id (after id '$prev')")
-      val cur = id.asText()
-      if ((buf.nonEmpty || cursor.nonEmpty) && cur <= prev)
-        throw violation(
-          if (buf.isEmpty) s"first id '$cur' is not after the cursor"
-          else s"id '$cur' does not follow id '$prev' on the page")
-      prev = cur
-      buf += n
-    }
-    buf.toIndexedSeq
+    val p = mapper.getFactory.createParser(body)
+    try {
+      if (p.nextToken() != JsonToken.START_ARRAY) {
+        p.skipChildren() // a truncated object still fails as a parse error
+        throw violation("the response body is not a JSON array")
+      }
+      val rows = new ArrayBuffer[InternalRow]()
+      var prev = cursor
+      // the first violation; the array is still read to its end, so a body
+      // that is also malformed fails as a parse error
+      var broken: FeedProtocolException = null
+      var t = p.nextToken()
+      while (t != JsonToken.END_ARRAY && t != null) {
+        if (broken != null) p.skipChildren()
+        else {
+          val cols = new Array[Any](Schema.length)
+          val id = if (t == JsonToken.START_OBJECT) envelope(p, cols) else { p.skipChildren(); null }
+          if (id == null)
+            broken = violation(s"event ${rows.length} has no textual id (after id '$prev')")
+          else if ((rows.nonEmpty || cursor.nonEmpty) && id <= prev)
+            broken = violation(
+              if (rows.isEmpty) s"first id '$id' is not after the cursor"
+              else s"id '$id' does not follow id '$prev' on the page")
+          else {
+            prev = id
+            rows += new GenericInternalRow(cols)
+          }
+        }
+        t = p.nextToken()
+      }
+      if (t == null) throw new java.io.EOFException(s"$url: page ends inside its array")
+      if (broken != null) throw broken
+      Page(rows.toIndexedSeq, cacheControl, body)
+    } finally p.close()
   }
+
+  /** Fill `cols` from the envelope object `p` is at; returns its id, or
+    * null when the id is missing or not textual. */
+  private def envelope(p: JsonParser, cols: Array[Any]): String = {
+    var id: String = null
+    var extKeys: ArrayBuffer[UTF8String] = null
+    var extVals: ArrayBuffer[UTF8String] = null
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val name = p.currentName()
+      val t = p.nextToken()
+      val col: Integer = CoreColumns.get(name)
+      if (col == null) { // an extension attribute
+        if (extKeys == null) { extKeys = new ArrayBuffer(); extVals = new ArrayBuffer() }
+        val v = t match {
+          case JsonToken.VALUE_NULL => null
+          case JsonToken.VALUE_STRING => UTF8String.fromString(p.getText)
+          case _ => UTF8String.fromString(mapper.readTree[JsonNode](p).toString)
+        }
+        val key = UTF8String.fromString(name)
+        val at = extKeys.indexOf(key)
+        if (at < 0) { extKeys += key; extVals += v } else extVals(at) = v
+      } else if (col == TimeUsCol) {
+        cols(col) = t match {
+          case JsonToken.VALUE_NULL => null
+          case JsonToken.VALUE_NUMBER_INT if p.getNumberType != JsonParser.NumberType.BIG_INTEGER =>
+            p.getLongValue
+          case _ => mapper.readTree[JsonNode](p).asLong()
+        }
+      } else if (col == Skip) p.skipChildren()
+      else {
+        val text = if (t == JsonToken.VALUE_STRING) p.getText else null
+        if (col == IdCol) id = text
+        cols(col) =
+          if (text != null) UTF8String.fromString(text)
+          else if (t == JsonToken.VALUE_NULL) null
+          else {
+            val n = mapper.readTree[JsonNode](p)
+            UTF8String.fromString(if (col == DataCol) n.toString else n.asText())
+          }
+      }
+    }
+    if (cols(ContentTypeCol) == null) cols(ContentTypeCol) = DefaultContentType
+    cols(ExtensionsCol) =
+      if (extKeys == null) EmptyExtensions
+      else new ArrayBasedMapData(new GenericArrayData(extKeys.toArray[Any]),
+        new GenericArrayData(extVals.toArray[Any]))
+    id
+  }
+
+  private val EmptyExtensions = new ArrayBasedMapData(
+    new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
 
   /** Drain from a cursor to the current head: page until the server answers
     * with the empty array (`README.md:79-82` end-of-feed). Returns the head
@@ -250,7 +410,7 @@ object HttpFeedClient {
       first = false
       if (page.isEmpty) return cursor
       cursor = page.lastId.getOrElse(return cursor)
-      events += page.events.length
+      events += page.rows.length
       pages += 1
     }
     cursor
@@ -309,7 +469,7 @@ object HttpFeedClient {
     try {
       val page = fetchPage(url, seqCursor(knownSeq, width), 0, auth,
         cache = Some(sharedCache))
-      page.events.headOption.flatMap(e => parseSeqId(e.get("id").asText()))
+      page.firstId.flatMap(parseSeqId)
         .exists { case (s, w) => s == knownSeq && w == width }
     } catch {
       case e: FeedProtocolException => throw e
@@ -321,9 +481,9 @@ object HttpFeedClient {
     * not parse as sequence-prefixed. */
   private[graft] def seqSample(page: Page): Option[SeqSample] =
     for {
-      first <- page.events.headOption.flatMap(e => parseSeqId(e.get("id").asText()))
+      first <- page.firstId.flatMap(parseSeqId)
       last <- page.lastId.flatMap(parseSeqId)
-    } yield SeqSample(first._1, last._1, page.events.length)
+    } yield SeqSample(first._1, last._1, page.rows.length)
 
   /** O(log feed) head-sequence probe for sequence-prefixed feeds: gallop
     * then binary-search over synthesized [[seqCursor]] probes, using the
@@ -450,13 +610,13 @@ object HttpFeedClient {
         if (pages.isEmpty) timeoutMs else 0, auth,
         cache = Some(sharedCache).filter(_ => pages.length <= SerialPages))
       if (!page.isEmpty) {
-        pages += page.lastId.get -> page.events.length
+        pages += page.lastId.get -> page.rows.length
         seqSample(page).foreach(samples += _)
       }
       page
     }
     var page = next()
-    val firstId = page.events.headOption.map(_.get("id").asText())
+    val firstId = page.firstId
     while (!page.isEmpty && pages.length <= SerialPages) page = next()
     if (page.isEmpty)
       return Head(pages.lastOption.fold(fromId)(_._1), None, pages.toIndexedSeq)
@@ -465,7 +625,7 @@ object HttpFeedClient {
     // parse with one pad width
     val scheme = for {
       (firstSeq, w) <- firstId.flatMap(parseSeqId)
-      (_, w1) <- parseSeqId(page.events.head.get("id").asText())
+      (_, w1) <- parseSeqId(page.id(0))
       (lastSeq, w2) <- parseSeqId(pages.last._1)
       if w1 == w2 && validateSeqCursor(url, lastSeq, w2, auth) && w2 == w
     } yield (w, firstSeq, lastSeq)

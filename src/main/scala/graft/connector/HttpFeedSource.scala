@@ -6,10 +6,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
@@ -19,7 +18,6 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import graft.udf.CloudEventsParse
 
 /** DSv2 HTTP feed source — the subscription half of the spec
@@ -208,7 +206,7 @@ case class HttpFeedOffset(lastEventId: String) extends Offset {
 object HttpFeedOffset {
   private val mapper = new ObjectMapper()
   def fromJson(json: String): HttpFeedOffset =
-    HttpFeedOffset(mapper.readTree(json).get("lastEventId").asText())
+    HttpFeedOffset(mapper.readValue(json, classOf[java.util.Map[String, String]]).get("lastEventId"))
 }
 
 class HttpFeedMicroBatchStream(opts: HttpFeedOptions)
@@ -544,6 +542,9 @@ class HttpFeedReaderFactory extends PartitionReaderFactory {
   * cursor loop (`README.md:95-109`), stopping at the empty page or once the
   * bound is passed. Rows beyond endId (data that arrived after the batch
   * was planned) are excluded so the batch is exactly the planned range.
+  * It emits the rows each [[HttpFeedClient.Page]] carries, built by the
+  * one streaming pass over the response body that also checked it; the
+  * page cache it reads through holds bodies, so a hit parses again.
   *
   * Read-ahead: the cursor loop is serial, one round trip per page. But a
   * server must resolve cursors positionally even for absent ids
@@ -594,47 +595,11 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
   private var emitted = 0
   private var current: InternalRow = _
 
-  private def str(n: JsonNode, field: String): UTF8String = {
-    val v = n.get(field)
-    if (v == null || v.isNull) null else UTF8String.fromString(v.asText())
-  }
-
-  private def toRow(n: JsonNode): InternalRow = {
-    val timeUs = Option(n.get("time_us")).filterNot(_.isNull).map(_.asLong())
-    // datacontenttype passes through from the wire verbatim (non-JSON
-    // payloads ride as-is, e.g. base64 data with a binary media type);
-    // only a MISSING field takes the spec default (README.md:315)
-    val ct = Option[Any](str(n, "datacontenttype"))
-      .getOrElse(UTF8String.fromString("application/json"))
-    // extension attributes (README.md:318): every envelope key that is not
-    // a core attribute survives the wire verbatim as a string entry, in
-    // wire order — `traceparent`, `partitionkey`, … Non-textual extension
-    // values ride as their compact-JSON rendering.
-    val fields = n.fields()
-    val extKeys = scala.collection.mutable.ArrayBuffer[Any]()
-    val extVals = scala.collection.mutable.ArrayBuffer[Any]()
-    while (fields.hasNext) {
-      val e = fields.next()
-      if (!HttpFeedPartitionReader.CoreAttributes.contains(e.getKey)) {
-        extKeys += UTF8String.fromString(e.getKey)
-        extVals += (if (e.getValue.isNull) null
-          else UTF8String.fromString(
-            if (e.getValue.isTextual) e.getValue.asText() else e.getValue.toString))
-      }
-    }
-    val ext = new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(extKeys.toArray),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(extVals.toArray))
-    new GenericInternalRow(Array[Any](
-      str(n, "specversion"), str(n, "id"), str(n, "type"), str(n, "source"),
-      timeUs.map(Long.box).orNull, str(n, "subject"), str(n, "method"),
-      ct, str(n, "data"), ext))
-  }
-
   /** One page after `at`. The JVM-wide page cache serves replayed
     * immutable full pages (task retries, restart backfills) without a
-    * network round-trip — only pages the server marked `Cache-Control:
-    * public, max-age=…` are ever stored (reference README.md:330-332). */
+    * network round-trip — only the bodies of pages the server marked
+    * `Cache-Control: public, max-age=…` are ever stored (reference
+    * README.md:330-332). */
   private def fetch(at: String): HttpFeedClient.Page =
     HttpFeedClient.sharedCache.get(p.url, at, p.auth) match {
       case Some(cached) => cacheHits.incrementAndGet(); cached
@@ -647,8 +612,9 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
     }
 
   /** The cursor loop over (from, to], at most `maxPages` pages — the serial
-    * read and every read-ahead chunk. Builds the rows of the ids ≤ `to`,
-    * so a chunk builds them off the reader's thread. The range is done at
+    * read and every read-ahead chunk. Keeps each page's rows (built by
+    * [[HttpFeedClient.fetchPage]], so a chunk builds them off the reader's
+    * thread) up to the last id ≤ `to`. The range is done at
     * the empty page or the page that reaches `to`, else `resume` is the
     * cursor to go on from. */
   private def walk(from: String, to: String, maxPages: Int): Walk = {
@@ -660,9 +626,8 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
       val fetched = fetch(at)
       if (fetched.isEmpty) return Walk(pages.toIndexedSeq, None)
       val last = fetched.lastId.get
-      val kept = if (last <= to) fetched.events
-                 else fetched.events.takeWhile(_.get("id").asText() <= to)
-      pages += kept.map(toRow)
+      pages += (if (last <= to) fetched.rows
+                else fetched.rows.take(fetched.rows.indices.indexWhere(fetched.id(_) > to)))
       if (last >= to) return Walk(pages.toIndexedSeq, None)
       at = last
     }
@@ -801,11 +766,4 @@ object HttpFeedPartitionReader {
   private lazy val pool = Executors.newCachedThreadPool(r => {
     val t = new Thread(r, "http-feed-read-ahead"); t.setDaemon(true); t
   })
-
-  /** Core envelope attributes (README.md:306-316 plus the engine's
-    * `time_us` metadata twin of `time`); everything else is an extension
-    * attribute (README.md:318). */
-  private[connector] val CoreAttributes: Set[String] = Set(
-    "specversion", "id", "type", "source", "time", "time_us",
-    "subject", "method", "datacontenttype", "data")
 }

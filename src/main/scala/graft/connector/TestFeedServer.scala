@@ -47,6 +47,8 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
   private val lock = new Object
 
   private val requests = new java.util.concurrent.atomic.AtomicInteger(0)
+  // client ports seen, one per TCP connection the clients opened
+  private val clientPorts = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
 
   // daemon threads + explicit shutdown: the fixture must never keep the
   // driver JVM alive after stop()
@@ -63,7 +65,7 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
       attempt += 1
       try s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
       catch {
-        case e: java.net.BindException if port != 0 && attempt < 50 =>
+        case _: java.net.BindException if port != 0 && attempt < 50 =>
           Thread.sleep(20)
         case e: Throwable => throw e
       }
@@ -77,6 +79,8 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
   def url: String = s"http://127.0.0.1:${server.getAddress.getPort}/feed"
   def boundPort: Int = server.getAddress.getPort
   def requestCount: Int = requests.get()
+  /** Distinct client connections that have sent a request. */
+  def connectionCount: Int = clientPorts.size()
 
   /** Append new events (notifies long-poll waiters). */
   def append(more: Seq[(String, String)]): Unit = lock.synchronized {
@@ -150,6 +154,7 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
 
   private def handle(ex: HttpExchange): Unit = {
     requests.incrementAndGet()
+    clientPorts.add(ex.getRemoteAddress.getPort)
     if (failCount.getAndUpdate(c => math.max(0, c - 1)) > 0) {
       failRetryAfterSec.foreach(s =>
         ex.getResponseHeaders.set("Retry-After", s.toString))

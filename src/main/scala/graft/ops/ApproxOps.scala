@@ -242,7 +242,7 @@ object ApproxOps {
         |FROM g ORDER BY label""".stripMargin,
 
     "eval_mrr" ->
-      s"""WITH ${MetricsOps.knnSql(500, 10)},
+      s"""WITH ${MetricsOps.knnSql(500)},
         |tr AS (SELECT vec_id AS qid, CAST(label AS BIGINT) AS label FROM q0),
         |fh AS (SELECT rnk.qid, tr.label,
         |    min(CASE WHEN rnk.nlabel = tr.label THEN rnk.rk END) AS first_hit

@@ -415,7 +415,7 @@ object EvalOps {
     // (MetricsOps.knnSql) — sf0.1-sweepable, unlike the old per-pair
     // list-lambda formulation
     "knn_classify_eval" ->
-      s"""WITH ${MetricsOps.knnSql(1000, 5)},
+      s"""WITH ${MetricsOps.knnSql(1000)},
         |v AS (SELECT qid, nlabel, count(*) AS c
         |      FROM rnk WHERE rk <= 5 GROUP BY 1, 2),
         |p AS (SELECT qid, nlabel AS pred, row_number() OVER (PARTITION BY qid

@@ -205,7 +205,7 @@ object MetricsOps {
     * unnest → dimension-join → group-by instead of a per-pair
     * interpreted list lambda (the lambda form was ~1000× slower and
     * kept these three queries out of the sf0.1 oracle sweep). */
-  private[ops] def knnSql(panelBound: Int, k: Int): String =
+  private[ops] def knnSql(panelBound: Int): String =
     s"""d AS (SELECT vec_id, embedding, label FROM embeddings),
       |q0 AS (SELECT * FROM d WHERE vec_id < $panelBound),
       |dqe AS (SELECT vec_id,
@@ -275,7 +275,7 @@ object MetricsOps {
     "eval_ndcg" -> {
       val wCase = ndcgW.zipWithIndex
         .map { case (w, i) => s"WHEN ${i + 1} THEN $w" }.mkString(" ")
-      s"""WITH ${knnSql(500, 10)},
+      s"""WITH ${knnSql(500)},
         |nn AS (SELECT qid, nlabel,
         |    CASE rk $wCase END AS w FROM rnk WHERE rk <= 10),
         |tr AS (SELECT vec_id AS qid, CAST(label AS BIGINT) AS label FROM q0),
@@ -303,7 +303,7 @@ object MetricsOps {
         |FROM b ORDER BY bin""".stripMargin,
 
     "confusion_knn_eval" ->
-      s"""WITH ${knnSql(1000, 5)},
+      s"""WITH ${knnSql(1000)},
         |v AS (SELECT qid, nlabel, count(*) AS c FROM rnk
         |      WHERE rk <= 5 GROUP BY 1, 2),
         |p AS (SELECT qid, nlabel AS pred, row_number() OVER (PARTITION BY qid

@@ -276,8 +276,7 @@ object Pipeline {
     * inputs need (doc_id, lang, text); ids must be disjoint. Shared by
     * the batch `dedup_incremental` fixture and the streaming
     * `stream_dedup_incremental` admission fixture. */
-  private[graft] def incrementalPairs(s: SparkSession, newDocs: DataFrame,
-                                      corpus: DataFrame,
+  private[graft] def incrementalPairs(newDocs: DataFrame, corpus: DataFrame,
                                       tau: Double = 0.5): DataFrame = {
     val all = newDocs.select("doc_id", "lang", "text")
       .unionByName(corpus.select("doc_id", "lang", "text"))

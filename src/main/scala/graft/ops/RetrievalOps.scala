@@ -106,7 +106,6 @@ object RetrievalOps {
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
         .agg(count(lit(1)).as("x"))
-      val wRn = Window.partitionBy("event_type").orderBy("day")
       val pts = daily.withColumn("b",
         expr("(row_number() over (partition by event_type order by day) - 1) div 5"))
       val buckets = pts.groupBy("event_type", "b")

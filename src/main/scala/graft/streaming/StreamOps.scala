@@ -437,7 +437,7 @@ object StreamOps {
         .groupBy(window(col("ets"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_micros(col("window.start")).as("win_us"), col("event_type"), col("n"))
-      runToMemory(s, agg, freshName("wm_late"), OutputMode.Append) { q =>
+      runToMemory(s, agg, freshName("wm_late"), OutputMode.Append) { _ =>
         ms.addData(rows.toSeq)
       }.orderBy("win_us", "event_type")
     }),
@@ -1246,7 +1246,7 @@ object StreamOps {
         if (hasCorpus) {
           val corpus = sp.read.parquet(corpusDir)
             .filter(col("batch") =!= bid).drop("batch")
-          graft.ops.Pipeline.incrementalPairs(sp, incoming, corpus)
+          graft.ops.Pipeline.incrementalPairs(incoming, corpus)
             .withColumn("jac_c", Tables.canon(col("jac"))).drop("jac")
             .write.mode("overwrite").parquet(s"$pairsDir/batch=$bid")
         }

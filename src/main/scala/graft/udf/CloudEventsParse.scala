@@ -12,7 +12,14 @@ import org.apache.spark.sql.types._
   *
   * v1 ships as `from_json` + `explode` (Catalyst-native, codegen-adjacent)
   * per SURVEY.md §2.9 — a custom Generator would only pay off if JSON
-  * parsing dominated the connector profile. `time` travels as the extra
+  * parsing dominated the connector profile. In the DSv2 connector it did:
+  * a JFR profile of warm 20k-envelope `Feeds.readModel` replays (4 cores)
+  * put 17–20 % of all samples in building Jackson trees and 3–6 % in
+  * turning them into rows, so the connector builds its rows in one
+  * streaming pass instead (`HttpFeedClient.parsePage`, which maps a
+  * non-textual `data` to compact JSON as `from_json` does here). This
+  * path parses pages a query already holds as strings and was not
+  * profiled as a hot spot. `time` travels as the extra
   * `time_us` BIGINT metadata field (the spec allows additional metadata,
   * `README.md:318`) to keep the timestamp round-trip exact at µs precision.
   */

@@ -728,6 +728,70 @@ class HttpSourceSuite extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("object, array, number and string data read the same through http-feed and CloudEventsParse") {
+    val payloads = Seq("""{"sku":"123","qty":2}""", """[1,"two",{"three":3},null]""",
+      "42", "-7.25", "\"plain text\"", "\"{\\\"v\\\":1}\"")
+    val events = payloads.zipWithIndex.map { case (data, i) =>
+      val id = SeqId.encodeFn(i + 1L, s"u$i")
+      (id, s"""{"specversion":"1.0","id":"$id","type":"t","source":"srv",""" +
+        s""""time_us":1700000000000000,"subject":"s","method":"PUT","data":$data}""")
+    }
+    val server = new TestFeedServer(events, pageSize = 100)
+    try {
+      val viaSource = spark.read.format("http-feed").option("url", server.url).load()
+        .orderBy("id").select("id", "data").collect().map(r => (r.getString(0), r.getString(1)))
+      val page = events.map(_._2).mkString("[", ",", "]")
+      val viaParse = spark.range(1).select(lit(page).as("page_json"))
+        .select(graft.udf.CloudEventsParse.explodePage(col("page_json")).as("ce"))
+        .select("ce.id", "ce.data").orderBy("id").collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      assert(viaSource.toSeq === viaParse.toSeq)
+      assert(viaSource.map(_._2).toSeq === Seq("""{"sku":"123","qty":2}""",
+        """[1,"two",{"three":3},null]""", "42", "-7.25", "plain text", """{"v":1}"""))
+    } finally server.stop()
+  }
+
+  test("a serial 10-page walk reuses its keep-alive connection") {
+    val events = (1L to 100L).map(i => envelopeJson(i, "s"))
+    val server = new TestFeedServer(events, pageSize = 10)
+    try {
+      var cursor = ""
+      for (_ <- 1 to 10) {
+        val page = HttpFeedClient.fetchPage(server.url, cursor, 0L)
+        assert(page.rows.length === 10)
+        cursor = page.lastId.get
+      }
+      assert(server.requestCount === 10)
+      assert(server.connectionCount <= 2, s"${server.connectionCount} connections for 10 pages")
+    } finally server.stop()
+  }
+
+  test("the page cache holds at most PageCache.MaxBytes of bodies") {
+    // one 2 MB envelope per full, cacheable page
+    val big = "x" * (2 << 20)
+    val server = new TestFeedServer(Seq((SeqId.encodeFn(1L, "u"),
+      s"""{"specversion":"1.0","id":"${SeqId.encodeFn(1L, "u")}","data":"$big"}""")), pageSize = 1)
+    try {
+      val cache = new HttpFeedClient.PageCache()
+      val page = HttpFeedClient.fetchPage(server.url, "", 0L, cache = Some(cache))
+      assert(page.cacheable && page.bytes > (2 << 20) && cache.size === 1)
+      // the same body under 100 more keys: the byte bound evicts, oldest first
+      for (i <- 1 to 100) cache.put(server.url, f"!$i%03d", None, page)
+      val fit = (HttpFeedClient.PageCache.MaxBytes / page.bytes).toInt
+      assert(cache.size === fit && fit < 1024)
+      assert(cache.bodyBytes === fit * page.bytes)
+      assert(cache.bodyBytes <= HttpFeedClient.PageCache.MaxBytes)
+      // the least recently used keys went, the newest stayed and re-parse to the same rows
+      val hits = cache.hits
+      assert(cache.get(server.url, "", None).isEmpty)
+      val again = cache.get(server.url, "!100", None)
+      assert(cache.hits === hits + 1)
+      assert(again.map(_.rows.map(_.getUTF8String(8))) === Some(page.rows.map(_.getUTF8String(8))))
+      cache.clear()
+      assert(cache.size === 0 && cache.bodyBytes === 0L)
+    } finally server.stop()
+  }
+
   test("non-JSON datacontenttype passes through from the wire; missing takes the spec default (README.md:315)") {
     val binPayload = java.util.Base64.getEncoder.encodeToString(
       Array[Byte](0, 1, 2, -1, -128, 127))
@@ -860,7 +924,7 @@ class HttpSourceSuite extends AnyFunSuite {
         if (hasCorpus) {
           val corpus = sp.read.parquet(corpusDir)
             .filter(col("batch") =!= bid).drop("batch")
-          graft.ops.Pipeline.incrementalPairs(sp, docsB, corpus)
+          graft.ops.Pipeline.incrementalPairs(docsB, corpus)
             .withColumn("jac_c", graft.io.Tables.canon(col("jac"))).drop("jac")
             .write.mode("overwrite").parquet(s"$pairsDir/batch=$bid")
         }
@@ -907,7 +971,7 @@ class HttpSourceSuite extends AnyFunSuite {
         else {
           val corpus = spark.read.parquet(
             prior.map(b => s"$corpusDir/batch=$b"): _*)
-          graft.ops.Pipeline.incrementalPairs(spark, newDocs, corpus)
+          graft.ops.Pipeline.incrementalPairs(newDocs, corpus)
             .withColumn("jac_c", graft.io.Tables.canon(col("jac")))
             .select("d_new", "d_old", "jac_c").collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
