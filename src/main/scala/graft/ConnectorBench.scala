@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.streaming.Trigger
+import graft.api.QueryHygiene
 import graft.connector.{HttpFeedClient, TestFeedServer}
 import graft.udf.SeqId
 
@@ -98,7 +99,7 @@ object ConnectorBench {
     // 2) Trigger.AvailableNow streaming replay (1k pages)
     locally {
       val server = new TestFeedServer(events, pageSize = 1000)
-      val ckpt = java.nio.file.Files.createTempDirectory("connbench_ckpt").toString
+      val ckpt = QueryHygiene.scratchDir("connbench_ckpt", inMemory = false)
       try {
         val (_, sec) = timed {
           val q = spark.readStream.format("http-feed").option("url", server.url)
@@ -121,7 +122,7 @@ object ConnectorBench {
     // + 2·log₂(feed); the pre-round-16 run paid ≈ 2× the page count.
     locally {
       val server = new TestFeedServer(events, pageSize = 100) // 1000 pages
-      val ckpt = java.nio.file.Files.createTempDirectory("connbench_an8").toString
+      val ckpt = QueryHygiene.scratchDir("connbench_an8", inMemory = false)
       try {
         val (_, sec) = timed {
           val q = spark.readStream.format("http-feed").option("url", server.url)
@@ -174,7 +175,7 @@ object ConnectorBench {
     // thousands of events/s with sub-second delivery.
     locally {
       val server = new TestFeedServer(Seq.empty, pageSize = 1000)
-      val ckpt = java.nio.file.Files.createTempDirectory("connbench_steady").toString
+      val ckpt = QueryHygiene.scratchDir("connbench_steady", inMemory = false)
       val latUs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
       val rate = sys.env.getOrElse("GRAFT_CONNBENCH_RATE", "2000").toInt // events/s
       val chunk = math.max(1, rate / 20) // appended every 50 ms

@@ -39,26 +39,6 @@ object Layout {
     f.join(d, Seq(key, "_graft_salt")).drop("_graft_salt")
   }
 
-  /** Scratch dirs created for bucketed tables, removed on JVM exit — the
-    * same cleanup discipline as the streaming fixtures' checkpoint dirs
-    * (a real deployment's bucketed tables live in the warehouse and are
-    * not scratch at all; only the fixture writes to temp space). */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private lazy val installCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchDirs.forEach { dir =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val root = java.nio.file.Paths.get(dir)
-          if (java.nio.file.Files.exists(root))
-            java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverseIterator
-              .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-                catch { case _: Throwable => () })
-        } catch { case _: Throwable => () }
-      }
-    }))
-
   /** Materialize `df` as a bucketed + bucket-sorted catalog table (an
     * EXTERNAL table under a scratch path removed on JVM exit, so the
     * session's warehouse dir is never touched) and return it as read
@@ -92,10 +72,9 @@ object Layout {
       .digest(identity.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val tbl = s"${name}_$digest"
     if (!spark.catalog.tableExists(tbl)) {
-      installCleanupHook
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft_tbl_$tbl").toString
-      scratchDirs.add(path)
+      // a real deployment's bucketed tables live in the warehouse; only
+      // the fixture writes to scratch space
+      val path = QueryHygiene.scratchDir(s"graft_tbl_$tbl", inMemory = false)
       writer.mode("overwrite").option("path", path).saveAsTable(tbl)
     }
     spark.table(tbl)

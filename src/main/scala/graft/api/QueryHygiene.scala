@@ -1,37 +1,45 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-/** Post-query cache hygiene for the sequential drivers (Bench / Verify).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one owner of state that outlives a query. It owns three things:
   *
-  * Many operators materialize intermediates with `localCheckpoint()` /
-  * `persist()` while a query runs. Within one query that is the right
-  * call (the relation feeds several downstream joins), but the blocks
-  * stay pinned in the block manager after the query's terminal action —
-  * and a ~190-query sequential run accumulates gigabytes of dead blocks,
-  * evicting the caches that ARE still live and driving GC churn. On a
-  * loaded box this is the difference between a quiet 200 s run and a
-  * thrashing 400 s one. A long-lived service would scope these to a
-  * request the same way; local mode just has no executor boundary to do
-  * it for us.
+  *  - '''The sweep''' ([[run]]). Many operators materialize intermediates
+  *    with `localCheckpoint()` / `persist()` while a query runs. Within
+  *    one query that is the right call (the relation feeds several
+  *    downstream joins), but the blocks stay pinned in the block manager
+  *    after the query's terminal action — and a ~400-query sequential run
+  *    accumulates gigabytes of dead blocks, evicting the caches that ARE
+  *    still live and driving GC churn. A long-lived service would scope
+  *    these to a request the same way; local mode just has no executor
+  *    boundary to do it for us. The sweep unpersists every RDD that
+  *    became persistent during the query except the pinned ones.
+  *  - '''The shared-relation memo''' ([[memoized]], [[sharedRelation]]):
+  *    values built once per (session, name, dataset dir) and reused by
+  *    every later query — the graph adjacency and common-neighbor
+  *    relations, the strict dedup labeling, the stream fixtures' replay
+  *    rows, inferred parquet schemas; exactly what a deployment would
+  *    keep as maintained tables. A shared relation's checkpoint is pinned
+  *    by RDD id when it is built, so the exemption follows the relation,
+  *    not whichever query happened to build it (a name-based exemption
+  *    list once let the first graph query in sorted order sweep the
+  *    adjacency it had just built).
+  *  - '''Scratch directories''' ([[scratchDir]]): temp space for fixture
+  *    tables, checkpoints and round-trip writes, removed when the JVM
+  *    exits.
   *
-  * The sweep unpersists every RDD that became persistent during the
-  * query EXCEPT explicitly pinned shared caches (the graph family's
-  * adjacency / common-neighbor relations, reused across all nine graph
-  * queries — exactly the relations a deployment would keep as maintained
-  * tables). Pinning is by RDD id, registered at cache-build time via
-  * [[pinning]]: the earlier name-based exemption list silently broke
-  * whenever a NEW query happened to be the first to touch a shared cache
-  * (sorted bench order put `graph_assortativity` — absent from the list —
-  * first, so the adjacency blocks were swept right after being built and
-  * every later graph query re-derived the 2-shuffle build).
+  * Everything here lives for the session. The memo holds a strong
+  * reference to its session: fine for this library's one-session-per-JVM
+  * drivers (Verify / Bench / tests); a long-lived multi-session service
+  * would key a weak map or drop a session's entries on teardown.
   */
 object QueryHygiene {
 
-  /** RDD ids of shared cross-query caches — never swept. Registered by
-    * the cache builders themselves via [[pinning]], so the exemption
-    * follows the cache, not whichever query happened to build it. */
-  private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  /** RDD ids of shared relations — never swept. */
+  private val pinned = ConcurrentHashMap.newKeySet[Int]()
 
   /** Run a shared-cache build and pin every RDD it persisted. The build
     * must materialize (or at least mark) its persistence inside `body` —
@@ -44,6 +52,74 @@ object QueryHygiene {
     sc.getPersistentRDDs.keySet.diff(before).foreach(pinned.add(_))
     out
   }
+
+  /** Builds on first access; concurrent callers wait for that build. */
+  private final class Once(build: => Any) { lazy val value: Any = build }
+
+  private val memo = new ConcurrentHashMap[(SparkSession, String, String), Once]()
+
+  /** The value `name` of dataset `dir` in session `spark`: built by
+    * `build` on the first call, the same instance on every later one.
+    * The map's update only publishes a per-key holder and the build runs
+    * outside it, so one memoized build may call another (the
+    * common-neighbor relation builds the adjacency inside its own build;
+    * a nested `computeIfAbsent` on one map throws `Recursive update`).
+    * Racing first calls share one build. A build that throws stores no
+    * value; the next call builds again. */
+  def memoized[T](spark: SparkSession, name: String, dir: String)(build: => T): T =
+    memo.computeIfAbsent((spark, name, dir), _ => new Once(build)).value.asInstanceOf[T]
+
+  /** A memoized relation that survives the sweep. `plan` is evaluated
+    * OUTSIDE [[pinning]], so whatever it checkpoints on the way (the
+    * connected-components rounds, a pair relation) stays query-local and
+    * is swept; only the final `localCheckpoint()` is pinned. That
+    * checkpoint is eager, disk-backed and truncates the lineage: its
+    * blocks are the only copy, so they must never be swept. */
+  def sharedRelation(spark: SparkSession, name: String, dir: String)(
+      plan: => DataFrame): DataFrame =
+    memoized(spark, name, dir) {
+      val p = plan
+      pinning(spark)(p.localCheckpoint())
+    }
+
+  private val scratchDirs = new ConcurrentLinkedQueue[String]()
+
+  private lazy val cleanupHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach(d => deleteRecursively(d))))
+
+  /** A fresh directory whose name starts with `prefix`, removed when the
+    * JVM exits. `inMemory` puts it on tmpfs (`/dev/shm`) when that is
+    * writable: streaming checkpoints fsync their offset and commit logs
+    * every micro-batch, pure latency on disk for a bounded fixture. Table
+    * and parquet scratch, whose size grows with the scale factor, stays
+    * on disk. A real deployment points both at durable storage; only the
+    * fixtures make this trade. */
+  def scratchDir(prefix: String, inMemory: Boolean): String = {
+    cleanupHook
+    val shm = Paths.get("/dev/shm")
+    val dir =
+      if (inMemory && Files.isDirectory(shm) && Files.isWritable(shm))
+        Files.createTempDirectory(shm, prefix).toString
+      else Files.createTempDirectory(prefix).toString
+    scratchDirs.add(dir)
+    dir
+  }
+
+  /** Remove a scratch directory now rather than at JVM exit. */
+  def deleteScratch(dir: String): Unit = {
+    scratchDirs.remove(dir)
+    deleteRecursively(dir)
+  }
+
+  private def deleteRecursively(dir: String): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      val root = Paths.get(dir)
+      if (Files.exists(root))
+        Files.walk(root).iterator().asScala.toSeq.reverseIterator
+          .foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
+    } catch { case _: Throwable => () }
 
   /** Run `body` for query `name`, then sweep the blocks it pinned and
     * the temp views it registered (streaming fixtures leave memory-sink

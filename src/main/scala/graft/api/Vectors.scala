@@ -34,14 +34,21 @@ object Vectors {
     * side streams partition-local. Returns
     * `(qid, rank, id, dist)` with rank 1..k (ties broken by id). */
   def knn(data: DataFrame, id: Column, vec: Column,
-          queries: DataFrame, qid: Column, qvec: Column, k: Int): DataFrame = {
+          queries: DataFrame, qid: Column, qvec: Column, k: Int): DataFrame =
+    topKByDist(data, id, vec, queries, qid, qvec, k, sqDist)
+
+  /** The `k` data rows nearest each query row by `dist`, self-matches by
+    * id excluded, ties broken by id; null distances (null/ragged vectors)
+    * rank last, never as nearest. */
+  private def topKByDist(data: DataFrame, id: Column, vec: Column,
+                         queries: DataFrame, qid: Column, qvec: Column, k: Int,
+                         dist: (Column, Column) => Column): DataFrame = {
     val d = Tables.fanOut(data.select(id.cast("long").as("id"), vec.as("v")))
     val q = queries.select(qid.cast("long").as("qid"), qvec.as("qv"))
-    // null distances (null/ragged vectors) must sort LAST, not rank 1
     val w = Window.partitionBy("qid").orderBy(col("dist").asc_nulls_last, col("id"))
     d.crossJoin(broadcast(q))
       .filter(col("id") =!= col("qid"))
-      .withColumn("dist", sqDist(col("v"), col("qv")))
+      .withColumn("dist", dist(col("v"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("id"), col("dist"))
@@ -65,18 +72,9 @@ object Vectors {
     * Returns `(qid, rank, id, dist)` with integer `dist`. */
   def knnQuantized(data: DataFrame, id: Column, vec: Column,
                    queries: DataFrame, qid: Column, qvec: Column,
-                   k: Int, scale: Long = 100000L): DataFrame = {
-    val d = Tables.fanOut(data.select(id.cast("long").as("id"), quantize(vec, scale).as("v")))
-    val q = queries.select(qid.cast("long").as("qid"),
-      quantize(qvec, scale).as("qv"))
-    val w = Window.partitionBy("qid").orderBy(col("dist").asc_nulls_last, col("id"))
-    d.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("dist", Kernels.vecSqDistLong(col("v"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id"), col("dist"))
-  }
+                   k: Int, scale: Long = 100000L): DataFrame =
+    topKByDist(data, id, quantize(vec, scale), queries, qid, quantize(qvec, scale), k,
+      Kernels.vecSqDistLong(_, _))
 
   /** Top-k most cosine-similar data rows to a single query vector column
     * (one-row `queries` DataFrame). Returns `(id, cos)`, best first. */

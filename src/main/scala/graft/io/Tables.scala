@@ -22,14 +22,10 @@ object Tables {
     * `.schema(...)` skips the re-inference; the scan itself is untouched
     * (same splits, pushdown, pruning). Keyed by session because inference
     * is conf-dependent (e.g. the nanosAsLong shim in [[events]]). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      org.apache.spark.sql.types.StructType]()
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path).schema)
+    val schema = graft.api.QueryHygiene.memoized(spark, "parquet_schema", path)(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -168,8 +168,7 @@ object ActiveOps {
       val base = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           floor(col("l_quantity")).cast("long").as("qty"), col("l_returnflag"))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_schevo").toString
+      val scratch = graft.api.QueryHygiene.scratchDir("graft_schevo", inMemory = false)
       base.filter(expr("l_orderkey % 100 = 0"))
         .drop("l_returnflag") // generation 1: no flag column yet
         .write.mode("overwrite").parquet(s"$scratch/g1")
@@ -193,8 +192,7 @@ object ActiveOps {
       val ev = Tables.events(s, d).filter(col("event_id") < 20000)
         .select(col("event_id"), col("event_type"),
           floor(col("value") * 10000).cast("long").as("v_c"))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_dpp").toString
+      val scratch = graft.api.QueryHygiene.scratchDir("graft_dpp", inMemory = false)
       ev.write.mode("overwrite").partitionBy("event_type").parquet(scratch)
       val fact = s.read.parquet(scratch)
       val dim = Tables.events(s, d).select(col("event_type")).distinct()

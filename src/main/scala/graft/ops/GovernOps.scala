@@ -100,8 +100,7 @@ object GovernOps {
       val ev = Tables.events(s, d).filter(col("event_id") < 20000)
         .select(col("event_id"), col("event_type"),
           floor(col("value") * 10000).cast("long").as("v_c"))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_partwrite").toString
+      val scratch = graft.api.QueryHygiene.scratchDir("graft_partwrite", inMemory = false)
       ev.write.mode("overwrite").partitionBy("event_type").parquet(scratch)
       val back = s.read.parquet(scratch)
       val pruned = back.filter(col("event_type") === "click")
@@ -123,8 +122,7 @@ object GovernOps {
         .filter(expr("l_orderkey % 100 = 0"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_returnflag"))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_formats").toString
+      val scratch = graft.api.QueryHygiene.scratchDir("graft_formats", inMemory = false)
       sample.coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(s"$scratch/csv")
       sample.coalesce(1).write.mode("overwrite").json(s"$scratch/json")

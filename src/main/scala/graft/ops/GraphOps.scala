@@ -1,10 +1,9 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.api.QueryHygiene
 import graft.io.Tables
 import graft.catalyst.Kernels
 
@@ -30,24 +29,20 @@ import graft.catalyst.Kernels
 object GraphOps {
 
   /** The graph's ONE materialized relation: per-node sorted adjacency
-    * (u, vs = sorted neighbor array, deg), hash-partitioned on u,
-    * cached once per (session, raw dataset path) — the cache key is
-    * the unsanitized path, so two datasets can never collide (the Layout
-    * materialize() lesson). Everything else DERIVES from it shuffle-free:
-    * the directed edge list is a partition-preserving explode, degrees
-    * are `size(vs)`, and the common-neighbor kernel broadcasts it.
-    * Caching adjacency instead of the exploded edge list is the same
-    * compressed-sparse-row choice every distributed graph engine makes:
-    * |V| rows carrying arrays instead of 2|E| long pairs, and the
-    * per-iteration scans re-explode from ~|V| cached rows. ~25 MB here;
-    * MEMORY_AND_DISK spills rather than recomputing if it ever isn't.
-    * The map holds a strong session reference — fine for this library's
-    * one-session-per-JVM drivers (Verify/Bench/tests); a long-lived
-    * multi-session service would key a weak map or unpersist on session
-    * teardown. */
-  private val adjCache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Build: group items by order (shuffle 1), generate both-direction
+    * (u, vs = sorted neighbor array, deg), hash-partitioned on u, a
+    * [[QueryHygiene.sharedRelation]] per (session, raw dataset
+    * path) — the key is the unsanitized path, so two datasets can never
+    * collide (the Layout materialize() lesson). Everything else DERIVES
+    * from it shuffle-free: the directed edge list is a
+    * partition-preserving explode, degrees are `size(vs)`, and the
+    * common-neighbor kernel broadcasts it. Caching adjacency instead of
+    * the exploded edge list is the same compressed-sparse-row choice
+    * every distributed graph engine makes: |V| rows carrying arrays
+    * instead of 2|E| long pairs, and the per-iteration scans re-explode
+    * from ~|V| cached rows. ~25 MB here; MEMORY_AND_DISK spills rather
+    * than recomputing if it ever isn't.
+    *
+    * Build: group items by order (shuffle 1), generate both-direction
     * pairs inside each order's set (~items² per order — local,
     * codegen'd, never a join), then ONE u-keyed collect_set aggregation
     * (shuffle 2) that simultaneously dedups pairs (map-side partial
@@ -56,29 +51,23 @@ object GraphOps {
     * edge-list pipeline paid two more full |E|-row shuffles (global
     * `distinct` + a pinning `repartition`).
     *
-    * `localCheckpoint()` (eager, MEMORY_AND_DISK) rather than plain
-    * `persist`: it TRUNCATES the 2-shuffle lineage, so when the unrolled
-    * 4-deep PageRank chain (or any graph query under memory pressure)
-    * loses a block it re-reads the spilled partition from disk instead
-    * of re-deriving the whole edge build inside a deep iteration plan —
-    * the eviction→recompute amplification that made the graph family
-    * 10× slower on a loaded box. `QueryHygiene.pinning` registers the
-    * checkpoint blocks as a shared cross-query cache so the per-query
-    * sweep never frees them (mandatory for checkpointed RDDs: their
-    * blocks are the ONLY copy — no lineage remains to recompute from). */
+    * The shared relation's `localCheckpoint()` TRUNCATES the 2-shuffle
+    * lineage, so when the unrolled 4-deep PageRank chain (or any graph
+    * query under memory pressure) loses a block it re-reads the spilled
+    * partition from disk instead of re-deriving the whole edge build
+    * inside a deep iteration plan — the eviction→recompute amplification
+    * that made the graph family 10× slower on a loaded box. */
   private[graft] def adjacency(s: SparkSession, d: String): DataFrame =
-    adjCache.computeIfAbsent((s, d), _ =>
-      graft.api.QueryHygiene.pinning(s) {
-        Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .groupBy("ok").agg(collect_set(col("pk")).as("pks"))
-          .select(explode(col("pks")).as("u"), col("pks"))
-          .select(col("u"), explode(col("pks")).as("v"))
-          .where(col("u") =!= col("v"))
-          .groupBy("u").agg(sort_array(collect_set(col("v"))).as("vs"))
-          .select(col("u"), col("vs"), size(col("vs")).cast("long").as("deg"))
-          .localCheckpoint()
-      })
+    QueryHygiene.sharedRelation(s, "graph_adjacency", d) {
+      Tables.lineitem(s, d)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .groupBy("ok").agg(collect_set(col("pk")).as("pks"))
+        .select(explode(col("pks")).as("u"), col("pks"))
+        .select(col("u"), explode(col("pks")).as("v"))
+        .where(col("u") =!= col("v"))
+        .groupBy("u").agg(sort_array(collect_set(col("v"))).as("vs"))
+        .select(col("u"), col("vs"), size(col("vs")).cast("long").as("deg"))
+    }
 
   /** Directed edge relation (each undirected edge in both directions),
     * derived from the adjacency cache by a partition-preserving explode:
@@ -424,10 +413,8 @@ object GraphOps {
     * real shuffle moves |E| rows keyed on v. At 100 TB the guard is
     * super-node adjacency width: cap or salt lists past ~√(2|E|)
     * (degree-split the node), the standard node-iterator skew fix. */
-  private val cnCache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def commonNeighbors(s: SparkSession, d: String): DataFrame =
-    cnCache.computeIfAbsent((s, d), _ => graft.api.QueryHygiene.pinning(s) {
+    QueryHygiene.sharedRelation(s, "graph_common_neighbors", d) {
       // the adjacency cache already stores each node's SORTED neighbor
       // array, so every edge's cn is a single-pass two-pointer merge
       // (native codegen'd kernel — no per-row hash set the way
@@ -447,11 +434,7 @@ object GraphOps {
           col("deg").as("deg_v"))), "v")
         .select(col("u"), col("v"), col("deg_u"), col("deg_v"),
           Kernels.sortedIntersectCount(col("nu"), col("nv")).as("cn"))
-        // localCheckpoint (eager, disk-backed) like the adjacency cache:
-        // truncates the broadcast-join lineage so eviction re-reads the
-        // spilled block rather than re-broadcasting and re-intersecting
-        .localCheckpoint()
-    })
+    }
 
   /** Forced-shuffle twin of [[commonNeighbors]]: the identical node-
     * iterator relation through the at-scale physical plan — both
@@ -460,27 +443,20 @@ object GraphOps {
     * computed by Spark's BUILT-IN `array_intersect` instead of the
     * native `sorted_intersect_count` codegen kernel, so twin equality
     * also validates the custom expression against an independent
-    * implementation. Cached like the primary: the triangle and Jaccard
-    * twins share one build per (session, dataset). Like cnCache, entries
-    * live for the session (Verify/Bench use one dataset dir per session,
-    * so the map holds ≤1 checkpointed relation in practice); a long-lived
-    * multi-dataset session should sweep via QueryHygiene instead. */
-  private val cnShuffledCache =
-    new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+    * implementation. Shared under its own name, never the primary's:
+    * the triangle and Jaccard twins share one build per (session,
+    * dataset). */
   private[graft] def commonNeighborsShuffled(s: SparkSession, d: String): DataFrame =
-    cnShuffledCache.computeIfAbsent((s, d), _ =>
-      graft.api.QueryHygiene.pinning(s) {
-        val adj = adjacency(s, d)
-        edges(s, d).where(col("u") < col("v"))
-          .join(adj.select(col("u"), col("vs").as("nu"),
-            col("deg").as("deg_u")).hint("shuffle_hash"), "u")
-          .join(adj.select(col("u").as("v"), col("vs").as("nv"),
-            col("deg").as("deg_v")).hint("shuffle_hash"), "v")
-          .select(col("u"), col("v"), col("deg_u"), col("deg_v"),
-            size(array_intersect(col("nu"), col("nv"))).cast("long").as("cn"))
-          .localCheckpoint()
-      })
+    QueryHygiene.sharedRelation(s, "graph_common_neighbors_shuffled", d) {
+      val adj = adjacency(s, d)
+      edges(s, d).where(col("u") < col("v"))
+        .join(adj.select(col("u"), col("vs").as("nu"),
+          col("deg").as("deg_u")).hint("shuffle_hash"), "u")
+        .join(adj.select(col("u").as("v"), col("vs").as("nv"),
+          col("deg").as("deg_v")).hint("shuffle_hash"), "v")
+        .select(col("u"), col("v"), col("deg_u"), col("deg_v"),
+          size(array_intersect(col("nu"), col("nv"))).cast("long").as("cn"))
+    }
 
   /** Triangle participation (top-30) + global count from a per-edge
     * common-neighbor relation: Σ_edge cn = 3·T, Σ_{edges at p} cn =

@@ -35,37 +35,24 @@ object TrainOps {
     * near-dup pair graph — the relation the whole curation-report
     * family keys on. `dedup_cluster_cc`, `dedup_keep_best`,
     * `dedup_survivorship_report` and `corpus_health_report` all need
-    * exactly `connectedComponents(dedup_ngram_jaccard pairs)`; before
-    * this cache each re-derived the pair kernel + CC per query (~3 s ×
-    * 4 at sf0.1, ~60-100 s × 4 at sf1). Same discipline as
-    * `GraphOps.adjCache`: keyed by (session, dataset), built once under
-    * `QueryHygiene.pinning` so the hygiene sweep never frees the label
-    * blocks, billed as an explicit `_build_dedup_pairs` bench line. A
-    * deployment would keep this labeling as a maintained table next to
-    * the corpus — it IS the dedup pass's primary artifact. The `_dist`
-    * twins deliberately BYPASS the cache (forced prefix-path pairs +
+    * exactly `connectedComponents(dedup_ngram_jaccard pairs)`; before it
+    * was shared, each re-derived the pair kernel + CC per query (~3 s × 4
+    * at sf0.1, ~60-100 s × 4 at sf1). A
+    * [[graft.api.QueryHygiene.sharedRelation]] like the graph adjacency,
+    * billed as an explicit `_build_dedup_pairs` bench line: the pair
+    * relation and the distributed CC's per-iteration checkpoints are
+    * query-local scaffolding the sweep reclaims; only the final labels
+    * are pinned. A deployment would keep this labeling as a maintained
+    * table next to the corpus — it IS the dedup pass's primary artifact.
+    * The `_dist` twins deliberately BYPASS it (forced prefix-path pairs +
     * forced distributed CC — they exist to be independent evidence).
     * Labels only cover nodes that appear in some pair; singleton docs
     * are absent, exactly as the per-query derivations left them. */
-  private val strictCcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def strictDedupLabels(s: SparkSession, d: String): DataFrame =
-    strictCcCache.computeIfAbsent((s, d), _ => {
-      // the pair relation is query-local scaffolding (only its CC result
-      // is shared), so its checkpoint blocks stay UNpinned — the hygiene
-      // sweep reclaims them after the building query finishes
-      val pairs = Pipeline.queries("dedup_ngram_jaccard")(s, d)
-        .select(col("d1"), col("d2")).localCheckpoint()
-      // Run CC OUTSIDE the pinning block: the distributed path eagerly
-      // localCheckpoints up to ~30 per-iteration intermediates, and
-      // pinning them would leave dead blocks the hygiene sweep can never
-      // reclaim. Only the FINAL labels (the shared artifact) are pinned.
-      val cc = connectedComponents(pairs)
-      graft.api.QueryHygiene.pinning(s) {
-        cc.localCheckpoint()
-      }
-    })
+    graft.api.QueryHygiene.sharedRelation(s, "dedup_strict_labels", d) {
+      connectedComponents(Pipeline.queries("dedup_ngram_jaccard")(s, d)
+        .select(col("d1"), col("d2")).localCheckpoint())
+    }
 
   /** Connected components over an undirected edge list `(src, dst)`:
     * returns `(node, cluster_rep)` with the component's smallest node id

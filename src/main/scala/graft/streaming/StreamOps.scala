@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -9,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, TimeMode, Trigger}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.connector.{HttpFeedClient, TestFeedServer}
+import graft.api.QueryHygiene
 import graft.api.QueryHygiene.withConf
 import graft.io.Tables
 import graft.model.CloudEvent
@@ -247,41 +247,6 @@ object StreamOps {
   private def freshName(prefix: String): String =
     s"${prefix}_${nameCounter.incrementAndGet()}"
 
-  /** Scratch dir for streaming checkpoints/state: tmpfs when available —
-    * the offset/commit WAL fsyncs every micro-batch, and for a bounded
-    * test fixture that durability adds pure latency on a disk-backed
-    * filesystem. A real deployment points the checkpoint at durable
-    * storage; only the fixture harness makes this trade. tmpfs survives
-    * JVM exit, so every dir is tracked and removed by a shutdown hook
-    * (checkpoints of finished memory-sink queries are deleted eagerly).
-    */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private lazy val installCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchDirs.forEach(d => deleteRecursively(d))
-    }))
-
-  private def deleteRecursively(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      if (Files.exists(root))
-        Files.walk(root).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
-    } catch { case _: Throwable => () }
-
-  private def scratchDir(prefix: String): String = {
-    installCleanupHook
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val dir =
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        Files.createTempDirectory(shm, prefix).toString
-      else Files.createTempDirectory(prefix).toString
-    scratchDirs.add(dir)
-    dir
-  }
-
   /** Bounded subscription-replay window for the MemoryStream fixtures:
     * the operators themselves are unbounded streams; the bound only keeps
     * the driver-side fixture collect proportionate at larger sf (covers
@@ -301,11 +266,8 @@ object StreamOps {
     * dataset): ~10 fixtures re-scan + re-collect the identical rows
     * otherwise. Bounded by ReplayBound, so the cache is ~2 MB — fixture
     * plumbing, not the scale path (that is the DSv2 HTTP source). */
-  private val evRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Ev]]()
-
   private def evRowsCollected(s: SparkSession, d: String): Array[Ev] =
-    evRowsCache.computeIfAbsent((s, d), _ => evRows(s, d).collect())
+    QueryHygiene.memoized(s, "stream_replay_rows", d)(evRows(s, d).collect())
 
   /** Force the shared replay-window collect so a bench can bill it as an
     * explicit build line instead of whichever streaming fixture runs
@@ -346,7 +308,7 @@ object StreamOps {
   def runToMemory(s: SparkSession, df: DataFrame, name: String,
                   mode: OutputMode, conf: (String, String)*)(
                   feed: StreamingQuery => Unit): DataFrame = {
-    val ckpt = scratchDir(s"graft_${name}_ckpt")
+    val ckpt = QueryHygiene.scratchDir(s"graft_${name}_ckpt", inMemory = true)
     val q = withConf(s, (ShufflePartitions -> "1") +: conf: _*) {
       df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
@@ -393,7 +355,7 @@ object StreamOps {
       }
     } finally {
       q.stop()
-      deleteRecursively(ckpt) // memory sink holds the rows; checkpoint is done
+      QueryHygiene.deleteScratch(ckpt) // memory sink holds the rows; checkpoint is done
     }
     s.table(name)
   }
@@ -405,20 +367,13 @@ object StreamOps {
     import s.implicits._
     try {
       val ms = MemoryStream[Ev](s)
-      val ckpt = scratchDir("graft_warmup_ckpt")
-      val q = withConf(s, ShufflePartitions -> "1") { // see runToMemory
-        ms.toDF()
-          .withColumn("ets", timestamp_micros(col("ts_us")))
-          .withWatermark("ets", "10 minutes")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.format("memory").queryName(freshName("warmup"))
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append).start()
+      val dedup = ms.toDF()
+        .withColumn("ets", timestamp_micros(col("ts_us")))
+        .withWatermark("ets", "10 minutes")
+        .dropDuplicatesWithinWatermark("event_id")
+      runToMemory(s, dedup, freshName("warmup"), OutputMode.Append) { _ =>
+        ms.addData(Ev(1L, 1000000L, 1L, "t", 1.0))
       }
-      ms.addData(Ev(1L, 1000000L, 1L, "t", 1.0))
-      q.processAllAvailable()
-      q.stop()
-      deleteRecursively(ckpt)
     } catch { case e: Throwable => System.err.println(s"WARMUP_FAIL stream: $e") }
   }
 
@@ -862,8 +817,8 @@ object StreamOps {
       import s.implicits._
       val rows = evRowsCollected(s, d).sortBy(_.event_id)
       val (b1, b2) = rows.splitAt(rows.length / 2)
-      val stateDir = scratchDir("graft_feed_sink")
-      val ckpt = scratchDir("graft_feed_sink_ckpt")
+      val stateDir = QueryHygiene.scratchDir("graft_feed_sink", inMemory = true)
+      val ckpt = QueryHygiene.scratchDir("graft_feed_sink_ckpt", inMemory = true)
       val ms = MemoryStream[Ev](s)
 
       val sinkCols = Seq("event_id", "ts_us", "user_id", "event_type", "value", "bucket")
@@ -1229,9 +1184,9 @@ object StreamOps {
         .filter(col("doc_id") < 2000).as[Doc].collect()
       val standing = docs.filter(_.doc_id % 5 != 0)
       val fresh = docs.filter(_.doc_id % 5 == 0)
-      val corpusDir = scratchDir("graft_incr_corpus")
-      val pairsDir = scratchDir("graft_incr_pairs")
-      val ckpt = scratchDir("graft_incr_ckpt")
+      val corpusDir = QueryHygiene.scratchDir("graft_incr_corpus", inMemory = true)
+      val pairsDir = QueryHygiene.scratchDir("graft_incr_pairs", inMemory = true)
+      val ckpt = QueryHygiene.scratchDir("graft_incr_ckpt", inMemory = true)
       val ms = MemoryStream[Doc](s)
       // idempotent under foreachBatch's at-least-once contract: every
       // write is scoped to its batchId directory and OVERWRITES it, so a
