@@ -72,6 +72,25 @@ object HttpFeedClient {
     * it pin more heap than one with small pages; a body larger than the
     * byte bound is never stored.
     *
+    * The bound is sized to the replays the cache serves, all of them a
+    * few pages re-read soon after the first read:
+    *  - the plan-to-reader handoff: planning a range stores its first
+    *    `SerialPages + 1` pages ([[resolveHead]]) and its seq-probe pages,
+    *    and the readers re-read some of them at once. A plan over
+    *    perfbench's 20k-envelope backfill feed stores 13 pages (1.5 MB)
+    *    and each read gets 3 of them back;
+    *  - `feed_cache_replay`'s warm pass: 10 pages, 214 KB at sf0.01 and
+    *    215 KB at sf0.1 (the fixture keeps event ids below 1000 at both);
+    *  - a retried micro-batch: the pages since the previous trigger, a
+    *    page or two in steady state, 10 pages for `stream_http_source`'s
+    *    one batch over that same fixture.
+    * A sequential range larger than the cache gets no replay hits at any
+    * bound: under LRU each page is evicted before the replay reaches it.
+    * At 128 MiB the cache won nothing on a backfill and ended each one
+    * holding 1024 of its 118 KB pages, 121 MB of perfbench's 3 GiB heap;
+    * the same 128 MiB would take about 44 % of the user memory of a
+    * default 1 GiB executor, which Spark does not account for.
+    *
     * The PRINCIPAL is part of the key (a digest of the `Authorization`
     * value, never the raw credential): the spec says auth-protected
     * feeds must be `no-store` (`README.md:328`) and the client honors
@@ -79,8 +98,7 @@ object HttpFeedClient {
     * filtered page `public` must still never leak one principal's rows
     * to another principal sharing the JVM — defense in depth, keyed at
     * the cache, not trusted from the wire. Opt-in via [[fetchPage]]'s
-    * `cache` parameter: the streaming source wires one per executor for
-    * replay/backfill reads. */
+    * `cache` parameter; the DSv2 source reads through [[sharedCache]]. */
   final class PageCache(maxEntries: Int = 1024) {
     // access-ordered, so iteration starts at the least recently used
     private val m = new java.util.LinkedHashMap[(String, String, String),
@@ -126,13 +144,18 @@ object HttpFeedClient {
   }
 
   object PageCache {
-    /** Body bytes one cache holds: 1024 entries of a 128 KiB page. */
-    val MaxBytes: Long = 128L << 20
+    /** Body bytes one cache holds: 1024 entries of a 16 KiB page, or
+      * 142 of perfbench's 118 KB backfill pages. */
+    val MaxBytes: Long = 16L << 20
   }
 
-  /** JVM-wide cache used by the DSv2 partition readers: on a replayed
-    * range (task retry, restart backfill) the immutable full pages come
-    * from memory instead of the wire. */
+  /** JVM-wide cache used by the plan-time head walk and the DSv2
+    * partition readers: the reader gets the plan's first pages back
+    * without a round trip, and a small replayed range (a retried task or
+    * micro-batch) comes from memory instead of the wire. A backfill
+    * passes through it without pinning more than [[PageCache.MaxBytes]]:
+    * a lost backfill is re-read from the server by the `lastEventId`
+    * contract, not from this cache. */
   val sharedCache: PageCache = new PageCache()
 
   /** A page that breaks the protocol's total order (`README.md:148-159`):
@@ -143,10 +166,11 @@ object HttpFeedClient {
     * from the top forever. */
   final class FeedProtocolException(msg: String) extends IllegalStateException(msg)
 
-  /** Transient HTTP failure (5xx/429) carrying the server's `Retry-After`
-    * directive when present — the retry loop obeys it. */
+  /** Transient HTTP failure (5xx/429) with its status code, carrying the
+    * server's `Retry-After` directive when present — the retry loop obeys
+    * it. */
   private[connector] final class TransientHttpException(
-      msg: String, val retryAfterMs: Option[Long]) extends java.io.IOException(msg)
+      msg: String, val code: Int, val retryAfterMs: Option[Long]) extends java.io.IOException(msg)
 
   /** Parse a `Retry-After` header value: delta-seconds or HTTP-date
     * (RFC 9110 §10.2.3). None for absent/unparseable. */
@@ -184,12 +208,14 @@ object HttpFeedClient {
     * [backoff/2, backoff] so a fleet of executors that all hit the same
     * blip does not retry in lockstep and re-stampede the server.
     * Auth rejections and other 4xx fail fast (retrying them can't
-    * succeed). */
+    * succeed). `onRetry` sees each transient failure that is retried,
+    * before the backoff sleep. */
   def fetchPage(url: String, lastEventId: String, timeoutMs: Long,
                 auth: Option[String] = None, maxAttempts: Int = 3,
                 retryBackoffMs: Long = 200L,
                 cache: Option[PageCache] = None,
-                maxRetryAfterMs: Long = 60000L): Page = {
+                maxRetryAfterMs: Long = 60000L,
+                onRetry: java.io.IOException => Unit = _ => ()): Page = {
     val cached = cache.flatMap(_.get(url, lastEventId, auth))
     if (cached.isDefined) return cached.get
     var lastErr: Throwable = null
@@ -204,6 +230,7 @@ object HttpFeedClient {
         case e: java.io.IOException => // transient: connect/read/5xx/429
           lastErr = e
           if (attempt < maxAttempts) {
+            onRetry(e)
             val backoff = retryBackoffMs * (1L << (attempt - 1))
             val jittered = backoff / 2 +
               java.util.concurrent.ThreadLocalRandom.current().nextLong(backoff / 2 + 1)
@@ -244,7 +271,7 @@ object HttpFeedClient {
           s"HTTP $code from $url — the feed requires credentials " +
             "(reference README.md:321-328); pass bearerToken or basicUser/basicPass")
       if (code >= 500 || code == 429)
-        throw new TransientHttpException(s"HTTP $code from $url (transient)",
+        throw new TransientHttpException(s"HTTP $code from $url (transient)", code,
           Option(conn.getHeaderField("Retry-After")).flatMap(parseRetryAfterMs))
       if (code >= 400)
         throw new IllegalStateException(

@@ -176,8 +176,12 @@ object HttpFeedMetrics {
   val Bytes = "feedBytes"
   val CacheHits = "pageCacheHits"
   val StallMs = "readAheadStallMs"
+  val Retries5xx = "feedRetries5xx"
+  val Retries429 = "feedRetries429"
+  val RetriesIo = "feedRetriesIo"
   def supported: Array[CustomMetric] = Array(new FeedRequestsMetric, new FeedBytesMetric,
-    new PageCacheHitsMetric, new ReadAheadStallMetric)
+    new PageCacheHitsMetric, new ReadAheadStallMetric, new FeedRetries5xxMetric,
+    new FeedRetries429Metric, new FeedRetriesIoMetric)
   private[connector] def task(metric: String, v: Long): CustomTaskMetric =
     new CustomTaskMetric {
       override def name(): String = metric
@@ -196,6 +200,12 @@ class PageCacheHitsMetric extends HttpFeedSumMetric(HttpFeedMetrics.CacheHits,
   "feed pages served by the page cache")
 class ReadAheadStallMetric extends HttpFeedSumMetric(HttpFeedMetrics.StallMs,
   "ms the readers waited for read-ahead chunks")
+class FeedRetries5xxMetric extends HttpFeedSumMetric(HttpFeedMetrics.Retries5xx,
+  "feed requests retried after an HTTP 5xx")
+class FeedRetries429Metric extends HttpFeedSumMetric(HttpFeedMetrics.Retries429,
+  "feed requests retried after an HTTP 429")
+class FeedRetriesIoMetric extends HttpFeedSumMetric(HttpFeedMetrics.RetriesIo,
+  "feed requests retried after a connection or read error")
 
 /** Offset = the lastEventId cursor, JSON-serialized into the WAL. */
 case class HttpFeedOffset(lastEventId: String) extends Offset {
@@ -578,6 +588,9 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
   private val requests = new AtomicLong()
   private val bytes = new AtomicLong()
   private val cacheHits = new AtomicLong()
+  private val retries5xx = new AtomicLong()
+  private val retries429 = new AtomicLong()
+  private val retriesIo = new AtomicLong()
   private var stallNs = 0L
 
   // the stretch the reader pages itself: (cursor, stretchEnd]; None once
@@ -599,13 +612,17 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
     * immutable full pages (task retries, restart backfills) without a
     * network round-trip — only the bodies of pages the server marked
     * `Cache-Control: public, max-age=…` are ever stored (reference
-    * README.md:330-332). */
+    * README.md:330-332). Each retried request counts under its cause. */
   private def fetch(at: String): HttpFeedClient.Page =
     HttpFeedClient.sharedCache.get(p.url, at, p.auth) match {
       case Some(cached) => cacheHits.incrementAndGet(); cached
       case None =>
         requests.incrementAndGet()
-        val fetched = HttpFeedClient.fetchPage(p.url, at, 0, p.auth)
+        val fetched = HttpFeedClient.fetchPage(p.url, at, 0, p.auth, onRetry = {
+          case t: HttpFeedClient.TransientHttpException if t.code == 429 => retries429.incrementAndGet()
+          case _: HttpFeedClient.TransientHttpException => retries5xx.incrementAndGet()
+          case _ => retriesIo.incrementAndGet()
+        })
         bytes.addAndGet(fetched.bytes)
         HttpFeedClient.sharedCache.put(p.url, at, p.auth, fetched)
         fetched
@@ -707,7 +724,10 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
     HttpFeedMetrics.task(HttpFeedMetrics.Requests, requests.get()),
     HttpFeedMetrics.task(HttpFeedMetrics.Bytes, bytes.get()),
     HttpFeedMetrics.task(HttpFeedMetrics.CacheHits, cacheHits.get()),
-    HttpFeedMetrics.task(HttpFeedMetrics.StallMs, stallNs / 1000000L))
+    HttpFeedMetrics.task(HttpFeedMetrics.StallMs, stallNs / 1000000L),
+    HttpFeedMetrics.task(HttpFeedMetrics.Retries5xx, retries5xx.get()),
+    HttpFeedMetrics.task(HttpFeedMetrics.Retries429, retries429.get()),
+    HttpFeedMetrics.task(HttpFeedMetrics.RetriesIo, retriesIo.get()))
 
   /** Cancels the chunks still in flight: an interrupted chunk makes no
     * further request. */

@@ -15,6 +15,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * Test-only harness: the engine is the CONSUMER; serving feeds is out of
   * Spark scope (SURVEY.md §0). `append` + long-poll notify lets tests drive
   * the empty-then-data subscription sequence.
+  *
+  * Responses go out with TCP_NODELAY (see the companion object): clients
+  * reuse keep-alive connections, and without it Nagle's algorithm and the
+  * client's delayed ACK hold each request on a reused connection for
+  * about 44 ms.
   */
 class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
                      requiredAuth: Option[String] = None, port: Int = 0,
@@ -40,7 +45,12 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
                      /** Misbehavior injection: answer every request with
                        * the feed's first page, whatever its `lastEventId`
                        * — what a proxy that strips query strings does. */
-                     ignoreCursor: Boolean = false) {
+                     ignoreCursor: Boolean = false,
+                     /** Called with each request's ordinal (1-based)
+                       * before the fault injections below apply, so a
+                       * test can inject faults at chosen points of a
+                       * read. */
+                     onRequest: Int => Unit = _ => ()) {
 
   // (id, envelopeJson), kept sorted by id (ids are the total order key)
   private var events: Vector[(String, String)] = initial.sortBy(_._1).toVector
@@ -63,7 +73,7 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
     var attempt = 0
     while (s == null) {
       attempt += 1
-      try s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+      try s = TestFeedServer.create(new InetSocketAddress("127.0.0.1", port))
       catch {
         case _: java.net.BindException if port != 0 && attempt < 50 =>
           Thread.sleep(20)
@@ -153,7 +163,7 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
     }
 
   private def handle(ex: HttpExchange): Unit = {
-    requests.incrementAndGet()
+    onRequest(requests.incrementAndGet())
     clientPorts.add(ex.getRemoteAddress.getPort)
     if (failCount.getAndUpdate(c => math.max(0, c - 1)) > 0) {
       failRetryAfterSec.foreach(s =>
@@ -215,4 +225,12 @@ class TestFeedServer(initial: Seq[(String, String)], pageSize: Int = 100,
     val os = ex.getResponseBody
     os.write(body); os.close()
   }
+}
+
+object TestFeedServer {
+  // The JDK server reads this once per JVM, when its first server starts;
+  // this initializer runs before any TestFeedServer binds.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def create(addr: InetSocketAddress): HttpServer = HttpServer.create(addr, 0)
 }

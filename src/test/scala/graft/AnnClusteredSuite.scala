@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.api.QueryHygiene
 
 /** ANN recall gates on a CLUSTERED embedding fixture.
   *
@@ -36,7 +37,7 @@ class AnnClusteredSuite extends AnyFunSuite {
         centers(c)(j) + (rnd.nextGaussian() * 0.05).toFloat)
       (id.toLong, v.toSeq, c)
     }
-    val out = java.nio.file.Files.createTempDirectory("graft_mog").toString
+    val out = QueryHygiene.scratchDir("graft_mog", inMemory = false)
     rows.toDF("vec_id", "embedding", "label")
       .select(col("vec_id"), col("embedding").cast("array<float>"), col("label").cast("int"))
       .coalesce(1).write.mode("overwrite")

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.api.QueryHygiene
 
 import scala.util.Random
 
@@ -37,7 +37,7 @@ class DedupExactnessSuite extends AnyFunSuite {
       (id + 1, mutated.mkString(" "), l)
     }
     val docs = base ++ mutants
-    val dir = Files.createTempDirectory("graft_dedup_exact").toString
+    val dir = QueryHygiene.scratchDir("graft_dedup_exact", inMemory = false)
     docs.toDF("doc_id", "text", "lang")
       .selectExpr("doc_id", "text", "lang", "'srcX' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
-import graft.api.Feeds
+import graft.api.{Feeds, QueryHygiene}
 import graft.catalyst.GraftExtensions
 import graft.connector.{HttpFeedClient, HttpFeedInputPartition, HttpFeedMetrics,
   HttpFeedPartitionReader, TestFeedServer}
@@ -393,7 +393,7 @@ class HttpSourceSuite extends AnyFunSuite {
   test("checkpoint persists the cursor: restart resumes exactly after it (README.md:111)") {
     val first = (1L to 30L).map(i => envelopeJson(i, s"s$i"))
     val server = new TestFeedServer(first, pageSize = 10)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_http_ckpt").toString
+    val ckpt = QueryHygiene.scratchDir("graft_http_ckpt", inMemory = false)
     try {
       // memory sink cannot recover from a checkpoint; foreachBatch can
       def runQuery(sink: java.util.List[String]) = {
@@ -438,7 +438,7 @@ class HttpSourceSuite extends AnyFunSuite {
   test("chaos: 5xx bursts, mid-page drops, server restart — no loss, no duplication (README.md:111-114)") {
     val all = (1L to 80L).map(i => envelopeJson(i, s"s${i % 7}"))
     var server = new TestFeedServer(all.take(50), pageSize = 10)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_http_chaos").toString
+    val ckpt = QueryHygiene.scratchDir("graft_http_chaos", inMemory = false)
     val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     def runQuery(): Unit = {
       val collect: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
@@ -480,7 +480,7 @@ class HttpSourceSuite extends AnyFunSuite {
   test("compaction chaos: the persisted cursor's event is deleted mid-stream — resume sends only newer events (README.md:153-154)") {
     val first = (1L to 40L).map(i => envelopeJson(i, s"s${i % 5}"))
     val server = new TestFeedServer(first, pageSize = 10)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_http_compact").toString
+    val ckpt = QueryHygiene.scratchDir("graft_http_compact", inMemory = false)
     try {
       def runQuery(sink: java.util.List[String]) = {
         val collect: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
@@ -766,6 +766,27 @@ class HttpSourceSuite extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("a serial 10-page keep-alive walk answers each request in under 20 ms (TCP_NODELAY)") {
+    // without nodelay, Nagle's algorithm and the client's delayed ACK hold
+    // each request on a reused connection for about 44 ms
+    val events = (1L to 1000L).map(i => envelopeJson(i, "s"))
+    val server = new TestFeedServer(events, pageSize = 100)
+    try {
+      def walk(): IndexedSeq[Double] = {
+        var cursor = ""
+        (1 to 10).map { _ =>
+          val t0 = System.nanoTime()
+          cursor = HttpFeedClient.fetchPage(server.url, cursor, 0L).lastId.get
+          (System.nanoTime() - t0) / 1e6
+        }
+      }
+      walk()
+      val ms = walk().sorted
+      val median = (ms(4) + ms(5)) / 2
+      assert(median < 20, f"median request $median%.1f ms: ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally server.stop()
+  }
+
   test("the page cache holds at most PageCache.MaxBytes of bodies") {
     // one 2 MB envelope per full, cacheable page
     val big = "x" * (2 << 20)
@@ -790,6 +811,41 @@ class HttpSourceSuite extends AnyFunSuite {
       cache.clear()
       assert(cache.size === 0 && cache.bodyBytes === 0L)
     } finally server.stop()
+  }
+
+  test("a flood of cacheable pages past PageCache.MaxBytes leaves the plan handoff and small replays cached") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val cache = HttpFeedClient.sharedCache
+    // 30 full pages of one ~700 KB envelope each: about 21 MB of bodies
+    val pad = "x" * (700 << 10)
+    val flood = (1L to 30L).map { i =>
+      val id = SeqId.encodeFn(i, "u")
+      (id, s"""{"specversion":"1.0","id":"$id","data":"$pad"}""")
+    }
+    val floodServer = new TestFeedServer(flood, pageSize = 1)
+    val events = (1L to 50L).map(i => envelopeJson(i, s"s${i % 3}"))
+    val server = new TestFeedServer(events, pageSize = 10)
+    try {
+      val (floodRows, floodM) = readPartition(HttpFeedInputPartition(floodServer.url, "", flood.last._1))
+      assert(floodRows.length === 30)
+      assert(floodM(HttpFeedMetrics.Bytes) > HttpFeedClient.PageCache.MaxBytes, floodM)
+      assert(cache.bodyBytes <= HttpFeedClient.PageCache.MaxBytes)
+      // a new bounded read: the reader's first page is the plan's, from the cache
+      val df = spark.read.format("http-feed").option("url", server.url).load()
+      assert(df.collect().length === 50)
+      val scan = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b
+      }.head
+      assert(scan.metrics(HttpFeedMetrics.CacheHits).value >= 1)
+      // a warm re-read of a small range: all five full pages from the cache
+      val part = HttpFeedInputPartition(server.url + "/replay", "", events.last._1)
+      val (coldRows, cold) = readPartition(part)
+      val (warmRows, warm) = readPartition(part)
+      assert(cold(HttpFeedMetrics.Requests) === 5, cold)
+      assert(warmRows === coldRows)
+      assert(warm(HttpFeedMetrics.CacheHits) === 5 && warm(HttpFeedMetrics.Requests) === 0, warm)
+      assert(cache.bodyBytes <= HttpFeedClient.PageCache.MaxBytes)
+    } finally Seq(floodServer, server).foreach(_.stop())
   }
 
   test("non-JSON datacontenttype passes through from the wire; missing takes the spec default (README.md:315)") {
@@ -894,10 +950,10 @@ class HttpSourceSuite extends AnyFunSuite {
         docEnvelope(n1 + phase2rows.length + i + 1L, id, "", "", "DELETE") }
 
     val server = new TestFeedServer(phase1, pageSize = 64)
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft_e2e_corpus").toString
-    val pairsDir = java.nio.file.Files.createTempDirectory("graft_e2e_pairs").toString
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_e2e_model").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_e2e_ckpt").toString
+    val corpusDir = QueryHygiene.scratchDir("graft_e2e_corpus", inMemory = false)
+    val pairsDir = QueryHygiene.scratchDir("graft_e2e_pairs", inMemory = false)
+    val modelDir = QueryHygiene.scratchDir("graft_e2e_model", inMemory = false)
+    val ckpt = QueryHygiene.scratchDir("graft_e2e_ckpt", inMemory = false)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val oldProvider = spark.conf.get(provKey,
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
@@ -1009,12 +1065,7 @@ class HttpSourceSuite extends AnyFunSuite {
       spark.conf.set(provKey, oldProvider)
       spark.conf.set("spark.sql.shuffle.partitions", oldShuffle)
       server.stop()
-      import scala.jdk.CollectionConverters._
-      Seq(corpusDir, pairsDir, modelDir, ckpt).foreach { d =>
-        java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator()
-          .asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      Seq(corpusDir, pairsDir, modelDir, ckpt).foreach(QueryHygiene.deleteScratch)
     }
   }
 
@@ -1506,6 +1557,51 @@ class HttpSourceSuite extends AnyFunSuite {
       assert(warm(HttpFeedMetrics.CacheHits) > 0, warm)
       assert(warm(HttpFeedMetrics.Bytes) < cold(HttpFeedMetrics.Bytes) / 100, (cold, warm))
     } finally server.stop()
+  }
+
+  test("scan metrics count retried requests by cause: 5xx, 429 and I/O, read-ahead chunks included") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val causes = Seq(HttpFeedMetrics.Retries5xx, HttpFeedMetrics.Retries429, HttpFeedMetrics.RetriesIo)
+    // opaque ids: one serial partition, so the faults land on the read's
+    // requests in a fixed order, each on a different page
+    val events = (1L to 300L).map(uuidEnvelope)
+    @volatile var armedAt = Int.MaxValue
+    lazy val server: TestFeedServer = new TestFeedServer(events, pageSize = 10,
+      onRequest = n => n - armedAt match {
+        case 2 => server.failNext(2, code = 503)
+        case 8 => server.failNext(1, code = 429)
+        case 14 => server.abortNext(1)
+        case _ => ()
+      })
+    val seqEvents = (1L to 3000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val seqServer = new TestFeedServer(seqEvents, pageSize = 10)
+    try {
+      def ids(df: DataFrame): Seq[String] = df.collect().map(_.getAs[String]("id")).toSeq.sorted
+      val df = spark.read.format("http-feed").option("url", server.url).load()
+      val scan = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b
+      }.head
+      assert(scan.inputPartitions.length === 1) // planned now: the faults land on the read
+      armedAt = server.requestCount
+      val faulted = ids(df)
+      assert(causes.map(scan.metrics(_).value) === Seq(2L, 1L, 1L))
+      val clean = ids(spark.read.format("http-feed").option("url", server.url + "/clean").load())
+      assert(faulted === clean)
+      assert(clean === events.map(_._1).sorted)
+
+      // read-ahead chunks count through the same reader
+      val r = new HttpFeedPartitionReader(HttpFeedInputPartition(seqServer.url, "",
+        seqEvents.last._1, seqWidth = Some(SeqId.Width)))
+      try {
+        assert(r.next())
+        seqServer.failNext(2, code = 503) // the reader handed the range to its chunks
+        var rows = 1
+        while (r.next()) rows += 1
+        assert(rows === 3000)
+        val m = r.currentMetricsValues().map(v => v.name -> v.value).toMap
+        assert(causes.map(m) === Seq(2L, 0L, 0L))
+      } finally r.close()
+    } finally Seq(server, seqServer).foreach(_.stop())
   }
 
   test("a server that ignores the cursor fails a bounded read and drainHead within 2 requests") {

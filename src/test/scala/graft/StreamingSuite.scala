@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.api.QueryHygiene
 import graft.model.CloudEvent
 import graft.streaming.StreamOps
 
@@ -322,7 +323,7 @@ class StreamingSuite extends AnyFunSuite {
       .transformWithState(new TtlCountProcessor(ttlMs = 100),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         OutputMode.Update())
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_ckpt").toString
+    val ckpt = QueryHygiene.scratchDir("graft_ttl_ckpt", inMemory = false)
     val old = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -352,12 +353,7 @@ class StreamingSuite extends AnyFunSuite {
     } finally {
       q.stop()
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt)).iterator().asScala
-          .toSeq.reverseIterator.foreach(p =>
-            try java.nio.file.Files.deleteIfExists(p) catch { case _: Throwable => () })
-      } catch { case _: Throwable => () }
+      QueryHygiene.deleteScratch(ckpt)
     }
   }
 
@@ -401,8 +397,7 @@ class StreamingSuite extends AnyFunSuite {
     val (b1, b2) = rows.splitAt(rows.length / 2)
     val ms = MemoryStream[StreamOps.Ev](spark)
     val counts = ms.toDF().groupBy("event_type").agg(count(lit(1)).as("n"))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_restart_ckpt").toString
+    val ckpt = QueryHygiene.scratchDir("graft_restart_ckpt", inMemory = false)
     // foreachBatch is the RECOVERABLE sink (the memory sink refuses
     // checkpoint recovery by design)
     def start(buf: java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]) =
@@ -434,9 +429,7 @@ class StreamingSuite extends AnyFunSuite {
       assert(n == full(tpe), s"$tpe resumed count lost checkpointed state")
     }
     // scratch cleanup (memory sink holds the rows; the checkpoint is done)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt)).iterator().asScala
-      .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    QueryHygiene.deleteScratch(ckpt)
   }
 
   // ── Numeric state-size bounds ───────────────────────────────────────
