@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.streaming.Trigger
 import graft.api.QueryHygiene
-import graft.connector.{HttpFeedClient, TestFeedServer}
+import graft.connector.{HttpFeedClient, HttpFeedMetrics, TestFeedServer}
 import graft.udf.SeqId
 
 /** Ingest-ceiling measurement for the DSv2 HTTP feed source against the
@@ -15,7 +17,8 @@ import graft.udf.SeqId
   *   sbt "runMain graft.ConnectorBench"
   * and record the table in BASELINE.md. Measures:
   *   1. bounded replay (batch) at 3 page sizes, 1 vs 8 partitions, with
-  *      the server requests each replay cost (plan and read);
+  *      the server requests each replay cost (plan and read) and its
+  *      scan's `feedFetchMs` / `feedParseMs` (wire vs parse);
   *   2. Trigger.AvailableNow streaming replay;
   *   3. long-poll delivery latency under the 5000 ms timeout contract
   *      (reference README.md:126): idle-feed wait ≈ data-arrival delay,
@@ -62,16 +65,26 @@ object ConnectorBench {
     for (pageSize <- Seq(100, 1000, 10000); parts <- Seq(1, 8)) {
       val server = new TestFeedServer(events, pageSize = pageSize)
       try {
-        val (cnt, sec) = timed {
-          spark.read.format("http-feed").option("url", server.url)
-            .option("backfillPartitions", parts.toString).load().count()
-        }
+        // the plan `count()` runs, kept so its scan metrics can be read
+        val counted = spark.read.format("http-feed").option("url", server.url)
+          .option("backfillPartitions", parts.toString).load().groupBy().count()
+        val (cnt, sec) = timed(counted.collect().head.getLong(0))
         require(cnt == nEvents, s"replay returned $cnt of $nEvents rows")
+        val scan = new AdaptiveSparkPlanHelper {}.collect(counted.queryExecution.executedPlan) {
+          case b: BatchScanExec => b
+        }.head
+        val Seq(fetchMs, parseMs) =
+          Seq(HttpFeedMetrics.FetchMs, HttpFeedMetrics.ParseMs).map(scan.metrics(_).value)
         results(s"batch_p${pageSize}_n$parts") = sec
         results(s"batch_p${pageSize}_n${parts}_requests") = server.requestCount.toDouble
+        results(s"batch_p${pageSize}_n${parts}_fetch_ms") = fetchMs.toDouble
+        results(s"batch_p${pageSize}_n${parts}_parse_ms") = parseMs.toDouble
         println(f"batch pageSize=$pageSize%5d partitions=$parts%d: $sec%7.2f s  " +
           f"${nEvents / sec}%9.0f events/s  ${nEvents.toDouble / pageSize / sec}%7.1f pages/s  " +
           f"(${server.requestCount} requests)")
+        // summed over the readers and their read-ahead chunks
+        println(f"  per layer: fetch $fetchMs%d ms (request to last body byte), " +
+          f"parse $parseMs%d ms (pages into rows)")
       } finally server.stop()
     }
 

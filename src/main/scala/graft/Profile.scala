@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.storage.GraftBroadcasts
 
 /** Developer harness (not part of the library surface): time individual
   * queries or dump their physical plans outside the full Bench run, on
@@ -92,6 +93,8 @@ object Profile {
         //           body and its sweep after it
         // jobs/stages = exec1/exec2's Spark jobs and submitted (not
         // skipped) stages, counted by one listener between bus drains.
+        // bcast = the broadcasts the run created (task binaries
+        //         included) that its sweep released.
         def ms(ns: Long): String = f"${ns / 1e6}%8.1f"
         def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
         val dur = new Array[Long](4) // build, plan, exec1, exec2
@@ -106,6 +109,9 @@ object Profile {
           edges(i) = counter.snapshot
           drainNs += System.nanoTime() - a
         }
+        val sc = spark.sparkContext
+        val bc0 = GraftBroadcasts.held(sc)
+        var created = Set.empty[Long]
         val t0 = System.nanoTime()
         graft.api.QueryHygiene.run(spark, n) {
           val df = timed(0)(SparkEntry.queries(n)(spark, d))
@@ -113,14 +119,18 @@ object Profile {
           mark(0)
           timed(2)(consume(df)); mark(1)
           timed(3)(consume(df)); mark(2)
+          val a = System.nanoTime()
+          created = GraftBroadcasts.held(sc) -- bc0
+          drainNs += System.nanoTime() - a
         }
         val total = System.nanoTime() - t0 - drainNs
+        val released = (created -- GraftBroadcasts.held(sc)).size
         def delta(f: ((Int, Int)) => Int): String =
           s"${f(edges(1)) - f(edges(0))}/${f(edges(2)) - f(edges(1))}"
         println(f"PHASES $n%-28s build=${ms(dur(0))} plan=${ms(dur(1))} " +
           f"exec1=${ms(dur(2))} exec2=${ms(dur(3))} " +
           f"hyg=${ms(total - dur.sum)} total=${ms(total)} ms " +
-          s"jobs=${delta(_._1)} stages=${delta(_._2)}")
+          s"jobs=${delta(_._1)} stages=${delta(_._2)} bcast=$released")
       } else if (census) {
         val c = graft.api.QueryHygiene.run(spark, n) {
           sortAggregates(SparkEntry.queries(n)(spark, d))

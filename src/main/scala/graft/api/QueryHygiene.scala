@@ -3,6 +3,7 @@ package graft.api
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import org.apache.spark.storage.GraftBroadcasts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one owner of state that outlives a query. It owns three things:
@@ -16,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    still live and driving GC churn. A long-lived service would scope
   *    these to a request the same way; local mode just has no executor
   *    boundary to do it for us. The sweep unpersists every RDD that
-  *    became persistent during the query except the pinned ones.
+  *    became persistent during the query except the pinned ones, and
+  *    releases every broadcast created during it (below).
   *  - '''The shared-relation memo''' ([[memoized]], [[sharedRelation]]):
   *    values built once per (session, name, dataset dir) and reused by
   *    every later query — the graph adjacency and common-neighbor
@@ -30,6 +32,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - '''Scratch directories''' ([[scratchDir]]): temp space for fixture
   *    tables, checkpoints and round-trip writes, removed when the JVM
   *    exits.
+  *
+  * '''Broadcasts.''' Each broadcast hash relation holds at least one
+  * Tungsten page, `spark.buffer.pageSize`, which Spark sizes from the
+  * heap and the cores: 16 MiB on a 3 GiB heap with 4 cores, where a
+  * 1000-row build side measured 16.1 MB of driver storage memory. Task
+  * binaries are broadcasts too, so one query creates tens of them.
+  * Spark's `ContextCleaner` frees a broadcast only once a GC finds its
+  * handle unreachable and the cleaner thread gets to it, so without the
+  * sweep a heap reading taken right after GC still holds the previous
+  * queries' relations (up to 50 MB after one key of the query mix). The
+  * sweep drops the driver's copy of each broadcast created during the
+  * query before [[run]] returns, and tells the block manager master and
+  * the executors without waiting for them.
+  *
+  * The contract, the same for the broadcasts as for the swept RDDs: a
+  * DataFrame built inside [[run]] is not re-executed after [[run]]
+  * returns, and one query runs at a time per session (a broadcast another
+  * thread creates meanwhile is released with the query's). Shared
+  * relations are eager checkpoints and read none of their build's
+  * broadcasts. In local mode a re-run of such a DataFrame still worked
+  * after the sweep, because its plan keeps the broadcast value
+  * reachable; nothing here relies on that.
   *
   * Everything here lives for the session. The memo holds a strong
   * reference to its session: fine for this library's one-session-per-JVM
@@ -121,14 +145,15 @@ object QueryHygiene {
           .foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
     } catch { case _: Throwable => () }
 
-  /** Run `body` for query `name`, then sweep the blocks it pinned and
-    * the temp views it registered (streaming fixtures leave memory-sink
-    * tables holding up to ~100k driver-side rows each; the relational
-    * queries' table views are re-registered by every query that needs
-    * them, so dropping is always safe). */
+  /** Run `body` for query `name`, then sweep the blocks it pinned, the
+    * broadcasts it created and the temp views it registered (streaming
+    * fixtures leave memory-sink tables holding up to ~100k driver-side
+    * rows each; the relational queries' table views are re-registered by
+    * every query that needs them, so dropping is always safe). */
   def run[T](spark: SparkSession, name: String)(body: => T): T = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val broadcastsBefore = GraftBroadcasts.held(sc)
     // SessionCatalog.getTempViewNames is a synchronized driver-side map
     // read; the public spark.catalog.listTables() builds and collects a
     // whole Dataset per call — 50-120 ms, which a ~400-query sequential
@@ -142,6 +167,7 @@ object QueryHygiene {
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!before(id) && !pinned.contains(id)) rdd.unpersist(blocking = false)
       }
+      GraftBroadcasts.release(sc, GraftBroadcasts.held(sc) -- broadcastsBefore)
       spark.sessionState.catalog.getTempViewNames()
         .filterNot(viewsBefore)
         .foreach(v => spark.catalog.dropTempView(v))

@@ -209,21 +209,29 @@ object HttpFeedClient {
     * blip does not retry in lockstep and re-stampede the server.
     * Auth rejections and other 4xx fail fast (retrying them can't
     * succeed). `onRetry` sees each transient failure that is retried,
-    * before the backoff sleep. */
+    * before the backoff sleep. `onTimes` sees the page returned: the
+    * nanoseconds from its request to its last body byte (the attempt
+    * that succeeded; 0 for a cache hit) and those [[parsePage]] took. */
   def fetchPage(url: String, lastEventId: String, timeoutMs: Long,
                 auth: Option[String] = None, maxAttempts: Int = 3,
                 retryBackoffMs: Long = 200L,
                 cache: Option[PageCache] = None,
                 maxRetryAfterMs: Long = 60000L,
-                onRetry: java.io.IOException => Unit = _ => ()): Page = {
+                onRetry: java.io.IOException => Unit = _ => (),
+                onTimes: (Long, Long) => Unit = (_, _) => ()): Page = {
+    val t0 = System.nanoTime()
     val cached = cache.flatMap(_.get(url, lastEventId, auth))
-    if (cached.isDefined) return cached.get
+    if (cached.isDefined) { onTimes(0L, System.nanoTime() - t0); return cached.get }
     var lastErr: Throwable = null
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       try {
-        val page = fetchOnce(url, lastEventId, timeoutMs, auth)
+        val t1 = System.nanoTime()
+        val (body, cacheControl) = fetchOnce(url, lastEventId, timeoutMs, auth)
+        val t2 = System.nanoTime()
+        val page = parsePage(url, lastEventId, body, cacheControl)
+        onTimes(t2 - t1, System.nanoTime() - t2)
         cache.foreach(_.put(url, lastEventId, auth, page))
         return page
       } catch {
@@ -247,8 +255,9 @@ object HttpFeedClient {
       s"feed request failed after $maxAttempts attempts: $url", lastErr)
   }
 
+  /** One request: the response body and its `Cache-Control` value. */
   private def fetchOnce(url: String, lastEventId: String, timeoutMs: Long,
-                        auth: Option[String]): Page = {
+                        auth: Option[String]): (Array[Byte], Option[String]) = {
     val sep = if (url.contains("?")) "&" else "?"
     val params = new StringBuilder
     if (lastEventId.nonEmpty)
@@ -282,7 +291,7 @@ object HttpFeedClient {
       // keep-alive pool; every other outcome drops it
       val body = try in.readAllBytes() finally in.close()
       read = true
-      parsePage(url, lastEventId, body, cacheControl)
+      (body, cacheControl)
     } finally if (!read) conn.disconnect()
   }
 

@@ -179,9 +179,12 @@ object HttpFeedMetrics {
   val Retries5xx = "feedRetries5xx"
   val Retries429 = "feedRetries429"
   val RetriesIo = "feedRetriesIo"
+  val FetchMs = "feedFetchMs"
+  val ParseMs = "feedParseMs"
   def supported: Array[CustomMetric] = Array(new FeedRequestsMetric, new FeedBytesMetric,
     new PageCacheHitsMetric, new ReadAheadStallMetric, new FeedRetries5xxMetric,
-    new FeedRetries429Metric, new FeedRetriesIoMetric)
+    new FeedRetries429Metric, new FeedRetriesIoMetric, new FeedFetchMsMetric,
+    new FeedParseMsMetric)
   private[connector] def task(metric: String, v: Long): CustomTaskMetric =
     new CustomTaskMetric {
       override def name(): String = metric
@@ -206,6 +209,10 @@ class FeedRetries429Metric extends HttpFeedSumMetric(HttpFeedMetrics.Retries429,
   "feed requests retried after an HTTP 429")
 class FeedRetriesIoMetric extends HttpFeedSumMetric(HttpFeedMetrics.RetriesIo,
   "feed requests retried after a connection or read error")
+class FeedFetchMsMetric extends HttpFeedSumMetric(HttpFeedMetrics.FetchMs,
+  "ms from each feed request to its last body byte")
+class FeedParseMsMetric extends HttpFeedSumMetric(HttpFeedMetrics.ParseMs,
+  "ms parsing feed pages into rows, page-cache hits included")
 
 /** Offset = the lastEventId cursor, JSON-serialized into the WAL. */
 case class HttpFeedOffset(lastEventId: String) extends Offset {
@@ -591,6 +598,8 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
   private val retries5xx = new AtomicLong()
   private val retries429 = new AtomicLong()
   private val retriesIo = new AtomicLong()
+  private val fetchNs = new AtomicLong()
+  private val parseNs = new AtomicLong()
   private var stallNs = 0L
 
   // the stretch the reader pages itself: (cursor, stretchEnd]; None once
@@ -612,21 +621,26 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
     * immutable full pages (task retries, restart backfills) without a
     * network round-trip — only the bodies of pages the server marked
     * `Cache-Control: public, max-age=…` are ever stored (reference
-    * README.md:330-332). Each retried request counts under its cause. */
-  private def fetch(at: String): HttpFeedClient.Page =
+    * README.md:330-332). Each retried request counts under its cause; a
+    * hit's re-parse counts as parse time. */
+  private def fetch(at: String): HttpFeedClient.Page = {
+    val t0 = System.nanoTime()
     HttpFeedClient.sharedCache.get(p.url, at, p.auth) match {
-      case Some(cached) => cacheHits.incrementAndGet(); cached
+      case Some(cached) =>
+        parseNs.addAndGet(System.nanoTime() - t0)
+        cacheHits.incrementAndGet(); cached
       case None =>
         requests.incrementAndGet()
         val fetched = HttpFeedClient.fetchPage(p.url, at, 0, p.auth, onRetry = {
           case t: HttpFeedClient.TransientHttpException if t.code == 429 => retries429.incrementAndGet()
           case _: HttpFeedClient.TransientHttpException => retries5xx.incrementAndGet()
           case _ => retriesIo.incrementAndGet()
-        })
+        }, onTimes = (wire, parse) => { fetchNs.addAndGet(wire); parseNs.addAndGet(parse) })
         bytes.addAndGet(fetched.bytes)
         HttpFeedClient.sharedCache.put(p.url, at, p.auth, fetched)
         fetched
     }
+  }
 
   /** The cursor loop over (from, to], at most `maxPages` pages — the serial
     * read and every read-ahead chunk. Keeps each page's rows (built by
@@ -727,7 +741,9 @@ class HttpFeedPartitionReader(p: HttpFeedInputPartition)
     HttpFeedMetrics.task(HttpFeedMetrics.StallMs, stallNs / 1000000L),
     HttpFeedMetrics.task(HttpFeedMetrics.Retries5xx, retries5xx.get()),
     HttpFeedMetrics.task(HttpFeedMetrics.Retries429, retries429.get()),
-    HttpFeedMetrics.task(HttpFeedMetrics.RetriesIo, retriesIo.get()))
+    HttpFeedMetrics.task(HttpFeedMetrics.RetriesIo, retriesIo.get()),
+    HttpFeedMetrics.task(HttpFeedMetrics.FetchMs, fetchNs.get() / 1000000L),
+    HttpFeedMetrics.task(HttpFeedMetrics.ParseMs, parseNs.get() / 1000000L))
 
   /** Cancels the chunks still in flight: an interrupted chunk makes no
     * further request. */

@@ -1559,6 +1559,29 @@ class HttpSourceSuite extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("scan metrics split wire from parse: a bounded read reports both, a cache-hit replay parse only") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val events = (1L to 6000L).map(i => envelopeJson(i, s"s${i % 13}"))
+    val server = new TestFeedServer(events, pageSize = 20) // 300 full pages
+    try {
+      val df = spark.read.format("http-feed").option("url", server.url).load()
+      assert(df.collect().length === 6000)
+      val scan = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b
+      }.head
+      val read = Seq(HttpFeedMetrics.FetchMs, HttpFeedMetrics.ParseMs).map(scan.metrics(_).value)
+      assert(read.forall(_ > 0), read)
+      // every page of a range that ends at the last event is full, so
+      // cacheable: the second read is all page-cache hits
+      val part = HttpFeedInputPartition(server.url + "/replay", "", events.last._1)
+      readPartition(part)
+      val (rows, warm) = readPartition(part)
+      assert(rows.length === 6000)
+      assert(warm(HttpFeedMetrics.Requests) === 0 && warm(HttpFeedMetrics.CacheHits) === 300, warm)
+      assert(warm(HttpFeedMetrics.FetchMs) === 0 && warm(HttpFeedMetrics.ParseMs) > 0, warm)
+    } finally server.stop()
+  }
+
   test("scan metrics count retried requests by cause: 5xx, 429 and I/O, read-ahead chunks included") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val causes = Seq(HttpFeedMetrics.Retries5xx, HttpFeedMetrics.Retries429, HttpFeedMetrics.RetriesIo)
